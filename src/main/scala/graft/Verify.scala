@@ -108,5 +108,14 @@ object Verify {
       }
     }
     spark.stop()
+    // every artifact above is on disk; an incomplete dump must still fail
+    // the run, not pass as a short result set behind a zero exit
+    val short = only.isEmpty && digest.size < SparkEntry.queries.size
+    if (failed.nonEmpty || short) {
+      System.err.println(s"[verify] incomplete dump: ${digest.size} " +
+        s"results written, ${failed.size} failed, " +
+        s"${SparkEntry.queries.size} queries defined")
+      sys.exit(1)
+    }
   }
 }

@@ -33,12 +33,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The eval result is the SERIALIZED sketch (binary) — persistable as a
   * standing artifact and mergeable across ingests ([[FreqItems.decode]] /
-  * `ItemsSketch.merge`), the same bytes-level incremental contract as the
-  * HLL distinct sketches.
+  * [[FreqItems.mergeBytes]]), the same bytes-level incremental contract
+  * as the HLL distinct sketches.
   */
 case class FreqItemsAgg(child: Expression, maxMapSize: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ItemsSketch[String]]
+  extends TypedImperativeAggregate[FreqItems.Sketch]
   with UnaryLike[Expression] {
 
   override def checkInputDataTypes()
@@ -49,29 +49,26 @@ case class FreqItemsAgg(child: Expression, maxMapSize: Int,
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"freq_items_agg takes a STRING column, got ${child.dataType.sql}")
 
-  override def createAggregationBuffer(): ItemsSketch[String] =
-    new ItemsSketch[String](maxMapSize)
+  override def createAggregationBuffer(): FreqItems.Sketch =
+    new FreqItems.Sketch(new ItemsSketch[String](maxMapSize))
 
-  override def update(buffer: ItemsSketch[String],
-      input: InternalRow): ItemsSketch[String] = {
+  override def update(buffer: FreqItems.Sketch,
+      input: InternalRow): FreqItems.Sketch = {
     val v = child.eval(input)
-    if (v != null) buffer.update(v.asInstanceOf[UTF8String].toString)
+    if (v != null) buffer.sketch.update(v.asInstanceOf[UTF8String].toString)
     buffer
   }
 
-  override def merge(buffer: ItemsSketch[String],
-      other: ItemsSketch[String]): ItemsSketch[String] = {
-    buffer.merge(other)
-    buffer
-  }
+  override def merge(buffer: FreqItems.Sketch,
+      other: FreqItems.Sketch): FreqItems.Sketch = buffer.merge(other)
 
-  override def eval(buffer: ItemsSketch[String]): Any = serialize(buffer)
+  override def eval(buffer: FreqItems.Sketch): Any = serialize(buffer)
 
-  override def serialize(buffer: ItemsSketch[String]): Array[Byte] =
-    buffer.toByteArray(new ArrayOfStringsSerDe)
+  override def serialize(buffer: FreqItems.Sketch): Array[Byte] =
+    buffer.toBytes
 
-  override def deserialize(storage: Array[Byte]): ItemsSketch[String] =
-    ItemsSketch.getInstance(Memory.wrap(storage), new ArrayOfStringsSerDe)
+  override def deserialize(storage: Array[Byte]): FreqItems.Sketch =
+    FreqItems.Sketch.fromBytes(storage)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): FreqItemsAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -103,28 +100,75 @@ object FreqItems {
     * sketch's point estimate. */
   final case class Candidate(item: String, est: Long, lb: Long, ub: Long)
 
+  /** A DataSketches `ItemsSketch` plus the stream length and error offset
+    * the library drops. In datasketches 6.2.0 `ItemsSketch.isEmpty` means
+    * "no active items", and a purge can empty the active map (a 32-entry
+    * sketch fed 200 distinct strings holds none, with stream length 200
+    * and error 8). `toByteArray` then writes the bare empty preamble and
+    * `merge` skips the sketch, so both the length and the error offset
+    * vanish — the latter breaks the no-false-negatives bound of whatever
+    * it is merged into. `droppedN`/`droppedErr` keep what `sketch` itself
+    * no longer holds, and the serialized form leads with the true totals. */
+  final class Sketch(val sketch: ItemsSketch[String],
+      private var droppedN: Long = 0L, private var droppedErr: Long = 0L) {
+
+    def streamLength: Long = sketch.getStreamLength + droppedN
+    def maxError: Long = sketch.getMaximumError + droppedErr
+
+    def merge(other: Sketch): Sketch = {
+      if (other.sketch.isEmpty) {
+        droppedN += other.streamLength
+        droppedErr += other.maxError
+      } else {
+        sketch.merge(other.sketch)
+        droppedN += other.droppedN
+        droppedErr += other.droppedErr
+      }
+      this
+    }
+
+    /** Candidates above `threshold`, bounds widened by the dropped error. */
+    def frequentItems(threshold: Long): Seq[Candidate] =
+      sketch.getFrequentItems(threshold - droppedErr,
+          ErrorType.NO_FALSE_NEGATIVES).toSeq
+        .map(r => Candidate(r.getItem, r.getEstimate + droppedErr,
+          r.getLowerBound, r.getUpperBound + droppedErr))
+
+    /** (stream length, maximum error) as two longs, then the library's
+      * own image. */
+    def toBytes: Array[Byte] = {
+      val sk = sketch.toByteArray(Sketch.serde)
+      java.nio.ByteBuffer.allocate(Sketch.HeaderBytes + sk.length)
+        .putLong(streamLength).putLong(maxError).put(sk).array()
+    }
+  }
+
+  object Sketch {
+    private val serde = new ArrayOfStringsSerDe
+    private val HeaderBytes = 16
+
+    def fromBytes(bytes: Array[Byte]): Sketch = {
+      val buf = java.nio.ByteBuffer.wrap(bytes)
+      val (n, err) = (buf.getLong, buf.getLong)
+      val sk = ItemsSketch.getInstance(
+        Memory.wrap(bytes).region(HeaderBytes, bytes.length - HeaderBytes),
+        serde)
+      new Sketch(sk, n - sk.getStreamLength, err - sk.getMaximumError)
+    }
+  }
+
   /** Decode a serialized sketch: (stream length, maximum error, the
     * NO-FALSE-NEGATIVES candidate list above `threshold`). Every item
     * whose TRUE count ≥ max(threshold, maxError + 1) is guaranteed
     * present. */
   def decode(bytes: Array[Byte], threshold: Long): (Long, Long, Seq[Candidate]) = {
-    val sk = ItemsSketch.getInstance(Memory.wrap(bytes),
-      new ArrayOfStringsSerDe)
-    val rows = sk.getFrequentItems(threshold, ErrorType.NO_FALSE_NEGATIVES)
-      .map(r => Candidate(r.getItem, r.getEstimate, r.getLowerBound,
-        r.getUpperBound))
-      .toSeq
-    (sk.getStreamLength, sk.getMaximumError, rows)
+    val fs = Sketch.fromBytes(bytes)
+    (fs.streamLength, fs.maxError, fs.frequentItems(threshold))
   }
 
   /** Merge two serialized sketches into one (register-level, loss-free
     * within the sketch's own guarantees) — the ingest path: the standing
     * sketch advances by each increment's bytes. */
-  def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    val serde = new ArrayOfStringsSerDe
-    val sa = ItemsSketch.getInstance(Memory.wrap(a), serde)
-    val sb = ItemsSketch.getInstance(Memory.wrap(b), serde)
-    sa.merge(sb)
-    sa.toByteArray(serde)
-  }
+  def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+    Sketch.fromBytes(a).merge(Sketch.fromBytes(b)).toBytes
 }

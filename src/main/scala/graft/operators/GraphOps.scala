@@ -68,11 +68,11 @@ object GraphOps {
   }
 
   /** Rounds of lazy join+agg lineage between eager checkpoint barriers.
-    * r19: 3 → 5, measured with the shuffled-hash round (DrillGraph,
-    * 4 alternating reps under load: ckpt5 10.2-12.9 s vs ckpt10
-    * 12.5-20.3 s vs the shipped broadcast/ckpt3 13.0-31.8 s) — one
-    * barrier per 10-round run instead of three, while the lazy span
-    * stays ≤ 4 rounds of join+agg lineage. */
+    * r19: 3 → 5, measured with the shuffled-hash round
+    * (OPTIMIZATION_r19.md, 4 alternating reps under load: ckpt5
+    * 10.2-12.9 s vs ckpt10 12.5-20.3 s vs the shipped broadcast/ckpt3
+    * 13.0-31.8 s) — one barrier per 10-round run instead of three,
+    * while the lazy span stays ≤ 4 rounds of join+agg lineage. */
   private val CkptEvery = 5
 
   /** Eagerly localCheckpoint `df`, returning the checkpointed frame plus
@@ -356,7 +356,7 @@ object GraphOps {
     val nShuffle = spark.sessionState.conf.numShufflePartitions
     // CACHED, not checkpointed (r19): `Dataset.localCheckpoint` on Spark
     // 4.1 reports UnknownPartitioning to downstream plans (probed —
-    // ProbePart/PlanSpec history), so a checkpointed relation was
+    // OPTIMIZATION_r19.md, PlanSpec), so a checkpointed relation was
     // re-exchanged by the round join EVERY round; a CacheManager persist
     // keeps the plan (and its HashPartitioning on the join key) visible,
     // so the E-row side of all ten rounds stays put and only the V-row
@@ -434,7 +434,8 @@ object GraphOps {
     * (and past the threshold degraded to a per-round SORT-merge), while
     * the hash build of an already co-partitioned V-row slice is
     * executor-side, driver-free, and sort-free at every scale. Measured
-    * on the bench graph (DrillGraph, alternating reps under load):
+    * on the bench graph (OPTIMIZATION_r19.md, alternating reps under
+    * load):
     * 10.2-12.9 s vs the broadcast loop's 13.0-31.8 s, and the spread
     * tightens because no per-round driver collect rides the box load.
     * Partial decimal aggregation stays map-side; one exchange on the
@@ -518,8 +519,8 @@ object GraphOps {
       // parallelism, measured +1.1 s). Spread on the near-unique edge
       // pair — NOT on `s` alone, which would put a hub's whole edge list
       // in one partition — conditional on the scan being narrower than
-      // the session's cores (ProbeInfl: 2.08 s unspread vs 0.98 s spread
-      // vs 0.91 s for the 20-file pre-r19 layout).
+      // the session's cores (OPTIMIZATION_r19.md: 2.08 s unspread vs
+      // 0.98 s spread vs 0.91 s for the 20-file pre-r19 layout).
       val edges = graft.sources.Tables.spreadIfNarrow(
         s, coPurchase(s, d), col("s"), col("d"))
       influenceRelation(edges, "s", "d")

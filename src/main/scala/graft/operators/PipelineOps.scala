@@ -1208,13 +1208,11 @@ object PipelineOps {
     * attribute every token to (document, pass).
     *
     * Stage costs at 100 TB: curation via `precomputedFates` is a scan;
-    * the formatter subtree runs ONCE per build — its output is
-    * storage-materialized (DISK_ONLY, r20; the in-session form of
-    * "production materializes formatter output to storage") and both
-    * consumers (the slim checkpointed per-doc mass table, the stream
-    * join) read the materialized blocks; the allocation is windows over
-    * the source table; the repeat join is one broadcast; packing
-    * shuffles each training token exactly once.
+    * the formatter subtree runs twice per action (the documented
+    * [[trainReadyExamples]] shape — once into the slim checkpointed
+    * per-doc mass table, once into the stream join); the allocation is
+    * windows over the source table; the repeat join is one broadcast;
+    * packing shuffles each training token exactly once.
     *
     * LIBRARY ENTRY POINT — generic over any (id, text, source) corpus
     * and (id, text) benchmark. */
@@ -1231,15 +1229,8 @@ object PipelineOps {
     val (_, keptDocs) = curateKeptDocs(corpus, bench, id, text,
       minJaccard, contamN, precomputedPairs, precomputedFates,
       None, 0.3, 0.5)
-    // The formatter stream is consumed TWICE per action (the slim mass
-    // checkpoint below + the repeat-stream join) — storage-materialize it
-    // to LOCAL DISK so the regex formatter runs once per build (r20,
-    // guide §6: production materializes formatter output to storage; a
-    // DISK_ONLY persist is that shape in-session — token arrays never
-    // occupy executor MEMORY, which this design refuses). Blocks are
-    // freed by any getPersistentRDDs sweep (Bench/Verify, per query).
     val fmt = formattedToks(keptDocs, formatter, startRateBp, meanSpan,
-      fimRateBp).persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      fimRateBp)
     // slim (doc, source, mass, bucket) relation — checkpointed so the
     // allocation's consumption never re-runs the formatter
     val base = fmt
@@ -2009,12 +2000,11 @@ object PipelineOps {
     * with cap 4096.0 passes 4096 here).
     *
     * Shape at 100 TB: curation/mixture keep their audited shapes; the
-    * formatter subtree runs ONCE per build — its output is
-    * storage-materialized (DISK_ONLY, r20) and the core's two
-    * consumptions (the 16-byte/doc token-count checkpoint, the window
-    * join) read the materialized blocks; a production run materializes
-    * the same output to shared storage and feeds it through the same
-    * core.
+    * formatter subtree runs twice per action (once eagerly into the
+    * slim 16-byte/doc token-count checkpoint, once into the window
+    * join) — a production run materializes the formatter output to
+    * storage first and feeds it through the same core, which consumes
+    * the token relation exactly once.
     *
     * LIBRARY ENTRY POINT — generic over any (id, text) corpus/bench
     * pair. */
@@ -2033,13 +2023,8 @@ object PipelineOps {
     val (_, keptDocs) = curateKeptDocs(corpus, bench, id, text,
       minJaccard, contamN, precomputedPairs, precomputedFates,
       mixtureSource, mixtureAlpha, mixtureBudgetFraction)
-    // Same storage-materialization as [[trainReadyEpochs]] (r20): the
-    // core consumes the formatted stream twice (n_tok checkpoint + spans
-    // join); a DISK_ONLY persist runs the formatter once per build
-    // without holding token arrays in executor memory.
     val w = packExamplesCore(
-      formattedToks(keptDocs, formatter, startRateBp, meanSpan, fimRateBp)
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY),
+      formattedToks(keptDocs, formatter, startRateBp, meanSpan, fimRateBp),
       cap)
     if (sorted) w.orderBy("chunk") else w
   }

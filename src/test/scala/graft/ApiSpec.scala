@@ -1861,10 +1861,18 @@ class ApiSpec extends SparkSpec {
       .toDF("id", "body")
     val kept = Seq(2L, 4L, 7L, 8L)
     val cap = 40L
+    def diskOnly(): Set[Int] = s.sparkContext.getPersistentRDDs.collect {
+      case (id, rdd) if rdd.getStorageLevel ==
+        org.apache.spark.storage.StorageLevel.DISK_ONLY => id }.toSet
+    val diskBefore = diskOnly()
     val windows = PipelineOps
       .trainReadyExamples(corpus, bench, "id", "body", cap = cap)
       .collect().map(r => (r.getLong(0), r.getString(3), r.getString(4),
         r.getString(5), r.getBoolean(6))).sortBy(_._1).toSeq
+    // a library entry point leaves no persisted state its caller has no
+    // handle to release
+    assert(diskOnly() -- diskBefore == Set.empty,
+      "trainReadyExamples left a DISK_ONLY RDD persisted")
     // the concatenated windows ARE the md5-ordered formatted streams
     val fmt = PipelineOps
       .spanCorruptApply(corpus.filter($"id".isin(kept: _*)), "id", "body")

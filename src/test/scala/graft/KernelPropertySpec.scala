@@ -283,7 +283,8 @@ class KernelPropertySpec extends SparkSpec {
     } yield hotCounts.zipWithIndex.flatMap { case (c, i) =>
         List.fill(c)(s"h$i") } ++ (0 until nBg).map(i => s"b$i").toList
     (0 until 5).foreach { trial =>
-      val items = streamGen.sample.get
+      val items = streamGen
+        .apply(Gen.Parameters.default, org.scalacheck.rng.Seed(trial.toLong)).get
       val exact = items.groupBy(identity).view
         .mapValues(_.size.toLong).toMap
       val df = items.zipWithIndex.map(_.swap).toDF("i", "v")
@@ -312,6 +313,29 @@ class KernelPropertySpec extends SparkSpec {
             s"trial $trial $label: bound violation for ${c.item}")
         }
       }
+    }
+  }
+
+  test("FreqItemsAgg keeps stream length and error through a purge-emptied sketch") {
+    // 200 distinct strings purge a 32-entry map down to no active items;
+    // the sketch still owes its stream length and error offset to
+    // serialize and to every merge it takes part in
+    val s = spark
+    import s.implicits._
+    import graft.functions.FreqItems
+    def sketchOf(vs: Seq[String]): Array[Byte] = vs.toDF("v").coalesce(1)
+      .agg(FreqItems.freqItemsAgg(col("v"), 32)).head().getAs[Array[Byte]](0)
+    val purged = sketchOf((0 until 200).map(i => s"d$i"))
+    val (n, maxErr, cands) = FreqItems.decode(purged, threshold = 1L)
+    assert(n == 200L && maxErr > 0L && cands.isEmpty, s"len=$n maxErr=$maxErr")
+    val one = sketchOf(Seq("x"))
+    for (merged <- Seq(FreqItems.mergeBytes(one, purged),
+        FreqItems.mergeBytes(purged, one))) {
+      val (mn, mErr, mc) = FreqItems.decode(merged, threshold = 1L)
+      assert(mn == 201L, s"merged length $mn")
+      assert(mErr == maxErr, s"merged error $mErr")
+      val x = mc.find(_.item == "x").getOrElse(fail("x lost"))
+      assert(x.lb <= 1L && 1L <= x.ub)
     }
   }
 }

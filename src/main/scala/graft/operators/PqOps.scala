@@ -62,11 +62,9 @@ object PqOps {
       trainFraction: Double): Codebook = {
     require(trainFraction > 0 && trainFraction <= 1.0,
       s"trainFraction must be in (0, 1], got $trainFraction")
-    val dim = ne.select(size(col("ne"))).take(1) match {
-      case Array(r) => r.getInt(0)
-      case _ => throw new IllegalArgumentException(
-        "cannot train a PQ codebook on an empty corpus")
-    }
+    val dim = SimilarityOps.vecDim(ne).getOrElse(
+      throw new IllegalArgumentException(
+        "cannot train a PQ codebook on an empty corpus"))
     require(dim % m == 0,
       s"vector dim $dim is not divisible by m=$m subspaces")
     val dsub = dim / m
@@ -146,8 +144,8 @@ object PqOps {
     * this guards against — and `iters`/`trainFraction` are UNUSED when
     * `precomputedCodebooks` is set. */
   private def resolveCodebook(ne: DataFrame, m: Int, ksub: Int, iters: Int,
-      trainFraction: Double,
-      precomputedCodebooks: Option[DataFrame]): Codebook =
+      trainFraction: Double, precomputedCodebooks: Option[DataFrame],
+      dim: => Option[Int]): Codebook =
     precomputedCodebooks match {
       case Some(ct) =>
         val rows = ct.select(col("sub").cast("int"), col("code").cast("int"),
@@ -163,10 +161,10 @@ object PqOps {
         require(dims.length == 1,
           s"precomputed codebook has mixed centroid dimensions: " +
             dims.sorted.mkString(", "))
-        ne.select(size(col("ne"))).take(1).foreach { r =>
-          require(r.getInt(0) == m * dims.head,
+        dim.foreach { d =>
+          require(d == m * dims.head,
             s"codebook reconstruction dim ${m * dims.head} (m=$m × dsub=" +
-              s"${dims.head}) does not match vector dim ${r.getInt(0)}")
+              s"${dims.head}) does not match vector dim $d")
         }
         val grouped = rows.grouped(ksub).toArray
         Array.tabulate(m, ksub)((s, c) => grouped(s)(c)._3.toArray)
@@ -190,7 +188,7 @@ object PqOps {
       codebooks: DataFrame, m: Int = 8, ksub: Int = 16): DataFrame = {
     val ne = SimilarityOps.normalizedVecs(rows, id, vec)
     val cb = resolveCodebook(ne, m, ksub, iters = 1, trainFraction = 1.0,
-      Some(codebooks))
+      Some(codebooks), SimilarityOps.vecDim(ne))
     val bc = rows.sparkSession.sparkContext.broadcast(cb)
     ne.select((lit(1.0d) - PqKernels.pqAdcDot(
         PqKernels.pqEncode(col("ne"), bc), col("ne"), bc)).as("qerr"))
@@ -226,7 +224,7 @@ object PqOps {
       codebooks: DataFrame, m: Int = 8, ksub: Int = 16): DataFrame = {
     val ne = SimilarityOps.normalizedVecs(rows, id, vec)
     val cb = resolveCodebook(ne, m, ksub, iters = 1, trainFraction = 1.0,
-      Some(codebooks))
+      Some(codebooks), SimilarityOps.vecDim(ne))
     val bc = rows.sparkSession.sparkContext.broadcast(cb)
     ne.select(col("vec_id").as(id),
       PqKernels.pqEncode(col("ne"), bc).as("codes"))
@@ -265,10 +263,11 @@ object PqOps {
         s"nprobe=$nprobe")
     require(listShards >= 1, s"listShards must be >= 1, got $listShards")
     val ne = SimilarityOps.normalizedVecs(rows, id, vec).localCheckpoint(true)
+    lazy val dim = SimilarityOps.vecDim(ne)
     val centroids = SimilarityOps.resolveCentroids(ne, nlist, iters,
-      trainFraction, precomputedCentroids)
+      trainFraction, precomputedCentroids, dim)
     val cb = resolveCodebook(ne, m, ksub, iters, trainFraction,
-      precomputedCodebooks)
+      precomputedCodebooks, dim)
 
     val sc = rows.sparkSession.sparkContext
     // captured by the returned lazy plan — reclaimed by ContextCleaner
@@ -336,10 +335,11 @@ object PqOps {
       centroids: DataFrame, codebooks: DataFrame,
       m: Int = 8, ksub: Int = 16, nlist: Int = 16): DataFrame = {
     val ne = SimilarityOps.normalizedVecs(rows, id, vec)
+    lazy val dim = SimilarityOps.vecDim(ne)
     val cs = SimilarityOps.resolveCentroids(ne, nlist, iters = 1,
-      trainFraction = 1.0, Some(centroids))
+      trainFraction = 1.0, Some(centroids), dim)
     val cb = resolveCodebook(ne, m, ksub, iters = 1, trainFraction = 1.0,
-      Some(codebooks))
+      Some(codebooks), dim)
     val sc = rows.sparkSession.sparkContext
     val bcC = sc.broadcast(cs.map(_.toArray))
     val bcCb = sc.broadcast(cb)
@@ -396,10 +396,11 @@ object PqOps {
     val cne0 = SimilarityOps.normalizedVecs(corpus, id, vec)
     val cne =
       if (precomputedIndex.isEmpty) cne0.localCheckpoint(true) else cne0
+    lazy val dim = SimilarityOps.vecDim(cne)
     val centroids = SimilarityOps.resolveCentroids(cne, nlist, iters,
-      trainFraction, precomputedCentroids)
+      trainFraction, precomputedCentroids, dim)
     val cb = resolveCodebook(cne, m, ksub, iters, trainFraction,
-      precomputedCodebooks)
+      precomputedCodebooks, dim)
     val sc = queries.sparkSession.sparkContext
     // captured by the returned lazy plan — reclaimed by ContextCleaner
     // once the plan is garbage (same lifecycle note as ivfKnnJoin)

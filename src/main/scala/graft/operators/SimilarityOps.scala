@@ -306,7 +306,8 @@ object SimilarityOps {
     require(listShards >= 1, s"listShards must be >= 1, got $listShards")
     val cne = normalizedVecs(corpus, id, vec).localCheckpoint(true)
     val centroids =
-      resolveCentroids(cne, nlist, iters, trainFraction, precomputedCentroids)
+      resolveCentroids(cne, nlist, iters, trainFraction, precomputedCentroids,
+        vecDim(cne))
     val sc = queries.sparkSession.sparkContext
     def bcast(cs: Array[Seq[Double]]) = sc.broadcast(cs.map(_.toArray))
     val assigned0 = cne.select(col("vec_id").as("vb"), col("ne").as("eb"),
@@ -616,7 +617,7 @@ object SimilarityOps {
     require(nlist >= 2,
       s"centroid table must carry >= 2 lists, got $nlist")
     val ne = normalizedVecs(newRows, id, vec)
-    val cs = resolveCentroids(ne, nlist, 1, 1.0, Some(centroids))
+    val cs = resolveCentroids(ne, nlist, 1, 1.0, Some(centroids), vecDim(ne))
     val bc = newRows.sparkSession.sparkContext.broadcast(cs.map(_.toArray))
     ne.select(col("vec_id"),
       graft.functions.ArgTopDot.argMaxDot(col("ne"), bc).as("l"),
@@ -733,8 +734,8 @@ object SimilarityOps {
     * (training is deterministic, so the two paths are bit-identical).
     * Shared by [[ivfKnnJoin]] and [[semanticDedupPairs]]. */
   private[operators] def resolveCentroids(ne: DataFrame, nlist: Int, iters: Int,
-      trainFraction: Double,
-      precomputedCentroids: Option[DataFrame]): Array[Seq[Double]] =
+      trainFraction: Double, precomputedCentroids: Option[DataFrame],
+      dim: => Option[Int]): Array[Seq[Double]] =
     precomputedCentroids match {
       case Some(ct) =>
         val cs = ct.select(col("list").cast("int"), col("centroid"))
@@ -750,14 +751,22 @@ object SimilarityOps {
         val cdims = cs.map(_._2.length).distinct
         require(cdims.length == 1,
           s"precomputed centroids have mixed dimensions: ${cdims.sorted.mkString(", ")}")
-        ne.select(size(col("ne"))).take(1).foreach { r =>
-          require(r.getInt(0) == cdims.head,
+        dim.foreach { d =>
+          require(d == cdims.head,
             s"precomputed centroid dim ${cdims.head} does not match vector " +
-              s"dim ${r.getInt(0)}")
+              s"dim $d")
         }
         cs.map(_._2)
       case None => kmeansCentroids(ne, nlist, iters, trainFraction)
     }
+
+  /** The dimension of `ne`'s first vector (None when `ne` is empty): the
+    * one-row job a precomputed quantizer table is checked against. Passed
+    * by name to [[resolveCentroids]] and `PqOps.resolveCodebook`, so the
+    * self-training paths never run it and a caller resolving both on one
+    * frame runs it once through a `lazy val`. */
+  private[operators] def vecDim(ne: DataFrame): Option[Int] =
+    ne.select(size(col("ne"))).take(1).headOption.map(_.getInt(0))
 
   /** IVF k-NN self-join. When `precomputedCentroids` is set (the
     * train-once/search-many path), the quantizer comes entirely from the
@@ -779,7 +788,8 @@ object SimilarityOps {
     // sweep, like the dedup family's intermediates).
     val ne = normalizedVecs(rows, id, vec).localCheckpoint(true)
     val centroids: Array[Seq[Double]] =
-      resolveCentroids(ne, nlist, iters, trainFraction, precomputedCentroids)
+      resolveCentroids(ne, nlist, iters, trainFraction, precomputedCentroids,
+        vecDim(ne))
 
     // argmax_i dot(ne, c_i) through the ArgTopDot kernel: the centroid
     // matrix is broadcast (re-broadcast per k-means round — kilobytes),
@@ -834,7 +844,8 @@ object SimilarityOps {
       precomputedCentroids: Option[DataFrame]): DataFrame = {
     val ne = normalizedVecs(rows, id, vec).localCheckpoint(true)
     val centroids =
-      resolveCentroids(ne, nlist, iters, trainFraction, precomputedCentroids)
+      resolveCentroids(ne, nlist, iters, trainFraction, precomputedCentroids,
+        vecDim(ne))
     val bc = rows.sparkSession.sparkContext.broadcast(centroids.map(_.toArray))
     ne.select(col("vec_id"), col("ne"),
       graft.functions.ArgTopDot.argMaxDot(col("ne"), bc).as("l"))

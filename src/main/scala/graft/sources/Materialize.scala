@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Session-scoped materialized intermediates.
   *
@@ -21,8 +22,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and writes parquet under a process-private temp dir, every later
   * caller (same Spark application + key) gets a plain parquet scan.
   * Results are bit-identical to the direct computation — asserted in
-  * graft.MaterializeSpec. `SPARK_GRAFT_NO_MEMO=1` disables the memo for
-  * A/B measurement of the underlying build.
+  * graft.MaterializeSpec.
+  *
+  * The written table is read back once, when it is published, and its
+  * inferred schema is kept next to its path; consumers read with that
+  * schema, so a memo scan starts no schema-inference job and keeps exactly
+  * the types and nullability a plain parquet read gives. Contract: within
+  * one application a memo path's schema does not change — each key is
+  * written once, to a path derived from the key alone.
   */
 object Materialize {
   private lazy val root = {
@@ -38,12 +45,9 @@ object Materialize {
     }))
     dir.toString
   }
-  private val done = new ConcurrentHashMap[String, String]()
-
-  private def enabled = !sys.env.contains("SPARK_GRAFT_NO_MEMO")
+  private val done = new ConcurrentHashMap[String, (String, StructType)]()
 
   def table(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    if (!enabled) return build
     // Key by application: temp-dir contents outlive a stopped session,
     // but a new application must not trust another's files (different
     // conf, different data dir lifetimes are encoded in the key).
@@ -66,10 +70,11 @@ object Materialize {
         val p = root + "/" +
           java.util.UUID.nameUUIDFromBytes(full.getBytes("UTF-8")).toString
         build.write.mode("overwrite").parquet(p)
-        done.put(full, p)
+        done.put(full, (p, s.read.parquet(p).schema))
         ()
       }
     }
-    s.read.parquet(done.get(full))
+    val (p, schema) = done.get(full)
+    s.read.schema(schema).parquet(p)
   }
 }

@@ -1,8 +1,10 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 /** Parquet table loader for the driver-generated star schema (TESTDATA.md).
   *
@@ -12,6 +14,15 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
   * these scans are pushed into the parquet reader by Catalyst (verified via
   * `.explain` — `PushedFilters` / `ReadSchema`), which is the 100 TB story:
   * a scan never reads columns or row groups a query doesn't need.
+  *
+  * Like the reference's source, which is declared once per topic and
+  * reused by every processor, a table's schema is inferred once per Spark
+  * application: parquet inference runs a Spark job of its own, and at
+  * small scale that job costs more than the query it precedes. Every later
+  * read passes the cached schema, which starts no job. Contract: within
+  * one application a table file's schema does not change (the tables are
+  * written before any session reads them), and the two reader settings
+  * set below are not flipped back mid-application.
   */
 object Tables {
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
@@ -51,6 +62,9 @@ object Tables {
       df.repartition(key: _*)
     else df
 
+  /** `applicationId/path` → the schema parquet inference produced. */
+  private val schemas = new ConcurrentHashMap[String, StructType]()
+
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // Set lazily only if the session builder didn't — avoids mutating the
     // session conf on every call (both are also set in Sessions.local).
@@ -58,7 +72,18 @@ object Tables {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if (!spark.conf.getOption("spark.sql.parquet.inferTimestampNTZ.enabled").contains("false"))
       spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    // computeIfAbsent is safe here, unlike in Materialize.table: inference
+    // never re-enters this map
+    val schema = schemas.computeIfAbsent(
+      spark.sparkContext.applicationId + "/" + path,
+      _ => spark.read.parquet(path).schema)
+    withTemporal(name, spark.read.schema(schema).parquet(path))
+  }
+
+  /** The type-driven fix-ups of `temporalCols` applied to a raw read of
+    * table `name`. */
+  private[graft] def withTemporal(name: String, df: DataFrame): DataFrame =
     temporalCols.getOrElse(name, Nil).foldLeft(df) { (acc, c) =>
       if (!acc.schema.fieldNames.contains(c)) acc
       else acc.schema(c).dataType match {
@@ -67,6 +92,5 @@ object Tables {
         case _ => acc
       }
     }
-  }
 }
 

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.operators.{DedupOps, PipelineOps, RelationalOps, SimilarityOps, TextOps}
 
@@ -1040,7 +1041,7 @@ class ApiSpec extends SparkSpec {
       vs <- Gen.listOfN(n,
         Gen.listOfN(8, Gen.chooseNum(-10.0f, 10.0f).suchThat(_ != 0f)))
     } yield vs.zipWithIndex.map { case (v, i) => (i * 31L, v.toArray) }
-    val vecs = gen.sample.get
+    val vecs = gen.pureApply(Gen.Parameters.default, Seed(1))
     val df = vecs.toDF("row_id", "vec")
     val got = SimilarityOps.knnJoin(df, "row_id", "vec", k = 1)
       .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getDouble(3))).toMap
@@ -2747,7 +2748,8 @@ class ApiSpec extends SparkSpec {
     val docGen: Gen[String] = Gen.chooseNum(0, 8).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf(segPool)).map(_.mkString("\n")))
     for (trial <- 1 to 5) {
-      val corpus = Gen.listOfN(12, docGen).sample.get.zipWithIndex
+      val corpus = Gen.listOfN(12, docGen)
+        .pureApply(Gen.Parameters.default, Seed(trial)).zipWithIndex
         .map { case (t, i) => (i.toLong, t) }
       val dfFrac = 0.4
       // sequential reference — NOTE split(_, -1): Spark keeps trailing
@@ -2780,7 +2782,8 @@ class ApiSpec extends SparkSpec {
     } yield (k, t, v)
     for (trial <- 1 to 5) {
       val step = Seq(7L, 50L)(trial % 2)
-      val raw = Gen.listOfN(40, obsGen).sample.get.zipWithIndex
+      val raw = Gen.listOfN(40, obsGen)
+        .pureApply(Gen.Parameters.default, Seed(trial)).zipWithIndex
         .map { case ((k, t, v), i) => (k, t, i.toLong, v) }
       // sequential reference: last obs per (key, bucket) by (ts, seq)
       // desc, grid over [min, max] bucket, forward fill
@@ -2813,7 +2816,8 @@ class ApiSpec extends SparkSpec {
       t <- Gen.chooseNum(0L, 300L)
     } yield (k, t)
     for (trial <- 1 to 4) {
-      val acts = Gen.listOfN(60, actGen).sample.get
+      val acts = Gen.listOfN(60, actGen)
+        .pureApply(Gen.Parameters.default, Seed(trial))
       val df = acts.toDF("k", "at")
       // rollingDistinct, step 10, window 4 — brute force over buckets
       val ub = acts.map { case (k, t) => (k, t / 10) }.distinct
@@ -2989,12 +2993,14 @@ class ApiSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val textGen: Gen[String] = Gen.oneOf("alpha", "beta", "gamma", "delta")
+    // a snapshot keeps each of 20 ids with probability 0.8, random text
+    val ids = (0L until 20L).toSeq
+    val snapGen: Gen[Map[Long, String]] =
+      Gen.listOfN(ids.size, Gen.zip(Gen.prob(0.8), textGen)).map(draws =>
+        ids.zip(draws).collect { case (i, (true, t)) => i -> t }.toMap)
     for (trial <- 1 to 5) {
-      val ids = (0L until 20L).toSeq
-      val before = ids.filter(_ => Gen.prob(0.8).sample.get)
-        .map(i => i -> textGen.sample.get).toMap
-      val after = ids.filter(_ => Gen.prob(0.8).sample.get)
-        .map(i => i -> textGen.sample.get).toMap
+      val before = snapGen.pureApply(Gen.Parameters.default, Seed(2L * trial))
+      val after = snapGen.pureApply(Gen.Parameters.default, Seed(2L * trial + 1))
       val expect = (before.keySet ++ after.keySet).flatMap { i =>
         (before.get(i), after.get(i)) match {
           case (None, Some(_)) => Some(i -> "added")
@@ -3026,7 +3032,8 @@ class ApiSpec extends SparkSpec {
     } yield (src, n)
     for (trial <- 1 to 5) {
       val alpha = Seq(0.3, 0.5, 1.0)(trial % 3)
-      val rows = Gen.listOfN(40, rowGen).sample.get.zipWithIndex
+      val rows = Gen.listOfN(40, rowGen)
+        .pureApply(Gen.Parameters.default, Seed(trial)).zipWithIndex
         .map { case ((src, n), i) => (i.toLong, ("w " * n).trim, src) }
       // sequential reference mirroring the operator's arithmetic
       val perSource = rows.groupBy(_._3).view

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.functions.TextKernels
 
@@ -26,7 +27,8 @@ class KernelPropertySpec extends SparkSpec {
   test("text kernels equal the declarative pipelines on generated strings") {
     val s = spark
     import s.implicits._
-    val samples = (Gen.listOfN(60, text).sample.get ++
+    val samples = (Gen.listOfN(60, text)
+      .pureApply(Gen.Parameters.default, Seed(1)) ++
       Seq("", " ", "\t\n", "a", "a b", "a b c", "x x x x x")).toDF("text")
     // declarative references (same as KernelSpec)
     def toksC(c: org.apache.spark.sql.Column) =
@@ -53,7 +55,8 @@ class KernelPropertySpec extends SparkSpec {
   test("NGramSet64 and MinShingleMd5 equal their declarative renderings on generated strings") {
     val s = spark
     import s.implicits._
-    val samples = (Gen.listOfN(60, text).sample.get ++
+    val samples = (Gen.listOfN(60, text)
+      .pureApply(Gen.Parameters.default, Seed(2)) ++
       Seq("", " ", "\t\n", "a", "a b", "a b c", "x x x x x")).toDF("text")
     def toksC(c: org.apache.spark.sql.Column) =
       filter(split(lower(c), "\\s+"), t => length(t) > 0)
@@ -88,7 +91,7 @@ class KernelPropertySpec extends SparkSpec {
     val pairs = Gen.listOfN(50, for {
       a <- arr
       b <- Gen.listOfN(a.length, Gen.chooseNum(-1e18f, 1e18f)).map(_.toArray)
-    } yield (a, b)).sample.get
+    } yield (a, b)).pureApply(Gen.Parameters.default, Seed(3))
     val df = pairs.toDF("a", "b")
     val hof = aggregate(
       zip_with(col("a"), col("b"), (x, y) => x.cast("double") * y.cast("double")),
@@ -110,8 +113,9 @@ class KernelPropertySpec extends SparkSpec {
       words <- Gen.listOfN(12, repWord)
       seps <- Gen.listOfN(12, sep)
     } yield words.zip(seps).map { case (w, sp) => w + sp }.mkString
-    val samples = (Gen.listOfN(40, repText).sample.get ++
-      Gen.listOfN(30, text).sample.get ++
+    val samples = (Gen.listOfN(40, repText)
+      .pureApply(Gen.Parameters.default, Seed(4)) ++
+      Gen.listOfN(30, text).pureApply(Gen.Parameters.default, Seed(5)) ++
       Seq("", " ", "x", "x x x x", "a b a b a")).toDF("text")
     val e = samples.select(
       graft.functions.TextStats.tokenEntropyStats(col("text")).as("n"),
@@ -137,7 +141,7 @@ class KernelPropertySpec extends SparkSpec {
       n <- Gen.oneOf(1, 3, 64)
       xs <- Gen.listOfN(n, Gen.chooseNum(-1e6f, 1e6f))
     } yield xs.toArray
-    val vecs = Gen.listOfN(50, vecGen).sample.get ++
+    val vecs = Gen.listOfN(50, vecGen).pureApply(Gen.Parameters.default, Seed(6)) ++
       Seq(Array.empty[Float], Array(0f, 0f, 0f)) // -> NULL by contract
     val nrm = sqrt(graft.functions.DotF.dotf(col("v"), col("v")))
     val hof = when(nrm > 0,
@@ -159,7 +163,7 @@ class KernelPropertySpec extends SparkSpec {
       // the (min, max) tie behavior (da == db pairs)
       xs <- Gen.listOfN(n, Gen.chooseNum(-5L, 5L))
     } yield xs.toArray
-    val lists = Gen.listOfN(60, listGen).sample.get
+    val lists = Gen.listOfN(60, listGen).pureApply(Gen.Parameters.default, Seed(7))
     val hof = flatten(transform(col("ds"), (x, i) =>
       transform(slice(col("ds"), i + 2, size(col("ds"))), y =>
         struct(least(x, y).as("da"), greatest(x, y).as("db")))))
@@ -179,7 +183,8 @@ class KernelPropertySpec extends SparkSpec {
     // a wrong-length vector exercises the null-dot path: every plane dot
     // nulls, the rendering's otherwise-branch gives all-zero buckets and
     // the kernel must agree
-    val vecs = Gen.listOfN(50, vecGen).sample.get :+ Array.fill(3)(1f)
+    val vecs = Gen.listOfN(50, vecGen)
+      .pureApply(Gen.Parameters.default, Seed(8)) :+ Array.fill(3)(1f)
     val (tables, planesPer) = (4, 3)
     val ps = graft.operators.SimilarityOps.planesFor(tables * planesPer, dim)
     val bc = spark.sparkContext.broadcast(ps)
@@ -200,11 +205,11 @@ class KernelPropertySpec extends SparkSpec {
     val dim = 6
     val vecGen: Gen[Array[Float]] =
       Gen.listOfN(dim, Gen.chooseNum(-100f, 100f)).map(_.toArray)
-    val vecs = Gen.listOfN(60, vecGen).sample.get
+    val vecs = Gen.listOfN(60, vecGen).pureApply(Gen.Parameters.default, Seed(9))
     // centroids from the same generator, as exact doubles, plus a
     // duplicated row and an all-zero row: duplicates force exact dot ties
     // (tie order is the contract), zero ties against nothing but itself
-    val baseC = Gen.listOfN(5, vecGen).sample.get
+    val baseC = Gen.listOfN(5, vecGen).pureApply(Gen.Parameters.default, Seed(10))
       .map(_.map(_.toDouble))
     val cents = (baseC :+ baseC(2).clone() :+ Array.fill(dim)(0.0)).toArray
     val bc = spark.sparkContext.broadcast(cents)
@@ -230,12 +235,14 @@ class KernelPropertySpec extends SparkSpec {
     val dim = m * dsub
     val vecGen: Gen[Array[Float]] =
       Gen.listOfN(dim, Gen.chooseNum(-10f, 10f)).map(_.toArray)
-    val vecs = Gen.listOfN(60, vecGen).sample.get :+ Array.fill(dim)(0f)
+    val vecs = Gen.listOfN(60, vecGen)
+      .pureApply(Gen.Parameters.default, Seed(11)) :+ Array.fill(dim)(0f)
     // duplicate one centroid per subspace: exact-equal distances force the
     // tie, and the contract (smaller code wins) must match the struct-min
     // rendering's lexicographic order
     val baseC = Gen.listOfN(ksub - 1,
-      Gen.listOfN(dsub, Gen.chooseNum(-10.0, 10.0))).sample.get
+      Gen.listOfN(dsub, Gen.chooseNum(-10.0, 10.0)))
+        .pureApply(Gen.Parameters.default, Seed(12))
       .map(_.toArray)
     val cb: Array[Array[Array[Double]]] =
       Array.tabulate(m)(_ => (baseC :+ baseC(1).clone()).toArray)
@@ -283,8 +290,7 @@ class KernelPropertySpec extends SparkSpec {
     } yield hotCounts.zipWithIndex.flatMap { case (c, i) =>
         List.fill(c)(s"h$i") } ++ (0 until nBg).map(i => s"b$i").toList
     (0 until 5).foreach { trial =>
-      val items = streamGen
-        .apply(Gen.Parameters.default, org.scalacheck.rng.Seed(trial.toLong)).get
+      val items = streamGen.pureApply(Gen.Parameters.default, Seed(trial.toLong))
       val exact = items.groupBy(identity).view
         .mapValues(_.size.toLong).toMap
       val df = items.zipWithIndex.map(_.swap).toDF("i", "v")

@@ -31,6 +31,24 @@ class MaterializeSpec extends SparkSpec {
     assert(second.toSeq == direct.toSeq)
   }
 
+  test("a later consumer read starts no Spark job and equals a plain parquet read") {
+    // `id` from range is non-nullable; a parquet read makes it nullable,
+    // and the memo must hand out the parquet read's schema, not the build's
+    val build = spark.range(0, 50, 1, 2).toDF("id")
+      .withColumn("ts", timestamp_seconds(col("id") * 3600))
+      .withColumn("v", array(col("id").cast("float")))
+    Materialize.table(spark, "spec:schema")(build)
+    val (memo, jobs) = jobsDuring(Materialize.table(spark, "spec:schema")(build))
+    assert(jobs.isEmpty, s"second consumer read started $jobs")
+    val dir = new java.io.File(memo.inputFiles.head).getParent
+    val plain = spark.read.parquet(dir)
+    assert(memo.schema == plain.schema, s"${memo.schema} vs ${plain.schema}")
+    assert(memo.schema("id").nullable && !build.schema("id").nullable)
+    val rows = memo.orderBy("id").collect().toSeq
+    assert(rows == plain.orderBy("id").collect().toSeq)
+    assert(rows.map(_.getLong(0)) == (0L until 50L))
+  }
+
   test("distinct keys build independently") {
     val a = Materialize.table(spark, "spec:ka")(Seq(1).toDF("x"))
     val b = Materialize.table(spark, "spec:kb")(Seq(2).toDF("x"))

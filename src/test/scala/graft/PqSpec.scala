@@ -163,9 +163,30 @@ class PqSpec extends SparkSpec {
     intercept[Exception](PqOps.ivfPqKnnJoin(embeddings, "vec_id",
       "embedding", 5, precomputedCodebooks =
         Some(cbDf.filter(col("sub") < 4))).collect())
-    intercept[Exception](PqOps.ivfPqKnnJoin(embeddings, "vec_id",
+    val badDim = intercept[Exception](PqOps.ivfPqKnnJoin(embeddings, "vec_id",
       "embedding", 5, m = 4, ksub = 16, precomputedCodebooks =
         Some(cbDf.filter(col("sub") < 4))).collect())
+    assert(badDim.getMessage.contains("does not match vector dim"))
+  }
+
+  test("a precomputed quantizer and codebook share one vector-dimension probe") {
+    val ct = SimilarityOps.ivfTrain(embeddings, "vec_id", "embedding",
+      nlist = 16)
+    val cbDf = PqOps.pqTrain(embeddings, "vec_id", "embedding", m = 8,
+      ksub = 16)
+    def probes(sites: Seq[String]) = sites.count(_.startsWith("take at"))
+    val (_, index) = jobsDuring(PqOps.ivfPqIndex(embeddings, "vec_id",
+      "embedding", ct, cbDf))
+    assert(probes(index) == 1, s"ivfPqIndex ran $index")
+    val (_, search) = jobsDuring(PqOps.ivfPqSearch(embeddings, embeddings,
+      "vec_id", "embedding", 5, nlist = 16, precomputedCentroids = Some(ct),
+      precomputedCodebooks = Some(cbDf)))
+    assert(probes(search) == 1, s"ivfPqSearch ran $search")
+    // self-training resolves both without a probe of its own: the codebook
+    // trainer's one dimension read is the only take
+    val (_, trained) = jobsDuring(PqOps.ivfPqKnnJoin(embeddings, "vec_id",
+      "embedding", 5, nlist = 16))
+    assert(probes(trained) == 1, s"self-trained ivfPqKnnJoin ran $trained")
   }
 
   test("IVFPQ knn join recalls the exact neighbor lists and re-ranks with exact cosines") {

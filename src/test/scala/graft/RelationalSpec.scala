@@ -151,6 +151,7 @@ class RelationalSpec extends SparkSpec {
     // at every requested rank
     import graft.operators.RelationalOps
     import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
     val s = spark
     import s.implicits._
     val gen = for {
@@ -161,8 +162,7 @@ class RelationalSpec extends SparkSpec {
     } yield (vs, gs, cut)
     val qs = Seq(0.1, 0.5, 0.9, 1.0)
     (1 to 8).foreach { trial =>
-      val (vs, gs, cut) = gen.sample.getOrElse((List(1.0, 2.0, 3.0),
-        List("g0", "g1", "g0"), List(0, 1, 2)))
+      val (vs, gs, cut) = gen.pureApply(Gen.Parameters.default, Seed(trial))
       val rows = vs.lazyZip(gs).lazyZip(cut).toList
       val parts = (0 to 2).map(i =>
         rows.filter(_._3 == i).map(r => (r._2, r._1)))

@@ -106,6 +106,23 @@ class SourcesSpec extends SparkSpec {
     assert(docs.schema("text").dataType == StringType)
   }
 
+  test("a second Tables read of every table starts no Spark job and equals a plain parquet read") {
+    import org.apache.spark.sql.types.TimestampType
+    val temporal = Map("events" -> "ts", "lineitem" -> "l_shipdate",
+      "orders" -> "o_orderdate")
+    Tables.all.foreach { n =>
+      Tables(spark, sf, n) // infers the schema unless an earlier read did
+      val (df, jobs) = jobsDuring(Tables(spark, sf, n))
+      assert(jobs.isEmpty, s"$n: second read started $jobs")
+      val plain = Tables.withTemporal(n, spark.read.parquet(s"$sf/$n.parquet"))
+      assert(df.schema == plain.schema, s"$n: ${df.schema} vs ${plain.schema}")
+      assert(df.collect().map(_.toString).sorted.toSeq ==
+        plain.collect().map(_.toString).sorted.toSeq, s"$n: rows differ")
+      temporal.get(n).foreach(c =>
+        assert(df.schema(c).dataType == TimestampType, s"$n.$c"))
+    }
+  }
+
   test("orc scans receive pushed filters like parquet") {
     val dir = Files.createTempDirectory("graft-src-orc-push").toString
     events.write.format("orc").mode("overwrite").save(dir)

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.operators.UnigramOps
 
@@ -47,7 +48,8 @@ class UnigramSpec extends SparkSpec {
   } yield cs.mkString
 
   test("viterbi equals brute-force max over all segmentations") {
-    val cases = Gen.listOfN(300, Gen.zip(wordGen, modelGen)).sample.get
+    val cases = Gen.listOfN(300, Gen.zip(wordGen, modelGen))
+      .pureApply(Gen.Parameters.default, Seed(1))
     cases.foreach { case (w, m) =>
       val segs = segmentations(w, m)
       val expected =
@@ -68,7 +70,8 @@ class UnigramSpec extends SparkSpec {
       n <- Gen.choose(1, 9)
       cs <- Gen.listOfN(n, Gen.oneOf('a', 'b', 'c', 'd'))
     } yield cs.mkString
-    val cases = Gen.listOfN(60, Gen.zip(neWord, modelGen)).sample.get
+    val cases = Gen.listOfN(60, Gen.zip(neWord, modelGen))
+      .pureApply(Gen.Parameters.default, Seed(2))
     cases.foreach { case (w, mScaled) =>
       // model in log-prob doubles, as eStep broadcasts it
       val m = mScaled.map { case (p, s) => p -> s / UnigramOps.Scale }
@@ -165,7 +168,8 @@ class UnigramSpec extends SparkSpec {
   }
 
   test("viterbiPieces: valid cover, same value as viterbi, on generated cases") {
-    val cases = Gen.listOfN(300, Gen.zip(wordGen, modelGen)).sample.get
+    val cases = Gen.listOfN(300, Gen.zip(wordGen, modelGen))
+      .pureApply(Gen.Parameters.default, Seed(3))
     cases.foreach { case (w, m) =>
       val (pieces, sc) = UnigramOps.viterbiPieces(w, m, L)
       val (nt, vsc) = UnigramOps.viterbi(w, m, L)

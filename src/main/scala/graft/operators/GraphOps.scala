@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{Decimal, DoubleType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.{Det, QDef}
 import graft.sources.Tables
@@ -16,75 +21,112 @@ import graft.sources.Tables
   * the repo already has the other half of the graph toolbox
   * ([[DedupOps.connectedComponents]]).
   *
-  * Scale design: classic synchronous power iteration. Each round is ONE
-  * equi-join (current ranks against the influence relation on its source
-  * key) plus ONE hash aggregation (grouped by destination) — shuffle
-  * volume O(E) per round, no driver-side data, no candidate
-  * materialization beyond the edge relation itself. The influence
-  * relation is built once, hash-partitioned on the per-round join key,
-  * and checkpointed, so the big side of the iteration join stays put
-  * across rounds; only the V-row rank frame and the product rows move.
+  * Scale design: classic synchronous power iteration, run as ONE
+  * partitioned-RDD loop. The stationary influence relation is keyed by
+  * source under one `HashPartitioner(spark.sql.shuffle.partitions)` and
+  * persisted once; the V-row rank RDD lives under the same partitioner.
+  * A round ([[rankRound]]) zips the two partition by partition — each
+  * partition's edges stream against a hash map of that partition's rank
+  * slice, so the join is narrow and no hub's out-edge list is ever
+  * buffered — and emits one exact decimal contribution per edge into a
+  * map-side-combined `reduceByKey` on the destination: ONE shuffle per
+  * round, and no rank data leaves the executors. The teleport term is a
+  * `mapValues` (uniform) or a zip against a co-partitioned V-row
+  * teleport RDD (personalized), so every round's output is partitioned
+  * like the edges.
   *
-  * Round overhead (r9 rework — this was the cost floor): lineage is
-  * truncated by an eager localCheckpoint every [[CkptEvery]] rounds, not
-  * every round — a synchronous V-row materialization per round was ~10
-  * stage barriers of pure overhead for a 10-round run, while ≤3 rounds of
-  * join+agg lineage between checkpoints is well inside Catalyst's
-  * comfort. Superseded checkpoints are released by RDD id
-  * (`SparkContext.getPersistentRDDs`): `Dataset.unpersist()` on a
-  * localCheckpoint'd frame is a CacheManager no-op that leaks the
-  * underlying blocks (ADVICE r8) — the ids observed to appear across the
-  * checkpoint call are the blocks to free, and that set is released
-  * blocking once the next checkpoint supersedes it.
+  * Round overhead is the cost floor at this scale, which is why the loop
+  * is not a Catalyst plan: a join plus an aggregation per round pays one
+  * Spark job per round exchange under AQE and re-plans the rest of the
+  * plan after every stage (27 jobs for a 10-round run). The RDD rounds
+  * between two lineage barriers are the stages of ONE job, so a 10-round
+  * run costs the node count, one barrier and the caller's consumption
+  * (5 jobs; PlanSpec pins the bound). Every pinned RDD (the influence
+  * relation, the personalized teleport vector, the live barrier) is
+  * tracked by id ([[Pins.pinTracked]]) and released by id: superseded
+  * barriers as soon as the next one is materialized, the rest through
+  * [[RankRun]].
   */
 object GraphOps {
 
   /** A completed rank computation plus the handle that frees its blocks.
     *
-    * The iteration leaves the influence relation, the in-link-free
-    * constant frame, and the last lineage barrier pinned as persistent
-    * RDD blocks — they back `ranks`' lineage, and `Dataset.unpersist()`
-    * cannot free them (localCheckpoint blocks belong to an internal RDD
-    * the CacheManager never saw). Lifecycle: consume `ranks` (collect /
-    * write / count), then call [[release]]; after release the frame
-    * CANNOT be recomputed (its lineage was truncated by the
-    * checkpoints). Idempotent; releases only this run's blocks, so
-    * concurrent runs on one session are safe (ADVICE r9). Without a
-    * handle the only recourse was a global `getPersistentRDDs` sweep —
-    * which a long-lived session sharing the SparkSession cannot do
-    * safely. */
+    * The loop leaves the persisted influence relation (plus, for the
+    * personalized form, the teleport vector) and the last lineage barrier
+    * pinned as persistent RDD blocks — they back `ranks`' lineage, and
+    * `Dataset.unpersist()` cannot free them (`ranks` is a frame over an
+    * RDD the CacheManager never cached). Lifecycle: consume `ranks`
+    * (collect / write / count), then call [[release]]; after release the
+    * frame CANNOT be recomputed (the barrier truncated its lineage).
+    * Idempotent; releases only this run's RDDs, so concurrent runs on one
+    * session are safe (ADVICE r9). Without a handle the only recourse was
+    * a global `getPersistentRDDs` sweep — which a long-lived session
+    * sharing the SparkSession cannot do safely. */
   final class RankRun private[operators] (val ranks: DataFrame,
-      spark: SparkSession, ids: Set[Int], cached: Seq[DataFrame]) {
-    /** Free the pinned blocks backing [[ranks]]. Call after consuming.
-      * Checkpoint blocks release by RDD id; the cached stationary
-      * influence relation (r19 — a CacheManager-visible `persist`, NOT a
-      * localCheckpoint, so the round join sees its hash partitioning)
-      * releases through `Dataset.unpersist`, which DOES work for
-      * caches. */
-    def release(): Unit = {
-      GraphOps.release(spark, ids)
-      cached.foreach(_.unpersist(blocking = true))
-    }
+      spark: SparkSession, ids: Set[Int]) {
+    /** Free the pinned RDDs backing [[ranks]], by id. Call after
+      * consuming. */
+    def release(): Unit = Pins.release(spark, ids)
   }
 
-  /** Rounds of lazy join+agg lineage between eager checkpoint barriers.
-    * r19: 3 → 5, measured with the shuffled-hash round
-    * (OPTIMIZATION_r19.md, 4 alternating reps under load: ckpt5
-    * 10.2-12.9 s vs ckpt10 12.5-20.3 s vs the shipped broadcast/ckpt3
-    * 13.0-31.8 s) — one barrier per 10-round run instead of three,
-    * while the lazy span stays ≤ 4 rounds of join+agg lineage. */
+  /** Rounds between lineage barriers (`localCheckpoint` plus a count).
+    * The rounds between two barriers run as the stages of one job; a
+    * barrier bounds what a lost shuffle file recomputes and how deep a
+    * DAG the scheduler walks. At 5, a 10-round run has one barrier and
+    * its last five rounds run inside the caller's consumption. Values
+    * never depend on the cadence. */
   private val CkptEvery = 5
 
-  /** Eagerly localCheckpoint `df`, returning the checkpointed frame plus
-    * the persistent-RDD ids the call pinned — the handle a caller needs
-    * to actually free the blocks later (`Dataset.unpersist()` cannot:
-    * the blocks belong to an internal RDD the CacheManager never saw).
-    * Exact plan-derived attribution, shared since r17 — see [[Pins]]. */
-  private def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) =
-    Pins.checkpointTracked(df)
+  /** One influence-relation row in the loop, keyed by its source. */
+  private[graft] final case class Edge(dst: Any, w: Double)
 
-  private def release(spark: SparkSession, ids: Set[Int]): Unit =
-    Pins.release(spark, ids)
+  /** An exact DECIMAL(38,18) value or partial sum: the unscaled long while
+    * it fits, a BigDecimal past it (a caller's influence weights are
+    * arbitrary). Addition is exact either way, so a sum does not depend
+    * on the order its terms meet in — which keeps the ranks bit-stable
+    * under any partitioning, as the `sum(CAST(... AS DECIMAL(38,18)))` of
+    * the DuckDB oracle is. */
+  private[graft] final class Exact private (private val unscaled: Long,
+      private val big: java.math.BigDecimal) extends Serializable {
+    def +(o: Exact): Exact =
+      if (big == null && o.big == null)
+        try new Exact(Math.addExact(unscaled, o.unscaled), null)
+        catch { case _: ArithmeticException => Exact.of(toBig.add(o.toBig)) }
+      else Exact.of(toBig.add(o.toBig))
+
+    def toBig: java.math.BigDecimal =
+      if (big != null) big
+      else java.math.BigDecimal.valueOf(unscaled, Exact.Scale)
+
+    /** Spark's DECIMAL(38,18) → DOUBLE cast of the value. */
+    def toDouble: Double = Exact.fit(Decimal(toBig)).toDouble
+  }
+
+  private[graft] object Exact {
+    private val Scale = 18
+    val Zero = new Exact(0L, null)
+
+    /** Spark's DOUBLE → DECIMAL(38,18) cast of `x` (the shortest decimal
+      * rendering of the double, rounded half-up to 18 places); like the
+      * ANSI cast, a value outside the type throws. */
+    def apply(x: Double): Exact = {
+      if (x.isNaN || x.isInfinite)
+        throw new ArithmeticException(s"$x does not fit DECIMAL(38,18)")
+      of(fit(Decimal(x)).toJavaBigDecimal)
+    }
+
+    private def of(b: java.math.BigDecimal): Exact = {
+      val u = b.unscaledValue
+      if (b.scale == Scale && u.bitLength < 64) new Exact(u.longValue, null)
+      else new Exact(0L, b)
+    }
+
+    private def fit(d: Decimal): Decimal = {
+      if (!d.changePrecision(38, Scale))
+        throw new ArithmeticException(s"$d does not fit DECIMAL(38,18)")
+      d
+    }
+  }
 
   /** The stationary INFLUENCE RELATION of an edge list — one row per
     * edge row `(src, dst, w = 1/outdeg(src))`, the relation every
@@ -133,18 +175,17 @@ object GraphOps {
     * mass-conserving rank, as q_graph_pagerank does).
     *
     * Determinism: per-destination contributions are summed through an
-    * exact decimal accumulator (see [[graft.Det]]) — order-independent,
+    * exact decimal accumulator (see [[Exact]]) — order-independent,
     * so results are bit-stable under any parallelism; a fixed round
     * count (no convergence test) keeps the whole computation expressible
     * as a DuckDB recursive CTE for the oracle. A node with no in-links
     * receives only the teleport term, so its rank is the CONSTANT
     * `(1-d)/n` in every round ≥ 1 — those nodes ride the stationary
     * influence relation as zero-weight SELF-edges (r19; ≤V extra rows,
-    * zero on symmetrized graphs), so the round's aggregation emits their
-    * constant row itself and no per-round union exists. This is NOT
-    * r7's all-nodes self-row scheme (which re-flowed every node through
-    * the join and the decimal aggregation each round): only the
-    * in-link-free slice gets a self-edge.
+    * zero on symmetrized graphs), so the round's reduce emits their
+    * constant row itself and no per-round union exists. Only the
+    * in-link-free slice gets a self-edge; re-flowing every node through
+    * the round each time (r7's all-nodes self-row scheme) is avoided.
     *
     * The one driver-side scalar is the node count (the `1/n` teleport
     * share); everything else is executor-side.
@@ -172,14 +213,14 @@ object GraphOps {
       prefs = None, trackDeltas = false, preInfl = influence)._1
 
   /** [[pageRank]] returning a [[RankRun]]: the rank frame PLUS the handle
-    * that frees the checkpointed blocks backing it. Prefer this form in
+    * that frees the pinned blocks backing it. Prefer this form in
     * long-lived sessions — see [[RankRun]] for the lifecycle. */
   def pageRankManaged(edgeList: DataFrame, src: String, dst: String,
       damping: Double = 0.85, iters: Int = 10,
       influence: Option[DataFrame] = None): RankRun = {
-    val (out, _, ids, cached) = runPageRank(edgeList, src, dst, damping,
+    val (out, _, ids) = runPageRank(edgeList, src, dst, damping,
       iters, prefs = None, trackDeltas = false, preInfl = influence)
-    new RankRun(out, edgeList.sparkSession, ids, cached)
+    new RankRun(out, edgeList.sparkSession, ids)
   }
 
   /** Personalized PageRank: the teleport lands on a weighted SEED SET
@@ -190,12 +231,10 @@ object GraphOps {
     * Rank mass concentrates around the seeds — the "related to THESE
     * documents/pages" ranking (topic-sensitive PageRank, Haveliwala
     * WWW'02), where the uniform variant answers global importance.
-    * `iters`, determinism, and the iteration plan are exactly
-    * [[pageRank]]'s — the teleport term rides the stationary influence
-    * relation as a per-edge destination column recovered by `max` inside
-    * the round's aggregation, so the loop's plan is structurally
-    * identical to the uniform variant's (one join, one exchange, no
-    * per-round teleport frame).
+    * `iters`, determinism, and the loop are exactly [[pageRank]]'s — the
+    * teleport term is a persisted V-row RDD partitioned like the ranks,
+    * looked up by a narrow zip after the round's reduce, so a round still
+    * has exactly one shuffle.
     *
     * LIBRARY ENTRY POINT — GraphSpec pins seed-mass concentration, the
     * sequential-reference parity, and that uniform weights reproduce
@@ -223,10 +262,10 @@ object GraphOps {
       require(prefs.columns.contains(c),
         s"prefs has no column '$c' (columns: ${prefs.columns.mkString(", ")})")
     }
-    val (out, _, ids, cached) = runPageRank(edgeList, src, dst, damping,
+    val (out, _, ids) = runPageRank(edgeList, src, dst, damping,
       iters, prefs = Some((prefs, prefNode, prefWeight)),
       trackDeltas = false, preInfl = influence)
-    new RankRun(out, edgeList.sparkSession, ids, cached)
+    new RankRun(out, edgeList.sparkSession, ids)
   }
 
   /** [[pageRank]] plus per-round L1 movement `‖r_k - r_(k-1)‖₁` — the
@@ -234,16 +273,16 @@ object GraphOps {
     * (power iteration contracts the L1 delta by ≤ `damping` per round on
     * walk-complete graphs; a non-contracting tail says `iters` is too
     * low or the graph pathological). DIAGNOSTICS MODE: computing a delta
-    * requires materializing every round (the eager-per-round cadence the
-    * plain path deliberately avoids) plus a V-row join per round — pay
-    * it when inspecting convergence, not in production runs. Deltas are
-    * exact decimal sums, so they are deterministic and the returned
-    * ranks are bit-identical to [[pageRank]]'s (checkpoint cadence never
-    * affects values; GraphSpec pins both). */
+    * requires materializing every round (one job per round, the cadence
+    * the plain path deliberately avoids) plus a narrow V-row zip per
+    * round — pay it when inspecting convergence, not in production runs.
+    * Deltas are exact decimal sums, so they are deterministic and the
+    * returned ranks are bit-identical to [[pageRank]]'s (barrier cadence
+    * never affects values; GraphSpec pins both). */
   def pageRankDeltas(edgeList: DataFrame, src: String, dst: String,
       damping: Double = 0.85, iters: Int = 10,
       influence: Option[DataFrame] = None): (DataFrame, Seq[Double]) = {
-    val (out, deltas, _, _) = runPageRank(edgeList, src, dst, damping,
+    val (out, deltas, _) = runPageRank(edgeList, src, dst, damping,
       iters, prefs = None, trackDeltas = true, preInfl = influence)
     (out, deltas)
   }
@@ -253,7 +292,7 @@ object GraphOps {
       prefs: Option[(DataFrame, String, String)],
       trackDeltas: Boolean,
       preInfl: Option[DataFrame] = None)
-      : (DataFrame, Seq[Double], Set[Int], Seq[DataFrame]) = {
+      : (DataFrame, Seq[Double], Set[Int]) = {
     require(damping > 0 && damping < 1,
       s"damping must be in (0, 1), got $damping")
     require(iters >= 1, s"iters must be >= 1, got $iters")
@@ -273,47 +312,55 @@ object GraphOps {
     val spark = edgeList.sparkSession
     // The per-edge weighted relation (__s, __d, __w = 1/outdeg(__s)) —
     // either the caller's precomputed [[influenceRelation]] (the shared
-    // prefix: skips the outdeg agg + join AND the edge-list scan — the
-    // node set is recovered from the influence rows, identical because
-    // every edge row is present) or derived here from the edge list.
-    val weighted = preInfl match {
-      case Some(pi) => pi.select(col(src).as("__s"), col(dst).as("__d"),
-        col("w").cast("double").as("__w"))
-      case None =>
-        val edges = edgeList.select(col(src).as("__s"), col(dst).as("__d"))
-        edges.join(edges.groupBy("__s").agg(count(lit(1)).as("__od")),
-            "__s")
-          .select(col("__s"), col("__d"), (lit(1.0) / col("__od")).as("__w"))
-    }
-    // The V-row node set is consumed three times (count, rank init,
-    // in-link-free frame) — checkpoint the E-row distinct once instead of
-    // recomputing it per consumer (~1.5s × 2 of pure setup waste at
-    // sf0.1), and release its blocks as soon as the three consumers have
-    // materialized.
-    val (nodes, nodesIds) = checkpointTracked(
-      weighted.select(col("__s").as("__v"))
-        .unionByName(weighted.select(col("__d").as("__v")))
-        .distinct())
+    // prefix: a plain scan, so turning it into an RDD starts no job and
+    // the outdeg aggregation never runs) or derived here.
+    val weighted = (preInfl match {
+      case Some(pi) => pi.select(col(src), col(dst), col("w").cast("double"))
+      case None => influenceRelation(
+        edgeList.select(col(src).as("s"), col(dst).as("d")), "s", "d")
+    }).toDF("__s", "__d", "__w")
+    // Node ids take the type a union of the two endpoint columns gives
+    // them (analysis only, no job); both endpoints are cast to it, so a
+    // source id and the same destination id are equal RDD keys.
+    val node = weighted.select("__s").union(weighted.select("__d"))
+      .schema.head
+    val part = new HashPartitioner(
+      spark.sessionState.conf.numShufflePartitions)
+    val bySrc = weighted
+      .select(col("__s").cast(node.dataType), col("__d").cast(node.dataType),
+        col("__w"))
+      .rdd.map(r => (r.get(0), Edge(r.get(1), r.getDouble(2))))
+      .partitionBy(part)
+    // The V-row node set, each node flagged with whether it has an
+    // in-link, partitioned like the ranks.
+    val nodes = bySrc
+      .flatMap { case (s, e) => Iterator(s -> false, e.dst -> true) }
+      .reduceByKey(part, _ || _)
+    // the one scalar the loop collects: the `1/n` teleport share
     val n = nodes.count().toDouble
+    var pinned = Set.empty[Int]
     // Personalized teleport: p(v) normalized over the NONNEGATIVE pref
-    // mass landing on actual graph nodes. `pNorm` is the V-row normalized
-    // vector plan, consumed three times at setup (influence annotation,
-    // in-link-free frame, rank init) — each consumer checkpoints, so it
-    // computes once per consumer and never per round.
-    val pNorm: Option[DataFrame] = prefs.map { case (p, pn, pw) =>
+    // mass landing on actual graph nodes, computed on frames (the exact
+    // decimal grid an oracle re-derives) and then keyed like the ranks.
+    // It is both the rank init and, times (1-d), the teleport term of
+    // every round, so it is persisted.
+    val pNorm: Option[RDD[(Any, Double)]] = prefs.map { case (p, pn, pw) =>
       // per-node weights through the same decimal grid as the total: a
       // plain double sum's value depends on partial-agg order, so a node
       // named twice in prefs would get a parallelism-dependent p(v)
       // (ADVICE r9) — dsum keeps every per-node weight bit-deterministic
       // and on the exact grid the normalizing total already uses
       val prefAgg = p
-        .select(col(pn).as("__v"), col(pw).cast("double").as("__pw"))
+        .select(col(pn).cast(node.dataType).as("__v"),
+          col(pw).cast("double").as("__pw"))
         .groupBy("__v").agg(Det.dsum(col("__pw")).as("__pw"))
+      val nodeFrame = spark.createDataFrame(nodes.keys.map(Row(_)),
+        StructType(Seq(node.copy(name = "__v"))))
       // exact decimal total: a double sum's value depends on partial-agg
       // order, and this scalar must match an oracle's re-derivation
-      val stats = nodes.join(prefAgg, Seq("__v"))
-        .agg(graft.Det.dsum(col("__pw")).as("__tot"),
-          min("__pw").as("__mn")).head()
+      val stats = nodeFrame.join(prefAgg, Seq("__v"))
+        .agg(Det.dsum(col("__pw")).as("__tot"), min("__pw").as("__mn"))
+        .head()
       require(!stats.isNullAt(0),
         "personalization weights name no graph nodes")
       require(stats.getDouble(1) >= 0,
@@ -321,150 +368,121 @@ object GraphOps {
       val tot = stats.getDouble(0)
       require(tot > 0 && !tot.isNaN && !tot.isInfinite,
         s"personalization weights must have positive mass on graph nodes, got $tot")
-      nodes.join(prefAgg, Seq("__v"), "left")
+      val pv = nodeFrame.join(prefAgg, Seq("__v"), "left")
         .select(col("__v"),
           (coalesce(col("__pw"), lit(0.0)) / lit(tot)).as("__p"))
+        .rdd.map(r => (r.get(0), r.getDouble(1))).partitionBy(part)
+      pinned += Pins.pinTracked(pv)(_.persist(StorageLevel.MEMORY_AND_DISK))
+      pv
     }
-    // influence = edge weights 1/outdeg. Built (or read) and shuffled
-    // ONCE: hash-partitioned on the round join key and checkpointed,
-    // consumed every round. Personalized runs additionally ANNOTATE each
-    // edge with the DESTINATION's teleport term `__td = (1-d)·p(dst)` —
-    // functionally dependent on `__d`, so the per-round aggregate
-    // recovers it with a `max` in the same pass and no round ever joins
-    // a teleport frame (the first formulation broadcast a V-row teleport
-    // table every round; a stationary per-edge column costs one setup
-    // join instead).
-    //
-    // In-link-free nodes ride the SAME relation as zero-weight
-    // self-edges (r19 — the oracle's own `infl` formulation): the
-    // round's aggregation then emits their constant teleport row itself
-    // (acc = r·0 → (1-d)/n + d·0, bit-identical to the old unioned
-    // constant; the personalized term rides the annotation like every
-    // other edge), so the per-round union of the old `noInbound`
-    // constant frame disappears and every round is exactly ONE join +
-    // ONE aggregation. Empty on symmetrized graphs, ≤V extra rows on
-    // any graph. The repartition pins an EXPLICIT partition count so
-    // AQE cannot coalesce it into a partitioning the checkpointed
-    // relation no longer reports — the round join then sees a stable
-    // HashPartitioning on the join key across all rounds.
-    val antiIn = nodes.join(
-      weighted.select(col("__d").as("__v")).distinct(),
-      Seq("__v"), "left_anti")
-    val selfEdges = antiIn.select(col("__v").as("__s"),
-      col("__v").as("__d"), lit(0.0).as("__w"))
-    val allEdges = weighted.unionByName(selfEdges)
-    val nShuffle = spark.sessionState.conf.numShufflePartitions
-    // CACHED, not checkpointed (r19): `Dataset.localCheckpoint` on Spark
-    // 4.1 reports UnknownPartitioning to downstream plans (probed —
-    // OPTIMIZATION_r19.md, PlanSpec), so a checkpointed relation was
-    // re-exchanged by the round join EVERY round; a CacheManager persist
-    // keeps the plan (and its HashPartitioning on the join key) visible,
-    // so the E-row side of all ten rounds stays put and only the V-row
-    // rank frame moves. Spills to disk past memory (the default level);
-    // unpersist WORKS for caches, so release is via the frame itself.
-    val infl = (pNorm match {
-      case Some(nm) => allEdges.join(
-        nm.select(col("__v").as("__d"),
-          (col("__p") * lit(1 - damping)).as("__td")), Seq("__d"))
-      case None => allEdges
-    }).repartition(nShuffle, col("__s")).persist()
-    // materialize the cache NOW: its lineage reads the nodes checkpoint
-    // (self-edges, teleport annotation), whose blocks are released a few
-    // lines down — and unlike the old eager checkpoint, `persist` is lazy
-    infl.count()
+    // The stationary influence relation, keyed by source and persisted
+    // once (spilling past memory). In-link-free nodes ride it as
+    // zero-weight SELF-edges (the oracle's own `infl` formulation): each
+    // round's reduce then emits their constant teleport row itself
+    // (acc = r·0 → (1-d)/n + d·0), so no per-round union exists. Empty on
+    // symmetrized graphs, ≤V extra rows on any graph. Both sides share
+    // `part`, so the union keeps it. Each partition is stored ordered by
+    // source hash, so a source's out-edges are (nearly always) adjacent and
+    // a round looks up its rank, and casts a run of equal products, once
+    // per source instead of once per edge.
+    val selfEdges = nodes.mapPartitions(
+      _.collect { case (v, false) => v -> Edge(v, 0.0) },
+      preservesPartitioning = true)
+    val infl = bySrc.union(selfEdges).mapPartitions(
+      _.toArray.sortBy(_._1.##).iterator, preservesPartitioning = true)
+    pinned += Pins.pinTracked(infl)(_.persist(StorageLevel.MEMORY_AND_DISK))
     // init: uniform 1/n, or the normalized preference vector (the
-    // standard personalized power-iteration start — taken from pNorm
-    // directly so the init doubles are the exact division an oracle
-    // re-derives, with no (1-d) round-trip)
-    var (ranks, ranksIds) = checkpointTracked(pNorm match {
-      case Some(nm) => nm.select(col("__v"), col("__p").as("__r"))
-      case None => nodes.select(col("__v"), (lit(1.0) / lit(n)).as("__r"))
-    })
-    release(spark, nodesIds) // all consumers are materialized
-    val deltas = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var round = 0
-    while (round < iters) {
-      val next = pNorm match {
-        case Some(_) => iterationRoundPersonalized(infl, ranks, damping)
-        case None => iterationRound(infl, ranks, damping, n)
-      }
-      round += 1
+    // standard personalized power-iteration start, with no (1-d)
+    // round-trip)
+    var ranks: RDD[(Any, Double)] =
+      pNorm.getOrElse(nodes.mapValues(_ => 1.0 / n))
+    val teleport: Either[Double, RDD[(Any, Double)]] = pNorm match {
+      case Some(pv) => Right(pv.mapValues(_ * (1 - damping)))
+      case None => Left((1 - damping) / n)
+    }
+    var barrier = Set.empty[Int]
+    val deltas = mutable.ArrayBuffer.empty[Double]
+    for (round <- 1 to iters) {
+      val next = rankRound(infl, ranks, damping, teleport)
       if (trackDeltas) {
         // diagnostics cadence: materialize EVERY round; the L1 movement
-        // is an exact decimal sum (order-independent, deterministic)
-        val (ck, ckIds) = checkpointTracked(next)
-        deltas += ck
-          .join(ranks.select(col("__v"), col("__r").as("__rp")), Seq("__v"))
-          .agg(sum(abs(col("__r") - col("__rp")).cast(DecimalType(38, 18)))
-            .cast("double")).head().getDouble(0)
-        release(spark, ranksIds)
-        ranks = ck
-        ranksIds = ckIds
+        // is an exact decimal sum (order-independent, deterministic), and
+        // computing it is the barrier's materializing action
+        val id = Pins.pinTracked(next)(_.localCheckpoint())
+        deltas += next.zipPartitions(ranks) { (cur, prev) =>
+          val rp = prev.toMap
+          Iterator(cur.foldLeft(Exact.Zero) { case (acc, (v, r)) =>
+            acc + Exact(math.abs(r - rp(v))) })
+        }.fold(Exact.Zero)(_ + _).toDouble
+        Pins.release(spark, barrier) // the superseded barrier, by RDD id
+        barrier = Set(id)
       } else if (round % CkptEvery == 0 && round < iters) {
-        // Lineage barrier every CkptEvery rounds. The FINAL round stays
-        // lazy (≤ CkptEvery-1 joins deep) — the caller's one consumption
-        // plans it directly; a terminal checkpoint would be a wasted
-        // materialization plus blocks nobody could ever free.
-        val (ck, ckIds) = checkpointTracked(next)
-        release(spark, ranksIds) // superseded barrier's blocks, by RDD id
-        ranks = ck
-        ranksIds = ckIds
-      } else ranks = next
+        // Lineage barrier every CkptEvery rounds. The FINAL rounds stay
+        // lazy — the caller's one consumption runs them; a terminal
+        // barrier would be a wasted job plus blocks nobody could free.
+        val id = Pins.pinTracked(next)(_.localCheckpoint())
+        next.count()
+        Pins.release(spark, barrier)
+        barrier = Set(id)
+      }
+      ranks = next
     }
-    val out = ranks.select(col("__v").as("node"), col("__r").as("rank"))
-    // The cached influence relation and the last barrier's blocks stay
-    // pinned until the caller has consumed `out` (they back its lineage).
-    // They ride along so the managed entry points can hand the caller a
-    // release handle; the unmanaged ones rely on Bench's release barrier
-    // (clearCache + getPersistentRDDs sweep) after the action.
-    (out, deltas.toSeq, ranksIds, Seq(infl))
+    val out = spark.createDataFrame(ranks.map { case (v, r) => Row(v, r) },
+      StructType(Seq(node.copy(name = "node"),
+        StructField("rank", DoubleType))))
+    // The influence relation, the teleport vector and the last barrier
+    // stay pinned until the caller has consumed `out` (they back its
+    // lineage); their ids ride along so the managed entry points can hand
+    // the caller a release handle, while the unmanaged ones rely on
+    // Bench's release barrier (getPersistentRDDs sweep) after the action.
+    (out, deltas.toSeq, pinned ++ barrier)
   }
 
   /** One power-iteration round:
-    * r'(v) = (1-d)/n + d * Σ_{(u,v) ∈ E} r(u)/outdeg(u). The decimal
-    * cast happens per product (magnitude ≤ max rank, no overflow at
-    * precision 38) and the exact sum collapses to double once.
+    * r'(v) = t(v) + d · Σ_{(u,v) ∈ E} r(u)·w(u,v), with the teleport term
+    * t = (1-d)/n (`Left`) or (1-d)·p(v) (`Right`, keyed like the ranks).
     *
-    * Extracted so PlanSpec can pin the round's physical plan (the
-    * checkpoints in the loop truncate lineage, so the plan is invisible
-    * from the operator's result): SHUFFLED-HASH join of the V-row rank
-    * frame (build side) against the stationary influence relation —
-    * r19, replacing the per-round broadcast: a broadcast rebuilt every
-    * round collects the V-row frame to the driver ten times per run
-    * (and past the threshold degraded to a per-round SORT-merge), while
-    * the hash build of an already co-partitioned V-row slice is
-    * executor-side, driver-free, and sort-free at every scale. Measured
-    * on the bench graph (OPTIMIZATION_r19.md, alternating reps under
-    * load):
-    * 10.2-12.9 s vs the broadcast loop's 13.0-31.8 s, and the spread
-    * tightens because no per-round driver collect rides the box load.
-    * Partial decimal aggregation stays map-side; one exchange on the
-    * destination key per round.
-    */
-  private[graft] def iterationRound(infl: DataFrame, ranks: DataFrame,
-      damping: Double, n: Double): DataFrame =
-    infl.join(ranks.hint("shuffle_hash"), col("__s") === col("__v"))
-      .groupBy(col("__d"))
-      .agg(sum((col("__r") * col("__w")).cast(DecimalType(38, 18)))
-        .as("__acc"))
-      .select(col("__d").as("__v"),
-        (lit(1 - damping) / lit(n) +
-          lit(damping) * col("__acc").cast("double")).as("__r"))
-
-  /** [[iterationRound]] with a per-node teleport term: the uniform
-    * `(1-d)/n` literal becomes the edge-annotated `__td` column recovered
-    * by `max` in the SAME aggregation pass (`__td` is functionally
-    * dependent on the grouping key `__d`) — the personalized round's plan
-    * is structurally identical to the uniform round's: one join, one
-    * exchange, no teleport frame in the loop. */
-  private[graft] def iterationRoundPersonalized(infl: DataFrame,
-      ranks: DataFrame, damping: Double): DataFrame =
-    infl.join(ranks.hint("shuffle_hash"), col("__s") === col("__v"))
-      .groupBy(col("__d"))
-      .agg(sum((col("__r") * col("__w")).cast(DecimalType(38, 18)))
-        .as("__acc"), max(col("__td")).as("__t"))
-      .select(col("__d").as("__v"),
-        (col("__t") + lit(damping) * col("__acc").cast("double")).as("__r"))
+    * `infl`, `ranks` and a teleport RDD must share one partitioner, which
+    * makes the round narrow in all of them: each partition's edges stream
+    * against a hash map of the same partition's rank slice. Every product
+    * is cast to DECIMAL(38,18) as Spark's cast does ([[Exact]]) — once
+    * per run of adjacent edges with the same source and weight, which is
+    * every out-edge of a source when `infl` is stored grouped by source
+    * and weighted 1/outdeg, as `runPageRank` stores it — summed
+    * exactly by a map-side-combined `reduceByKey` on the destination —
+    * the round's ONE shuffle — and collapsed to double once, in the
+    * operand order of the DuckDB oracle, so ranks are bit-identical to
+    * it. An edge whose source is null contributes nothing, as in an
+    * equi-join. */
+  private[graft] def rankRound(infl: RDD[(Any, Edge)],
+      ranks: RDD[(Any, Double)], damping: Double,
+      teleport: Either[Double, RDD[(Any, Double)]]): RDD[(Any, Double)] = {
+    val part = infl.partitioner.getOrElse(
+      throw new IllegalArgumentException("influence RDD is not partitioned"))
+    require(ranks.partitioner.contains(part) &&
+      teleport.forall(_.partitioner.contains(part)),
+      "rank and teleport RDDs must share the influence RDD's partitioner")
+    val acc = infl.zipPartitions(ranks) { (edges, slice) =>
+      val r = mutable.HashMap.empty[Any, Double]
+      slice.foreach { case (v, x) => r.update(v, x) }
+      var src: Any = null
+      var rs, w = 0.0
+      var c: Exact = null
+      edges.collect { case (s, e) if s != null =>
+        if (c == null || s != src) { src = s; rs = r(s); c = null }
+        if (c == null || e.w != w) { w = e.w; c = Exact(rs * w) }
+        e.dst -> c
+      }
+    }.reduceByKey(part, _ + _)
+    teleport match {
+      case Left(t) => acc.mapValues(a => t + damping * a.toDouble)
+      case Right(tp) =>
+        acc.zipPartitions(tp, preservesPartitioning = true) { (sums, ts) =>
+          val t = ts.toMap
+          sums.map { case (v, a) => v -> (t(v) + damping * a.toDouble) }
+        }
+    }
+  }
 
   /** The order↔part co-purchase graph: an undirected bipartite graph with
     * real degree spread (orders span 1..7 parts; part in-degree follows

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Tracked-checkpoint plumbing shared by the components that hold
@@ -31,8 +32,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`PipelineOps.trainReadyIncremental` eagerly checkpoints fate
   * barriers and formatter intermediates that its returned plan no
   * longer references, so they are invisible to leaf inspection). Every
-  * [[checkpointTracked]] call takes the lock too, so no tracked
-  * checkpoint can be pinned inside a concurrent sweep window. Ad-hoc
+  * [[checkpointTracked]] and [[pinTracked]] call takes the lock too, so
+  * no tracked pin can be taken inside a concurrent sweep window. Ad-hoc
   * UNTRACKED persists (a caller's own `localCheckpoint`/`cache` on the
   * same SparkContext) during a cursor ingest remain unsafe — documented
   * on both cursors.
@@ -77,13 +78,14 @@ private[graft] object Pins {
     new ThreadLocal[scala.collection.mutable.Set[Int]]
 
   /** TEST HOOK (VERDICT r18 #2): run `body` recording every RDD id that
-    * [[checkpointTracked]] pins ON THIS THREAD, returning the body's
-    * result plus the recorded ids. GraphSpec's managed-release assertion
-    * uses this to check that a managed run's OWN pins are gone after
-    * `release()` — the previous global `getPersistentRDDs.size`
-    * before/after comparison raced the ContextCleaner's async cleanup of
-    * NEIGHBOR suites' blocks in the shared session and produced the
-    * suite's only flaky failure in six rounds. Thread-local, so a
+    * [[checkpointTracked]] or [[pinTracked]] pins ON THIS THREAD,
+    * returning the body's result plus the recorded ids. GraphSpec's
+    * managed-release assertion uses this to check that a managed run's
+    * OWN pins are gone after `release()` — the previous global
+    * `getPersistentRDDs.size` before/after comparison raced the
+    * ContextCleaner's async cleanup of NEIGHBOR suites' blocks in the
+    * shared session and produced the suite's only flaky failure in six
+    * rounds. Thread-local, so a
     * concurrent job's checkpoints (an AnnCursor ingest beside the test)
     * are never misattributed to the collected run. */
   private[graft] def collectTracked[T](body: => T): (T, Set[Int]) = {
@@ -110,6 +112,20 @@ private[graft] object Pins {
         "localCheckpoint produced no LogicalRDD leaf — cannot track blocks")
       Option(collector.get).foreach(_ ++= ids)
       (out, ids)
+    } finally rw.readLock().unlock()
+  }
+
+  /** Pin `rdd` with `pin` (a `persist` or `localCheckpoint` of it) and
+    * return its id, the handle [[release]] frees it by. The RDD's own id is
+    * the pinned one, so the attribution is exact; like
+    * [[checkpointTracked]], the pin is taken under the read lock and
+    * recorded in the [[collectTracked]] collector. */
+  def pinTracked[T](rdd: RDD[T])(pin: RDD[T] => RDD[T]): Int = {
+    rw.readLock().lock()
+    try {
+      pin(rdd)
+      Option(collector.get).foreach(_ += rdd.id)
+      rdd.id
     } finally rw.readLock().unlock()
   }
 

@@ -3,6 +3,7 @@ package graft.sources
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Persisted intermediates the DuckDB oracle can read.
   *
@@ -17,15 +18,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The path is ABSOLUTE and scale-factor-suffixed because `oracleSql` is
   * a static string: the driver's gate always runs at sf0.01, so the SQL
-  * hardcodes that directory; a Verify/Bench run at another SF writes its
+  * embeds that directory; a Verify/Bench run at another SF writes its
   * own suffix and never clobbers the gate's input. Unlike
   * [[Materialize]] (process-private scratch), these files intentionally
   * OUTLIVE the Spark JVM — the gate's DuckDB pass runs after it exits.
   */
 object OracleAux {
 
-  /** Root for emitted tables — inside the repo's build dir (gitignored). */
-  val Root = "/root/repo/target/oracle_aux"
+  /** Root for emitted tables: `target/oracle_aux` (gitignored) under the
+    * working directory the JVM started in, resolved once — the embedded
+    * gate SQL names it absolutely, so a DuckDB pass run from anywhere
+    * reads the files this JVM wrote. */
+  val Root: String =
+    java.nio.file.Paths.get("target", "oracle_aux").toAbsolutePath.toString
 
   /** Every aux name a [[gateGlob]] call has minted this JVM — the
     * registry [[rewriteForSf]]'s invariant check runs against.
@@ -74,10 +79,13 @@ object OracleAux {
     else sql.replace(frag, s"$Root/$sf/")
   }
 
-  private val written = new ConcurrentHashMap[String, String]()
+  private val written = new ConcurrentHashMap[String, (String, StructType)]()
 
   /** Write `build` to `<Root>/<sf-basename>/<name>` (once per JVM and
     * application) and return a read-back frame of the written bytes.
+    * As in [[Materialize.table]], the schema is inferred once, when the
+    * table is published, and kept next to its path: a later read starts
+    * no schema-inference job.
     *
     * NOT computeIfAbsent (r19): aux builds NEST — pq_adc_codes builds
     * through the shared pq_adc_codebook aux — and a nested
@@ -96,10 +104,11 @@ object OracleAux {
       if (!written.containsKey(key)) {
         val p = s"$Root/$sf/$name"
         build.write.mode("overwrite").parquet(p)
-        written.put(key, p)
+        written.put(key, (p, s.read.parquet(p).schema))
         ()
       }
     }
-    s.read.parquet(written.get(key))
+    val (p, schema) = written.get(key)
+    s.read.schema(schema).parquet(p)
   }
 }

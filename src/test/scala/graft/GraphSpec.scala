@@ -9,7 +9,7 @@ import graft.operators.GraphOps
   * The reference below runs the SAME fixed-round formulation (teleport
   * (1-d)/n, edge weight 1/outdeg with parallel-edge multiplicity, sinks
   * leak) in plain driver-side doubles — so agreement checks the
-  * distributed join/agg loop, not a restatement of it. Tolerance 1e-12:
+  * distributed rank loop, not a restatement of it. Tolerance 1e-12:
   * the operator accumulates in exact decimals, the reference in doubles,
   * so bits differ at the last few places of a ~1e-1 value.
   */
@@ -147,6 +147,80 @@ class GraphSpec extends SparkSpec {
     }
     val got = df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(got == run(directed)) // checkpoint cadence never affects values
+  }
+
+  test("Exact matches Spark's DOUBLE <-> DECIMAL(38,18) casts and its exact decimal sum") {
+    // the loop's per-edge arithmetic must be the cast the DuckDB oracle
+    // and the Catalyst round it replaced both apply: sampled across
+    // magnitudes, signs, and the long/BigDecimal boundary of the sum
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.types.DecimalType
+    val rnd = new scala.util.Random(17)
+    val xs = Seq(0.0, -0.0, 1.0 / 3, 2.0 / 3, 0.15 / 7, 1e-18, 5e-19, 4.9e-19,
+      9.223372036854775807, 9.3, 123456789.123456789, 9.9e19) ++
+      Seq.fill(400)(rnd.nextDouble() * math.pow(10, rnd.nextInt(40) - 20) *
+        (if (rnd.nextBoolean()) 1 else -1)).filter(x => math.abs(x) < 1e20)
+    val dec = col("x").cast(DecimalType(38, 18))
+    val want = xs.toDF("x").select(col("x"), dec, dec.cast("double"))
+      .collect()
+    for (r <- want) {
+      val e = GraphOps.Exact(r.getDouble(0))
+      assert(e.toBig == r.getDecimal(1), s"cast of ${r.getDouble(0)}: " +
+        s"${e.toBig} vs ${r.getDecimal(1)}")
+      assert(e.toDouble.equals(r.getDouble(2)), s"round trip of ${r.getDouble(0)}")
+    }
+    // sums crossing Long.MaxValue unscaled (≈ 9.22 at scale 18) both ways
+    val terms = Seq(5.0, 4.5, -3.25, 8.0, -9.1, 1e-18, 1.0 / 7)
+    val total = terms.toDF("x").agg(sum(dec).cast("double")).head()
+      .getDouble(0)
+    assert(terms.map(GraphOps.Exact(_)).reduce(_ + _).toDouble.equals(total))
+    assert(terms.reverse.map(GraphOps.Exact(_)).reduce(_ + _).toDouble
+      .equals(total))
+    assert(intercept[ArithmeticException](GraphOps.Exact(1e21)).getMessage
+      .contains("DECIMAL(38,18)"))
+  }
+
+  test("ranks are bit-identical to the Catalyst join + aggregate round formulation") {
+    // the formulation the RDD loop replaced (and the oracle's CTE):
+    // per round, join the ranks to the influence relation (with
+    // zero-weight self-edges for in-link-free nodes), sum the
+    // DECIMAL(38,18) products per destination, add the teleport term.
+    // Heavy weights push products and sums past the unscaled-long range.
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.types.DecimalType
+    val edges = (directed ++ Seq("a" -> "b")).toDF("from", "to")
+    val heavy = Seq(("a", "b", 7.5), ("a", "d", 0.3), ("b", "c", 11.0),
+      ("b", "d", 1.0 / 3), ("c", "a", 2.5), ("e", "a", 1.0), ("e", "e", 0.2))
+      .toDF("from", "to", "w")
+    def catalyst(infl: org.apache.spark.sql.DataFrame, iters: Int) = {
+      val w = infl.toDF("__s", "__d", "__w")
+      val nodes = w.select(col("__s").as("__v"))
+        .union(w.select(col("__d").as("__v"))).distinct()
+      val n = nodes.count().toDouble
+      val self = nodes.join(w.select(col("__d").as("__v")), Seq("__v"),
+        "left_anti").select(col("__v").as("__s"), col("__v").as("__d"),
+        lit(0.0).as("__w"))
+      val all = w.unionByName(self)
+      var r = nodes.select(col("__v"), (lit(1.0) / lit(n)).as("__r"))
+      for (_ <- 1 to iters)
+        r = all.join(r, col("__s") === col("__v")).groupBy(col("__d"))
+          .agg(sum((col("__r") * col("__w")).cast(DecimalType(38, 18)))
+            .as("__acc"))
+          .select(col("__d").as("__v"), (lit(1 - 0.85) / lit(n) +
+            lit(0.85) * col("__acc").cast("double")).as("__r"))
+          .localCheckpoint()
+      r.collect().map(x => x.getString(0) -> x.getDouble(1)).toMap
+    }
+    def loop(infl: org.apache.spark.sql.DataFrame, iters: Int) =
+      GraphOps.pageRank(edges, "from", "to", iters = iters,
+        influence = Some(infl))
+        .collect().map(x => x.getString(0) -> x.getDouble(1)).toMap
+    val uniform = GraphOps.influenceRelation(edges, "from", "to")
+    assert(loop(uniform, 10) == catalyst(uniform, 10))
+    assert(loop(heavy, 4) == catalyst(heavy, 4))
+    assert(loop(heavy, 4).values.exists(_ > 100), "weights too light")
   }
 
   test("personalization guards fire with actionable messages") {

@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.{Dependency, HashPartitioner, OneToOneDependency, ShuffleDependency}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
+
 /** Physical-plan guards: the 100 TB properties VERDICT/SURVEY call for are
   * asserted here so a plan regression fails the suite, not just the bench.
   * Each test renders the executed plan and checks the operator shape —
@@ -370,66 +375,96 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Join"), s"cohort anchor must be a window, not a join:\n$p")
   }
 
-  test("pageRank's iteration round: shuffled-hash rank build, stationary edges, no driver collect") {
-    // the loop's checkpoints truncate lineage, so the round plan is pinned
-    // on iterationRound directly, with infl in the state pageRank leaves
-    // it: hash-partitioned on the join key and checkpointed. r19: the
-    // V-row rank frame is the BUILD side of a shuffled-hash join — a
-    // per-round broadcast collected the rank frame to the driver ten
-    // times per run (and past the threshold degraded to per-round
-    // sort-merge); the hash build of a co-partitioned V-row slice is
-    // executor-side and sort-free at every scale.
-    val s = spark
-    import s.implicits._
-    import org.apache.spark.sql.functions.col
-    val infl = Seq(("a", "b", 0.5), ("a", "c", 0.5), ("b", "a", 1.0),
-      ("a", "a", 0.0), ("b", "b", 0.0), ("c", "c", 0.0))
-      .toDF("__s", "__d", "__w")
-      .repartition(col("__s")).localCheckpoint(eager = true)
-    val ranks = Seq(("a", 0.4), ("b", 0.3), ("c", 0.3)).toDF("__v", "__r")
-    val p = operators.GraphOps.iterationRound(infl, ranks, 0.85, 3.0)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("ShuffledHashJoin"),
-      s"rank frame must hash-build against the stationary edges:\n$p")
-    assert(p.contains("BuildRight"),
-      s"the V-row rank frame (right side) must be the build side:\n$p")
-    assert(!p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"),
-      s"no per-round driver collect and no per-round sort:\n$p")
-    assert(!p.contains("CartesianProduct") &&
-      !p.contains("BroadcastNestedLoopJoin"), s"no all-pairs plan:\n$p")
-    // decimal accumulation is pushed map-side (partial agg below the shuffle)
-    assert(p.contains("partial_sum") || p.contains("partial sum") ||
-      p.linesIterator.count(_.contains("HashAggregate")) >= 2,
-      s"expected map-side partial aggregation:\n$p")
-    infl.unpersist()
+  /** The RDDs the rank loop left behind `ranks`: every RDD reachable
+    * from the frame's `LogicalRDD` leaf, not descending below `stop`. */
+  private def rankLineage(ranks: DataFrame,
+      stop: RDD[_] => Boolean): Seq[(RDD[_], Seq[Dependency[_]])] = {
+    val roots = ranks.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+    assert(roots.size == 1, s"expected one LogicalRDD leaf, got $roots")
+    val seen = scala.collection.mutable.LinkedHashMap
+      .empty[Int, (RDD[_], Seq[Dependency[_]])]
+    def walk(r: RDD[_]): Unit =
+      if (!seen.contains(r.id)) {
+        val deps = if (stop(r)) Nil else r.dependencies
+        seen(r.id) = (r, deps)
+        deps.foreach(d => walk(d.rdd))
+      }
+    walk(roots.head)
+    seen.values.toSeq
   }
 
-  test("personalized round: same shape as the uniform round — one join, one agg") {
-    // the teleport term rides the influence relation as a per-edge __td
-    // column recovered by max inside the round's aggregation, so the
-    // personalized loop must plan EXACTLY like the uniform one: no
-    // teleport join, no per-round V-row driver collect
+  private def rankGraph = {
     val s = spark
     import s.implicits._
-    import org.apache.spark.sql.functions.col
-    val infl = Seq(("a", "b", 0.5, 0.0), ("a", "c", 0.5, 0.0),
-      ("b", "a", 1.0, 0.15))
-      .toDF("__s", "__d", "__w", "__td")
-      .repartition(col("__s")).localCheckpoint(eager = true)
-    val ranks = Seq(("a", 0.4), ("b", 0.3), ("c", 0.3)).toDF("__v", "__r")
-    val p = operators.GraphOps
-      .iterationRoundPersonalized(infl, ranks, 0.85)
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct") &&
-      !p.contains("BroadcastNestedLoopJoin"), s"no all-pairs plan:\n$p")
-    val lines = p.linesIterator.toVector
-    assert(lines.count(_.contains("ShuffledHashJoin")) == 1,
-      s"exactly ONE join per personalized round (rank frame only):\n$p")
-    assert(!p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"),
-      s"no per-round driver collect and no per-round sort:\n$p")
-    assert(p.contains("max(__td"),
-      s"the teleport term must be recovered by max in the same agg:\n$p")
-    infl.unpersist()
+    Seq("a" -> "b", "b" -> "c", "c" -> "a", "a" -> "d", "b" -> "d",
+      "c" -> "d", "e" -> "a").toDF("from", "to")
+  }
+
+  private def rankRuns(iters: Int) = {
+    val s = spark
+    import s.implicits._
+    Seq("uniform" -> operators.GraphOps.pageRankManaged(rankGraph,
+        "from", "to", iters = iters),
+      "personalized" -> operators.GraphOps.personalizedPageRankManaged(
+        rankGraph, "from", "to", Seq(("a", 1.0)).toDF("node", "w"),
+        "node", "w", iters = iters))
+  }
+
+  test("rank loop: edges, ranks and teleport share one HashPartitioner; each zip is narrow") {
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    rankRuns(iters = 7).foreach { case (name, run) =>
+      try {
+        // the barrier (round 5) is checkpointed: below it is no round
+        val zips = rankLineage(run.ranks, _.isCheckpointed).filter {
+          case (r, _) => !r.isCheckpointed &&
+            r.getClass.getSimpleName.startsWith("ZippedPartitions")
+        }
+        // rounds 6 and 7 since the barrier: one edge⋈rank zip each, plus
+        // one teleport zip each when personalized
+        val perRound = if (name == "uniform") 1 else 2
+        assert(zips.size == 2 * perRound, s"$name: zips ${zips.map(_._1)}")
+        zips.foreach { case (z, deps) =>
+          assert(deps.forall(_.isInstanceOf[OneToOneDependency[_]]),
+            s"$name: zip $z has a wide dependency: $deps")
+          deps.foreach(d => assert(d.rdd.partitioner.contains(part),
+            s"$name: zip input ${d.rdd} is partitioned by " +
+              s"${d.rdd.partitioner}, not $part"))
+        }
+        assert(run.ranks.count() == 5)
+      } finally run.release()
+    }
+  }
+
+  test("rank loop: each round adds exactly one ShuffleDependency") {
+    // the barrier at round 5 truncates the lineage and the influence
+    // relation (and teleport vector) are persisted, so what is left above
+    // them is the lazy rounds since the barrier: one shuffle each
+    for (iters <- Seq(6, 8)) rankRuns(iters).foreach { case (name, run) =>
+      try {
+        val shuffles = rankLineage(run.ranks,
+          _.getStorageLevel != StorageLevel.NONE)
+          .flatMap(_._2).count(_.isInstanceOf[ShuffleDependency[_, _, _]])
+        assert(shuffles == iters - 5,
+          s"$name, $iters rounds: $shuffles shuffles above the barrier")
+      } finally run.release()
+    }
+  }
+
+  test("rank loop: one managed 10-round pagerank run plus its consumption takes <= 6 jobs") {
+    // the Catalyst round loop paid one job per AQE stage: 27 per run
+    operators.GraphOps.memoBuilds.foreach { case (_, build) =>
+      build(spark, sf).write.format("noop").mode("overwrite").save()
+    }
+    val managed = SparkEntry.managedQueries("q_graph_pagerank")
+    val (rows, jobs) = jobsDuring {
+      val (frame, release) = managed(spark, sf)
+      try frame.collect() finally release()
+    }
+    assert(rows.nonEmpty)
+    assert(jobs.size <= 6,
+      s"${jobs.size} jobs for one rank run:\n${jobs.mkString("\n")}")
   }
 
   test("q_pq_adc_verify: probes and codebook broadcast; one shuffle (the pair aggregate)") {

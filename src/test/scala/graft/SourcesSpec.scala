@@ -149,4 +149,28 @@ class SourcesSpec extends SparkSpec {
       OracleAux.rewriteForSf(foreign, "/root/testdata/sf0.1"))
     assert(ex.getMessage.contains("gateGlob"), ex.getMessage)
   }
+
+  test("OracleAux.Root is target/oracle_aux under the working directory") {
+    import graft.sources.OracleAux
+    val cwd = System.getProperty("user.dir")
+    assert(OracleAux.Root.startsWith(cwd + java.io.File.separator),
+      s"${OracleAux.Root} is not under $cwd")
+    assert(OracleAux.Root ==
+      java.nio.file.Paths.get(cwd, "target", "oracle_aux").toString)
+  }
+
+  test("a later OracleAux.table read starts no Spark job and equals a plain parquet read") {
+    import graft.sources.OracleAux
+    val build = spark.range(0, 20, 1, 2).toDF("id")
+      .withColumn("v", array(col("id").cast("float")))
+    val sfDir = "/nonexistent/sf_sourcesspec"
+    OracleAux.table(spark, sfDir, "spec_schema")(build)
+    val (aux, jobs) =
+      jobsDuring(OracleAux.table(spark, sfDir, "spec_schema")(build))
+    assert(jobs.isEmpty, s"second read started $jobs")
+    val plain = spark.read.parquet(s"${OracleAux.Root}/sf_sourcesspec/spec_schema")
+    assert(aux.schema == plain.schema, s"${aux.schema} vs ${plain.schema}")
+    assert(aux.orderBy("id").collect().toSeq ==
+      plain.orderBy("id").collect().toSeq)
+  }
 }

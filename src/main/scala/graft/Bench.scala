@@ -130,89 +130,63 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     var failed = List.empty[String]
-    // Per-query suite-state ledger (r9): what a query left pinned before
-    // the release barrier, and where the heap sat after it. Written to the
-    // file JSON under "state" — when a suite median disagrees with an
-    // isolated median, this is the first place to look (r8's q_graph_
-    // pagerank ran 4.5× its isolated time with no code change; nothing in
-    // the JSON could say whether blocks or load were to blame).
+    // Per-query suite-state ledger (r9): how many RDDs were pinned when
+    // the query's result had been consumed, how many stayed pinned after
+    // its scope was released (a leak: nothing else frees them), and where
+    // the heap sat after. Written to the file JSON under "state" — when a
+    // suite median disagrees with an isolated median, this is the first
+    // place to look (r8's q_graph_pagerank ran 4.5× its isolated time
+    // with no code change; nothing in the JSON could say whether blocks
+    // or load were to blame).
     val stateLedger =
-      scala.collection.mutable.LinkedHashMap.empty[String, (Int, Long)]
-
-    def releaseBlocks(): Unit =
-      // Release any blocks a query pinned (localCheckpoint intermediates):
-      // leaked blocks from earlier queries showed up as multi-second GC
-      // noise in LATER queries' timings. BLOCKING: an async unpersist
-      // returns immediately and the removal work then runs concurrently
-      // with the NEXT query's timed section — the wait belongs here,
-      // between the timers.
-      {
-        // Cached frames (none expected — memos are parquet-backed scans,
-        // not .cache()d — but a future operator must not leak one into its
-        // neighbors' timings): clearCache() is a no-op when empty.
-        spark.sqlContext.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        // One explicit GC between timed sections: in a single shared JVM a
-        // heavy query's garbage otherwise lands in a NEIGHBOR's timed
-        // section (q_dedup_substring measured 1.2s isolated vs 5.1s
-        // mid-suite with identical plans). ~100ms per call, paid OUTSIDE
-        // the timers.
-        System.gc()
-      }
+      scala.collection.mutable.LinkedHashMap.empty[String, (Int, Int, Long)]
 
     // Returns (wall time, did-the-query-pin-blocks). Wall time is -1.0
     // for the rep in which a failure occurred — so the file JSON's "runs"
     // arrays are self-describing (a failed rep's elapsed time is not a
     // measurement). The block flag identifies localCheckpoint-heavy
-    // queries at runtime (no hardcoded list to rot).
-    // Queries with a managed rendering (QDef.managed — the graph
-    // queries' RankRun handles) run through it: the caller-facing
-    // release path is the one exercised under load, and the global
-    // sweep below degrades to a backstop that finds nothing of theirs.
-    val managedMap = SparkEntry.managedQueries
+    // queries at runtime (no hardcoded list to rot). The build and its
+    // consumption run in one pin scope, released outside the timer.
     def timeOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Boolean) = {
-      var cleanup: () => Unit = () => ()
       // Crash attribution (VERDICT r18 #1a): the r18 driver run died
       // with exit 52 and nothing named the in-flight query — the marker
       // lands in the captured tail BEFORE the timed section, so a
       // crashed run always names its killer.
       System.err.println(s"[bench] running: $name")
       val t0 = System.nanoTime()
-      val ok =
+      val scope =
         try {
-          val df = managedMap.get(name) match {
-            case Some(m) =>
-              val (d, c) = m(spark, sfDir); cleanup = c; d
-            case None => fn(spark, sfDir)
-          }
-          df.write.format("noop").mode("overwrite").save()
-          true
+          Some(graft.operators.Pins.scoped(
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save())._2)
         } catch {
           case e: Throwable =>
             if (!failed.contains(name)) failed ::= name
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            false
+            None
         }
       val sec = (System.nanoTime() - t0) / 1e9
       val pinnedCount = spark.sparkContext.getPersistentRDDs.size
-      // handle release first (outside the timer, like the sweep — r10
-      // numbers stay comparable); failures are LOGGED (ADVICE r11: a
-      // silently-swallowed release regression would hide behind the
-      // global sweep) and then fall through to the sweep
-      try cleanup() catch {
-        case e: Throwable => System.err.println(
-          s"[bench] $name managed cleanup FAILED (global sweep will " +
-            s"cover it): ${e.getMessage}")
-      }
-      releaseBlocks()
+      // BLOCKING release: an async unpersist would run concurrently with
+      // the NEXT query's timed section
+      scope.foreach(_.release())
+      val leaked = spark.sparkContext.getPersistentRDDs.size
+      if (leaked > 0)
+        System.err.println(s"[bench] $name: $leaked RDDs still pinned " +
+          "after its scope was released")
+      // One explicit GC between timed sections: in a single shared JVM a
+      // heavy query's garbage otherwise lands in a NEIGHBOR's timed
+      // section (q_dedup_substring measured 1.2s isolated vs 5.1s
+      // mid-suite with identical plans). ~100ms per call, paid OUTSIDE
+      // the timers.
+      System.gc()
       val heapMB = (Runtime.getRuntime.totalMemory() -
         Runtime.getRuntime.freeMemory()) / (1024 * 1024)
-      val prev = stateLedger.getOrElse(name, (0, 0L))
-      stateLedger(name) = (math.max(prev._1, pinnedCount), heapMB)
-      (if (ok) sec else -1.0, pinnedCount > 0)
+      val prev = stateLedger.getOrElse(name, (0, 0, 0L))
+      stateLedger(name) = (math.max(prev._1, pinnedCount),
+        math.max(prev._2, leaked), heapMB)
+      (if (scope.nonEmpty) sec else -1.0, pinnedCount > 0)
     }
 
     // Shared-intermediate builds, timed ONCE each (later calls are
@@ -276,9 +250,9 @@ object Bench {
     // query's successful reps — the reader's noise-vs-regression signal:
     // a median drift smaller than the spread is not evidence of anything.
     // "state" = per-query (max pinned-RDD count observed before the
-    // release barrier, post-release heap MB) — the reader's tool for
-    // attributing a suite-vs-isolated median gap to leaked blocks vs box
-    // load without re-running.
+    // scope release, max count left after it, post-release heap MB) — the
+    // reader's tool for attributing a suite-vs-isolated median gap to
+    // leaked blocks vs box load without re-running.
     def fileJson(results: Seq[(String, Double, Seq[Double])],
         guardPart: String, partial: Boolean): String = {
       val medians = results.map { case (n, m, _) => n -> m }
@@ -293,8 +267,9 @@ object Bench {
         case (k, _, rs) if rs.count(_ > 0) >= 2 =>
           "\"" + k + "\":" + math.round(spreadOf(rs) * 100) / 100.0
       }.mkString("{", ",", "}")
-      val stateJson = stateLedger.map { case (k, (pinned, heap)) =>
-        "\"" + k + "\":{\"pinned\":" + pinned + ",\"heapMB\":" + heap + "}"
+      val stateJson = stateLedger.map { case (k, (pinned, leaked, heap)) =>
+        "\"" + k + "\":{\"pinned\":" + pinned + ",\"leaked\":" + leaked +
+          ",\"heapMB\":" + heap + "}"
       }.mkString("{", ",", "}")
       val partialPart = if (partial) ""","partial":true""" else ""
       render(total, anchorTotal, anchorOk.length, medians).dropRight(1) +

@@ -10,13 +10,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *               tables, or None when the operator's semantics are not
   *               batch-SQL-expressible (driver then records a weaker
   *               rows-only check; a ScalaTest spec covers it instead).
-  * @param managed same result as `build` plus the cleanup that frees the
-  *               pinned blocks backing it (GraphOps' RankRun handles) —
-  *               consumers that control the consumption point (Bench)
-  *               prefer this form, so the caller-facing release path is
-  *               the one exercised under load instead of a global
-  *               getPersistentRDDs sweep. None for queries that pin
-  *               nothing beyond their own execution.
+  * @param managed `build` plus the release of the blocks it pinned
+  *               ([[QDef.scoped]]) — a consumer that cannot open a pin
+  *               scope itself consumes the result, then calls the
+  *               release. None for queries that pin nothing beyond
+  *               their own execution.
   */
 final case class QDef(
     name: String,
@@ -24,3 +22,13 @@ final case class QDef(
     oracle: Option[String],
     managed: Option[(SparkSession, String) => (DataFrame, () => Unit)] =
       None)
+
+object QDef {
+
+  /** The managed rendering of `build`: its result, built inside a
+    * [[graft.operators.Pins.scoped]] scope, plus that scope as the
+    * release. */
+  def scoped(build: (SparkSession, String) => DataFrame)
+      : Option[(SparkSession, String) => (DataFrame, () => Unit)] =
+    Some((s, d) => graft.operators.Pins.scoped(build(s, d)))
+}

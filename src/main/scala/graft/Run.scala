@@ -7,7 +7,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.PipelineOps
+import graft.operators.{PipelineOps, Pins}
 
 /** Config-driven END-TO-END build runner — the one command a user of the
   * reference points at a corpus to get the full training-data build this
@@ -217,16 +217,21 @@ object Run {
   /** Execute the spec ([[executeBuild]] or [[executeIngest]] by
     * `spec.mode`); returns the SUMMARY.json content (also written to
     * `spec.out/SUMMARY.json`). Separated from [[main]] so tests drive it
-    * with their own session and read the same summary a user would. */
-  def execute(s: SparkSession, spec: Spec): String = spec.mode match {
-    case "ingest" => executeIngest(s, spec)
-    case "stats" => executeStats(s, spec)
-    case "compact" => executeCompact(s, spec)
-    case "retrain" => executeRetrain(s, spec)
-    case "audit" => executeAudit(s, spec)
-    case "recluster" => executeRecluster(s, spec)
-    case "repair" => executeRepair(s, spec)
-    case _ => executeBuild(s, spec)
+    * with their own session and read the same summary a user would.
+    * Every block a mode pins is released before it returns. */
+  def execute(s: SparkSession, spec: Spec): String = {
+    val (summary, pins) = Pins.scoped(spec.mode match {
+      case "ingest" => executeIngest(s, spec)
+      case "stats" => executeStats(s, spec)
+      case "compact" => executeCompact(s, spec)
+      case "retrain" => executeRetrain(s, spec)
+      case "audit" => executeAudit(s, spec)
+      case "recluster" => executeRecluster(s, spec)
+      case "repair" => executeRepair(s, spec)
+      case _ => executeBuild(s, spec)
+    })
+    pins.release()
+    summary
   }
 
   /** `"mode": "compact"` — maintenance for the APPEND-mode artifacts:
@@ -2004,10 +2009,9 @@ object Run {
     // the increment's rows only — prior rows pass through the build
     // bit-identical and are ALREADY on disk. Materialized eagerly so
     // the append below never reads the path it writes.
-    val incRows = built
+    val incRows = Pins.checkpoint(built
       .join(inc.select(col(spec.id).as("doc_id")), Seq("doc_id"),
-        "left_semi")
-      .localCheckpoint(true)
+        "left_semi"))
 
     // the crash-safe journal: inventories + backups land BEFORE the
     // first mutation (everything above is read-only — the label run and
@@ -2029,9 +2033,8 @@ object Run {
       .select(col(spec.id).as("doc_id"), col(spec.text).as("text"))
       .join(incRows.filter(col("chunk").isNotNull).select("doc_id"),
         Seq("doc_id"), "left_semi")
-    val region = PipelineOps.readWindows(s, s"$out/windows",
-        spec.chunksPerPart, fromChunk = Some(partLo))
-      .localCheckpoint(true)
+    val region = Pins.checkpoint(PipelineOps.readWindows(
+      s, s"$out/windows", spec.chunksPerPart, fromChunk = Some(partLo)))
     PipelineOps.writeWindowsIngest(
       PipelineOps.packExamplesTokensIncremental(region,
         PipelineOps.formattedToks(incKept, spec.formatter,
@@ -2143,7 +2146,6 @@ object Run {
       .agg(count(lit(1)).as("n"),
         coalesce(sum("n_tokens"), lit(0L)).as("t"))
       .head()
-    region.unpersist(); incRows.unpersist()
     val fateLines = incFates.map(r =>
       s"""{"fate":"${esc(r.getAs[String]("fate"))}","n_docs":${
         r.getAs[Long]("n_docs")},"tok_total":${
@@ -2281,7 +2283,7 @@ object Run {
         "(retried ingest).")
       return
     }
-    val standing = s.read.parquet(path).localCheckpoint(true)
+    val standing = Pins.checkpoint(s.read.parquet(path))
     try {
       val nStanding = standing.count()
       val staging = path + "__advance"
@@ -2296,7 +2298,7 @@ object Run {
       rmTree(Paths.get(path))
       faultPoint(spec, s"advance:swap:$rel")
       Files.move(Paths.get(staging), Paths.get(path))
-    } finally standing.unpersist()
+    } finally Pins.release(standing)
   }
 
   private def warnNoProfile(path: String): Unit =

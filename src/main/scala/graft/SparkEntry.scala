@@ -33,14 +33,6 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.build).toMap
 
-  /** Managed renderings (result + block-release handle) for the queries
-    * that pin checkpoint blocks — Bench consumes these so the
-    * caller-facing release path (GraphOps.RankRun) is the one exercised
-    * under load. NOT part of the driver contract. */
-  def managedQueries
-      : Map[String, (SparkSession, String) => (DataFrame, () => Unit)] =
-    all.flatMap(q => q.managed.map(q.name -> _)).toMap
-
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
     * (driver records a weaker rows-only check; ScalaTest covers them). */

@@ -20,8 +20,13 @@ object Verify {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        // the build and its consumption in one pin scope; whatever is
+        // still pinned once it is released is a leak that nothing frees
+        graft.operators.Pins.scoped(fn(spark, sfDir).coalesce(1).write
+          .mode("overwrite").parquet(s"$outDir/$name"))._2.release()
+        val leaked = spark.sparkContext.getPersistentRDDs.size
+        require(leaked == 0,
+          s"$leaked RDDs still pinned after the query's scope was released")
         // DuckDB-free local sanity (VERDICT r13 #1b): re-read the bytes
         // that actually landed and record the row count, so the builder's
         // own gate result survives on disk even when the driver's
@@ -33,12 +38,6 @@ object Verify {
         errors ::= name -> s"${e.getClass.getSimpleName}: ${e.getMessage}"
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Queries that materialize an intermediate (localCheckpoint — the
-      // dedup family's shared shingle index) have no end-of-query hook to
-      // release it; drop finished queries' blocks so they can't pile up
-      // across the 60+ query loop.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL, or a control char in an

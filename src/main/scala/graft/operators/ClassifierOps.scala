@@ -87,12 +87,12 @@ object ClassifierOps {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(lr > 0, s"lr must be > 0, got $lr")
     val s = rows.sparkSession
-    val feats = qualityFeatures(rows, id, text)
+    // slim: tokenize/join once, not per iter
+    val feats = Pins.checkpoint(qualityFeatures(rows, id, text)
       .join(labels.select(col(labelId).as("doc_id"),
         col(labelCol).cast("boolean").as("__y")), Seq("doc_id"))
       .select(col("doc_id") +: col("__y").cast("double").as("y") +:
-        FeatNames.map(col): _*)
-      .localCheckpoint(true) // slim: tokenize/join once, not per iter
+        FeatNames.map(col): _*))
     // standardization constants from one aggregation (decimal-exact)
     val statsRow = feats.agg(
       count(lit(1)).cast("double").as("n"),
@@ -124,7 +124,7 @@ object ClassifierOps {
       theta = theta.zipWithIndex.map { case (t, j) =>
         t - lr * g.getAs[Double](s"g_$j") / n }
     }
-    feats.unpersist()
+    Pins.release(feats)
     import s.implicits._
     (FeatNames.zipWithIndex.map { case (f, j) => (f, mu(j), sd(j), theta(j)) }
       :+ (("__intercept", 0.0d, 1.0d, b)))

@@ -119,7 +119,7 @@ object DedupOps {
     // localCheckpoint bounds it to a single execution; the checkpoint is
     // the capped index (≤ one row per distinct shingle, lists ≤ cap) —
     // far smaller than the corpus at any scale.
-    val grp = shingleBuckets(rows, id, text).localCheckpoint(eager = true)
+    val grp = Pins.checkpoint(shingleBuckets(rows, id, text))
     pairsFromBuckets(grp, minJaccard)
   }
 
@@ -181,11 +181,10 @@ object DedupOps {
     * LIBRARY ENTRY POINT — generic over any raw posting relation. */
   def ngramJaccardPairsFromPostings(postings: DataFrame, nDocs: Long,
       minJaccard: Double): DataFrame = {
-    val grp = postings.select(col("doc_id"), col("sh64"))
+    val grp = Pins.checkpoint(postings.select(col("doc_id"), col("sh64"))
       .groupBy("sh64")
       .agg(count(lit(1)).as("df"), collect_list("doc_id").as("ds"))
-      .filter(col("df") <= dfCapFor(nDocs))
-      .localCheckpoint(eager = true)
+      .filter(col("df") <= dfCapFor(nDocs)))
     pairsFromBuckets(grp, minJaccard)
   }
 
@@ -582,11 +581,10 @@ object DedupOps {
     // increment-sized; checkpointed because three legs consume it (the
     // df table, the union bucket build, the denominator count) — the
     // shingling kernel should run once per ingest, not thrice
-    val newPost = newBatch
+    val newPost = Pins.checkpoint(newBatch
       .select(col(id).as("doc_id"),
         explode(graft.functions.TextKernels.shingleSet64(col(text)))
-          .as("sh64"))
-      .localCheckpoint(eager = true)
+          .as("sh64")))
     val dfNew = newPost.groupBy("sh64").agg(count(lit(1)).as("dfn"))
     val capF = newBatch.agg(
       least(lit(1000L), greatest(lit(100L),
@@ -596,12 +594,11 @@ object DedupOps {
     // touches; their posting count IS the union df
     val priorHot = corpusIndex.select("doc_id", "sh64")
       .join(dfNew.select("sh64"), Seq("sh64"), "leftsemi")
-    val buckets = priorHot.unionByName(newPost)
+    val buckets = Pins.checkpoint(priorHot.unionByName(newPost)
       .groupBy("sh64")
       .agg(count(lit(1)).as("df"), collect_list("doc_id").as("ds"))
       .crossJoin(broadcast(capF))
-      .filter(col("df") <= col("max_df"))
-      .localCheckpoint(eager = true)
+      .filter(col("df") <= col("max_df")))
     val pairs = buckets
       .select(explode(graft.functions.ListPairs.listPairs(col("ds"))).as("p"))
       .groupBy(col("p.da").as("da"), col("p.db").as("db"))
@@ -638,9 +635,8 @@ object DedupOps {
         corpusIndex.select("doc_id", "sh64", "df")
           .join(priorCand, Seq("doc_id"), "leftsemi")
       else {
-        val candPost = corpusIndex.select("doc_id", "sh64")
-          .join(priorCand, Seq("doc_id"), "leftsemi")
-          .localCheckpoint(eager = true)
+        val candPost = Pins.checkpoint(corpusIndex.select("doc_id", "sh64")
+          .join(priorCand, Seq("doc_id"), "leftsemi"))
         val dfPrior = corpusIndex.select("sh64")
           .join(candPost.select("sh64").distinct(), Seq("sh64"), "leftsemi")
           .groupBy("sh64").agg(count(lit(1)).as("df"))
@@ -900,34 +896,14 @@ object DedupOps {
   // similarity pair source composes the same way). Returns one row per
   // vertex with the min-id representative of its component.
   def connectedComponents(edgeList: DataFrame, src: String, dst: String,
-      maxRounds: Int = 50): DataFrame =
-    runCC(edgeList, src, dst, maxRounds)._1
-
-  /** [[connectedComponents]] returning a [[CcRun]]: the label frame PLUS
-    * the handle that frees the checkpointed blocks backing it — prefer
-    * this form in long-lived sessions (the GraphOps RankRun lifecycle:
-    * consume `labels`, then `release()`; after release the frame cannot
-    * be recomputed). The plain form leaves the final round's blocks
-    * pinned for the session (fine for run-and-exit jobs; Bench and
-    * Verify sweep `getPersistentRDDs` after each query). */
-  def connectedComponentsManaged(edgeList: DataFrame, src: String,
-      dst: String, maxRounds: Int = 50): CcRun = {
-    val (labels, ids) = runCC(edgeList, src, dst, maxRounds)
-    new CcRun(labels, edgeList.sparkSession, ids)
-  }
-
-  private def runCC(edgeList: DataFrame, src: String, dst: String,
-      maxRounds: Int): (DataFrame, Set[Int]) = {
-    val spark = edgeList.sparkSession
+      maxRounds: Int = 50): DataFrame = {
     val edges = edgeList.select(col(src).as("da"), col(dst).as("db"))
     // materialize the edge list once — it is consumed every propagation
     // round, and lazily it would re-execute the whole upstream query per
-    // round (and per convergence check). Checkpoints are TRACKED (r17):
-    // Dataset.unpersist does not release a localCheckpoint's pinned RDD
-    // on Spark 4.1 (the r16 cursor finding), so superseded rounds are
-    // freed by id — without this every round's blocks stayed pinned for
-    // the session.
-    val (sym, symIds) = Pins.checkpointTracked(edges.unionByName(
+    // round (and per convergence check). Superseded rounds are released
+    // through Pins as soon as their successor is materialized; the final
+    // round stays pinned with the caller's scope.
+    val sym = Pins.checkpoint(edges.unionByName(
       edges.select(col("db").as("da"), col("da").as("db"))))
     // Round 1 FUSED into initialization (r19): every vertex's initial
     // label is itself, so the first round's neighbor-min is just
@@ -935,7 +911,7 @@ object DedupOps {
     // the vertex id — no V-row identity frame to checkpoint, no V-row
     // join. Identical to running the generic round against identity
     // labels (sym is symmetrized, so distinct(da) IS the vertex set).
-    var (labelsCk, labelIds) = Pins.checkpointTracked(
+    var labelsCk = Pins.checkpoint(
       sym.groupBy(col("da").as("v")).agg(min("db").as("nbr"))
         .select(col("v"), least(col("v"), col("nbr")).as("label"),
           (col("nbr") < col("v")).as("__chg")))
@@ -951,28 +927,38 @@ object DedupOps {
       // pass (`nbr < label` ⟺ least(label, nbr) ≠ label) and the
       // convergence check is a column scan of the just-checkpointed V-row
       // frame — r19, replacing a third V-row hash join + count per round
-      val (next, nextIds) = Pins.checkpointTracked(
+      val next = Pins.checkpoint(
         sym.join(labels, col("db") === col("v"))
           .groupBy(col("da").as("nv")).agg(min("label").as("nbr"))
           .join(labels, col("nv") === col("v"))
           .select(col("v"), least(col("label"), col("nbr")).as("label"),
             (col("nbr") < col("label")).as("__chg")))
       val changed = next.filter(col("__chg")).count()
-      // release the superseded round's checkpointed blocks by id
-      Pins.release(spark, labelIds)
+      Pins.release(labelsCk) // the superseded round
+      labelsCk = next
       labels = next.select("v", "label")
-      labelIds = nextIds
       converged = changed == 0
       rounds += 1
     }
-    Pins.release(spark, symIds)
+    Pins.release(sym)
     // wrong labels must never be returned silently — a component with
     // diameter > MaxRounds means the input is not a near-dup graph
     require(converged,
       s"label propagation did not converge in $maxRounds rounds — " +
         "component diameter exceeds maxRounds; raise it for chain-shaped graphs")
-    (labels.select(col("v").as("doc_id"), col("label").as("cluster_rep")),
-      labelIds)
+    labels.select(col("v").as("doc_id"), col("label").as("cluster_rep"))
+  }
+
+  /** [[connectedComponents]] returning a [[CcRun]]: the label frame PLUS
+    * the handle that frees the checkpointed blocks backing it — prefer
+    * this form in long-lived sessions (the GraphOps RankRun lifecycle:
+    * consume `labels`, then `release()`; after release the frame cannot
+    * be recomputed). */
+  def connectedComponentsManaged(edgeList: DataFrame, src: String,
+      dst: String, maxRounds: Int = 50): CcRun = {
+    val (labels, scope) = Pins.scoped(
+      connectedComponents(edgeList, src, dst, maxRounds))
+    new CcRun(labels, scope)
   }
 
   /** INCREMENTAL cluster-label maintenance — advance a STANDING
@@ -1004,7 +990,7 @@ object DedupOps {
     * caveat as [[connectedComponents]]: the returned frame is backed by
     * pinned checkpoint blocks — long-lived sessions should use
     * [[connectedComponentsIncrementalManaged]] and `release()` after
-    * consuming (r17; a run-and-exit job can simply discard). Pair-set caveat
+    * consuming (a run-and-exit job can simply discard). Pair-set caveat
     * inherited from [[ngramJaccardPairsIncremental]]: standing pairs
     * were generated under the PRIOR df cap — a shingle whose union df
     * crosses the cap can drop a from-scratch candidate that the standing
@@ -1017,25 +1003,7 @@ object DedupOps {
     * (graft.ApiSpec exercises it on a synthetic non-corpus graph). */
   def connectedComponentsIncremental(standingLabels: DataFrame,
       newEdges: DataFrame, src: String, dst: String,
-      maxRounds: Int = 50): DataFrame =
-    runCCIncremental(standingLabels, newEdges, src, dst, maxRounds)._1
-
-  /** [[connectedComponentsIncremental]] returning a [[CcRun]] — the
-    * upsert frame plus the release handle for the blocks backing it
-    * (the standing-label checkpoint and the contracted run's final
-    * round). Prefer this form in long-lived sessions; consume the
-    * upsert (write / apply / collect), then `release()`. */
-  def connectedComponentsIncrementalManaged(standingLabels: DataFrame,
-      newEdges: DataFrame, src: String, dst: String,
-      maxRounds: Int = 50): CcRun = {
-    val (out, ids) =
-      runCCIncremental(standingLabels, newEdges, src, dst, maxRounds)
-    new CcRun(out, standingLabels.sparkSession, ids)
-  }
-
-  private def runCCIncremental(standingLabels: DataFrame,
-      newEdges: DataFrame, src: String, dst: String,
-      maxRounds: Int): (DataFrame, Set[Int]) = {
+      maxRounds: Int = 50): DataFrame = {
     Seq("doc_id", "cluster_rep").foreach { c =>
       require(standingLabels.columns.contains(c),
         s"standing labels have no column '$c' (columns: " +
@@ -1043,17 +1011,9 @@ object DedupOps {
           "connectedComponents output")
     }
     // consumed four times (two endpoint lookups, touched-member
-    // expansion, rep anti-join) — materialize once, tracked. EXCEPT when
-    // the standing table is already a bare file scan (the production
-    // shape: a persisted label artifact / Materialize memo): re-executing
-    // a columnar scan per consumer is cheaper than the checkpoint's own
-    // driver action + V-row block copy, so scan-only inputs skip the
-    // barrier (r20; Pins.scanOnly is conservative — any computed frame
-    // keeps it).
-    val stSel = standingLabels.select(col("doc_id"), col("cluster_rep"))
-    val (st, stIds) =
-      if (Pins.scanOnly(stSel)) (stSel, Set.empty[Int])
-      else Pins.checkpointTracked(stSel)
+    // expansion, rep anti-join) — materialize once
+    val st = Pins.checkpoint(
+      standingLabels.select(col("doc_id"), col("cluster_rep")))
     val e = newEdges.select(col(src).as("__ea"), col(dst).as("__eb"))
     val mapped = e
       .join(st.select(col("doc_id").as("__ea"),
@@ -1062,8 +1022,7 @@ object DedupOps {
         col("cluster_rep").as("__rb")), Seq("__eb"), "left")
       .select(coalesce(col("__ra"), col("__ea")).as("__sa"),
         coalesce(col("__rb"), col("__eb")).as("__sb"))
-    val (superRun, superIds) = runCC(mapped, "__sa", "__sb", maxRounds)
-    val superLabels = superRun
+    val superLabels = connectedComponents(mapped, "__sa", "__sb", maxRounds)
       .select(col("doc_id").as("__super"), col("cluster_rep").as("__rep"))
     // full fresh rows for every member of a touched standing cluster…
     val touched = st
@@ -1076,7 +1035,20 @@ object DedupOps {
       .join(st.select(col("cluster_rep").as("__super")).distinct(),
         Seq("__super"), "left_anti")
       .select(col("__super").as("doc_id"), col("__rep").as("cluster_rep"))
-    (touched.unionByName(fresh), stIds ++ superIds)
+    touched.unionByName(fresh)
+  }
+
+  /** [[connectedComponentsIncremental]] returning a [[CcRun]] — the
+    * upsert frame plus the release handle for the blocks backing it
+    * (the standing-label checkpoint and the contracted run's final
+    * round). Prefer this form in long-lived sessions; consume the
+    * upsert (write / apply / collect), then `release()`. */
+  def connectedComponentsIncrementalManaged(standingLabels: DataFrame,
+      newEdges: DataFrame, src: String, dst: String,
+      maxRounds: Int = 50): CcRun = {
+    val (upsert, scope) = Pins.scoped(connectedComponentsIncremental(
+      standingLabels, newEdges, src, dst, maxRounds))
+    new CcRun(upsert, scope)
   }
 
   /** The frozen-prior NEAR-DUP fate bits of an ingest batch, derived
@@ -1123,24 +1095,14 @@ object DedupOps {
     * by the checkpoints). Idempotent; releases only this run's blocks,
     * so concurrent runs on one session are safe. */
   final class CcRun private[operators] (val labels: DataFrame,
-      spark: SparkSession, ids: Set[Int]) {
+      scope: Pins.Scope) {
     /** Free the pinned blocks backing [[labels]]. Call after consuming. */
-    def release(): Unit = Pins.release(spark, ids)
+    def release(): Unit = scope.release()
   }
 
   private def dedupClusters(s: SparkSession, d: String): DataFrame =
     connectedComponents(sharedNgramPairs(s, d), "da", "db")
       .orderBy("doc_id")
-
-  // the managed rendering Bench prefers (QDef.managed): same frame, plus
-  // the CcRun release handle — the caller-facing block-free path is the
-  // one exercised under load instead of the global sweep (r17, the
-  // GraphOps qPageRankManaged pattern)
-  private def dedupClustersManaged(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
-    val run = connectedComponentsManaged(sharedNgramPairs(s, d), "da", "db")
-    (run.labels.orderBy("doc_id"), () => run.release())
-  }
 
   /** STANDING cluster labels over the prior (90%) corpus's pair list —
     * the persisted artifact the incremental cluster query advances.
@@ -1168,16 +1130,6 @@ object DedupOps {
       .orderBy("doc_id")
   }
 
-  private def dedupClustersIncrManaged(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
-    val standing = ccPriorLabels(s, d)
-    val run = connectedComponentsIncrementalManaged(standing,
-      dedupNgramIncr(s, d).select("da", "db"), "da", "db")
-    (standing.join(run.labels.select("doc_id"), Seq("doc_id"), "left_anti")
-      .unionByName(run.labels)
-      .orderBy("doc_id"), () => run.release())
-  }
-
   /** Canonical-document selection — the LAST step of a dedup pipeline:
     * given near-dup clusters, keep ONE representative per cluster, chosen
     * by quality (ties → smallest doc_id), and emit the keep/drop manifest
@@ -1200,12 +1152,6 @@ object DedupOps {
 
   private def dedupCanonical(s: SparkSession, d: String): DataFrame =
     canonicalOver(s, d, dedupClusters(s, d))
-
-  private def dedupCanonicalManaged(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
-    val run = connectedComponentsManaged(sharedNgramPairs(s, d), "da", "db")
-    (canonicalOver(s, d, run.labels), () => run.release())
-  }
 
   /** DuckDB CTE chain computing the n-gram Jaccard pair list over `table`
     * — parameterized so composed oracles (q_curate) can run it over a CTE
@@ -1524,7 +1470,7 @@ object DedupOps {
          |  SELECT s.b, r.r FROM reach r JOIN sym s ON s.a = r.v)
          |SELECT v AS doc_id, min(r) AS cluster_rep FROM reach
          | GROUP BY 1 ORDER BY 1""".stripMargin
-    }, managed = Some(dedupClustersManaged _)),
+    }, managed = QDef.scoped(dedupClusters)),
     // The INCREMENTAL cluster path: Spark advances standing prior-corpus
     // labels by the increment's pairs (supernode contraction); the oracle
     // re-derives the ENTIRE label table from scratch over the union's
@@ -1543,7 +1489,7 @@ object DedupOps {
          |  SELECT s.b, r.r FROM reach r JOIN sym s ON s.a = r.v)
          |SELECT v AS doc_id, min(r) AS cluster_rep FROM reach
          | GROUP BY 1 ORDER BY 1""".stripMargin
-    }, managed = Some(dedupClustersIncrManaged _)),
+    }, managed = QDef.scoped(dedupClustersIncr)),
     QDef("q_dedup_canonical", dedupCanonical, Some {
       val pairSql = ngramOracleSql
       s"""WITH RECURSIVE sym AS (
@@ -1562,6 +1508,6 @@ object DedupOps {
          |    ORDER BY q.quality DESC, c.doc_id) = 1) AS keep
          | FROM clusters c JOIN q USING (doc_id)
          | ORDER BY c.doc_id""".stripMargin
-    }, managed = Some(dedupCanonicalManaged _))
+    }, managed = QDef.scoped(dedupCanonical))
   )
 }

@@ -7,7 +7,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{Decimal, DoubleType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 import graft.{Det, QDef}
 import graft.sources.Tables
@@ -42,10 +41,10 @@ import graft.sources.Tables
   * between two lineage barriers are the stages of ONE job, so a 10-round
   * run costs the node count, one barrier and the caller's consumption
   * (5 jobs; PlanSpec pins the bound). Every pinned RDD (the influence
-  * relation, the personalized teleport vector, the live barrier) is
-  * tracked by id ([[Pins.pinTracked]]) and released by id: superseded
-  * barriers as soon as the next one is materialized, the rest through
-  * [[RankRun]].
+  * relation, the personalized teleport vector, the live barrier) goes
+  * through [[Pins]]: superseded barriers are released as soon as the
+  * next one is materialized, the rest with the caller's scope
+  * ([[RankRun]]).
   */
 object GraphOps {
 
@@ -59,14 +58,11 @@ object GraphOps {
     * (collect / write / count), then call [[release]]; after release the
     * frame CANNOT be recomputed (the barrier truncated its lineage).
     * Idempotent; releases only this run's RDDs, so concurrent runs on one
-    * session are safe (ADVICE r9). Without a handle the only recourse was
-    * a global `getPersistentRDDs` sweep — which a long-lived session
-    * sharing the SparkSession cannot do safely. */
+    * session are safe (ADVICE r9). */
   final class RankRun private[operators] (val ranks: DataFrame,
-      spark: SparkSession, ids: Set[Int]) {
-    /** Free the pinned RDDs backing [[ranks]], by id. Call after
-      * consuming. */
-    def release(): Unit = Pins.release(spark, ids)
+      scope: Pins.Scope) {
+    /** Free the pinned RDDs backing [[ranks]]. Call after consuming. */
+    def release(): Unit = scope.release()
   }
 
   /** Rounds between lineage barriers (`localCheckpoint` plus a count).
@@ -196,9 +192,9 @@ object GraphOps {
     *
     * BLOCK LIFECYCLE: the returned frame is backed by pinned persistent
     * blocks that `Dataset.unpersist()` cannot free — this form leaves
-    * them pinned for the session (fine for run-and-exit jobs; Bench and
-    * Verify sweep `getPersistentRDDs` after each query). Long-lived
-    * sessions iterating over many graphs should use [[pageRankManaged]] /
+    * them to the enclosing [[Pins]] scope, or pinned for the session
+    * (fine for run-and-exit jobs). Long-lived sessions iterating over
+    * many graphs should use [[pageRankManaged]] /
     * [[personalizedPageRankManaged]] and call `release()` after
     * consuming — see [[RankRun]].
     *
@@ -218,9 +214,9 @@ object GraphOps {
   def pageRankManaged(edgeList: DataFrame, src: String, dst: String,
       damping: Double = 0.85, iters: Int = 10,
       influence: Option[DataFrame] = None): RankRun = {
-    val (out, _, ids) = runPageRank(edgeList, src, dst, damping,
-      iters, prefs = None, trackDeltas = false, preInfl = influence)
-    new RankRun(out, edgeList.sparkSession, ids)
+    val (ranks, scope) = Pins.scoped(
+      pageRank(edgeList, src, dst, damping, iters, influence))
+    new RankRun(ranks, scope)
   }
 
   /** Personalized PageRank: the teleport lands on a weighted SEED SET
@@ -258,14 +254,9 @@ object GraphOps {
       dst: String, prefs: DataFrame, prefNode: String, prefWeight: String,
       damping: Double = 0.85, iters: Int = 10,
       influence: Option[DataFrame] = None): RankRun = {
-    Seq(prefNode, prefWeight).foreach { c =>
-      require(prefs.columns.contains(c),
-        s"prefs has no column '$c' (columns: ${prefs.columns.mkString(", ")})")
-    }
-    val (out, _, ids) = runPageRank(edgeList, src, dst, damping,
-      iters, prefs = Some((prefs, prefNode, prefWeight)),
-      trackDeltas = false, preInfl = influence)
-    new RankRun(out, edgeList.sparkSession, ids)
+    val (ranks, scope) = Pins.scoped(personalizedPageRank(edgeList, src,
+      dst, prefs, prefNode, prefWeight, damping, iters, influence))
+    new RankRun(ranks, scope)
   }
 
   /** [[pageRank]] plus per-round L1 movement `‖r_k - r_(k-1)‖₁` — the
@@ -282,17 +273,15 @@ object GraphOps {
   def pageRankDeltas(edgeList: DataFrame, src: String, dst: String,
       damping: Double = 0.85, iters: Int = 10,
       influence: Option[DataFrame] = None): (DataFrame, Seq[Double]) = {
-    val (out, deltas, _) = runPageRank(edgeList, src, dst, damping,
-      iters, prefs = None, trackDeltas = true, preInfl = influence)
-    (out, deltas)
+    runPageRank(edgeList, src, dst, damping, iters, prefs = None,
+      trackDeltas = true, preInfl = influence)
   }
 
   private def runPageRank(edgeList: DataFrame, src: String, dst: String,
       damping: Double, iters: Int,
       prefs: Option[(DataFrame, String, String)],
       trackDeltas: Boolean,
-      preInfl: Option[DataFrame] = None)
-      : (DataFrame, Seq[Double], Set[Int]) = {
+      preInfl: Option[DataFrame] = None): (DataFrame, Seq[Double]) = {
     require(damping > 0 && damping < 1,
       s"damping must be in (0, 1), got $damping")
     require(iters >= 1, s"iters must be >= 1, got $iters")
@@ -338,7 +327,6 @@ object GraphOps {
       .reduceByKey(part, _ || _)
     // the one scalar the loop collects: the `1/n` teleport share
     val n = nodes.count().toDouble
-    var pinned = Set.empty[Int]
     // Personalized teleport: p(v) normalized over the NONNEGATIVE pref
     // mass landing on actual graph nodes, computed on frames (the exact
     // decimal grid an oracle re-derives) and then keyed like the ranks.
@@ -372,8 +360,7 @@ object GraphOps {
         .select(col("__v"),
           (coalesce(col("__pw"), lit(0.0)) / lit(tot)).as("__p"))
         .rdd.map(r => (r.get(0), r.getDouble(1))).partitionBy(part)
-      pinned += Pins.pinTracked(pv)(_.persist(StorageLevel.MEMORY_AND_DISK))
-      pv
+      Pins.pin(pv)(Pins.Persist)
     }
     // The stationary influence relation, keyed by source and persisted
     // once (spilling past memory). In-link-free nodes ride it as
@@ -390,7 +377,7 @@ object GraphOps {
       preservesPartitioning = true)
     val infl = bySrc.union(selfEdges).mapPartitions(
       _.toArray.sortBy(_._1.##).iterator, preservesPartitioning = true)
-    pinned += Pins.pinTracked(infl)(_.persist(StorageLevel.MEMORY_AND_DISK))
+    Pins.pin(infl)(Pins.Persist)
     // init: uniform 1/n, or the normalized preference vector (the
     // standard personalized power-iteration start, with no (1-d)
     // round-trip)
@@ -400,7 +387,7 @@ object GraphOps {
       case Some(pv) => Right(pv.mapValues(_ * (1 - damping)))
       case None => Left((1 - damping) / n)
     }
-    var barrier = Set.empty[Int]
+    var barrier: Option[RDD[_]] = None
     val deltas = mutable.ArrayBuffer.empty[Double]
     for (round <- 1 to iters) {
       val next = rankRound(infl, ranks, damping, teleport)
@@ -408,22 +395,22 @@ object GraphOps {
         // diagnostics cadence: materialize EVERY round; the L1 movement
         // is an exact decimal sum (order-independent, deterministic), and
         // computing it is the barrier's materializing action
-        val id = Pins.pinTracked(next)(_.localCheckpoint())
+        Pins.pin(next)(Pins.LocalCheckpoint)
         deltas += next.zipPartitions(ranks) { (cur, prev) =>
           val rp = prev.toMap
           Iterator(cur.foldLeft(Exact.Zero) { case (acc, (v, r)) =>
             acc + Exact(math.abs(r - rp(v))) })
         }.fold(Exact.Zero)(_ + _).toDouble
-        Pins.release(spark, barrier) // the superseded barrier, by RDD id
-        barrier = Set(id)
+        barrier.foreach(Pins.release) // the superseded barrier
+        barrier = Some(next)
       } else if (round % CkptEvery == 0 && round < iters) {
         // Lineage barrier every CkptEvery rounds. The FINAL rounds stay
         // lazy — the caller's one consumption runs them; a terminal
         // barrier would be a wasted job plus blocks nobody could free.
-        val id = Pins.pinTracked(next)(_.localCheckpoint())
+        Pins.pin(next)(Pins.LocalCheckpoint)
         next.count()
-        Pins.release(spark, barrier)
-        barrier = Set(id)
+        barrier.foreach(Pins.release)
+        barrier = Some(next)
       }
       ranks = next
     }
@@ -432,10 +419,8 @@ object GraphOps {
         StructField("rank", DoubleType))))
     // The influence relation, the teleport vector and the last barrier
     // stay pinned until the caller has consumed `out` (they back its
-    // lineage); their ids ride along so the managed entry points can hand
-    // the caller a release handle, while the unmanaged ones rely on
-    // Bench's release barrier (getPersistentRDDs sweep) after the action.
-    (out, deltas.toSeq, pinned ++ barrier)
+    // lineage): they are released with the caller's scope.
+    (out, deltas.toSeq)
   }
 
   /** One power-iteration round:
@@ -552,8 +537,7 @@ object GraphOps {
     Seq("_memo_copurchase" -> ((s, d) => coPurchase(s, d)),
       "_memo_influence" -> ((s, d) => coPurchaseInfluence(s, d)))
 
-  /** r9 rounding + presentation order shared by the plain and managed
-    * renderings of both graph queries. */
+  /** r9 rounding + presentation order of both graph queries. */
   private def present(ranks: DataFrame): DataFrame =
     ranks.select(col("node"), Det.r9(col("rank")).as("rank"))
       .orderBy("node")
@@ -561,17 +545,6 @@ object GraphOps {
   private def qPageRank(s: SparkSession, d: String): DataFrame =
     present(pageRank(coPurchase(s, d), "s", "d", damping = 0.85, iters = 10,
       influence = Some(coPurchaseInfluence(s, d))))
-
-  // The managed rendering Bench prefers (QDef.managed): same frame, plus
-  // the RankRun release handle — the caller-facing block-free path is
-  // what runs under load, not the global sweep (VERDICT r10 #4).
-  private def qPageRankManaged(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
-    val run = pageRankManaged(coPurchase(s, d), "s", "d",
-      damping = 0.85, iters = 10,
-      influence = Some(coPurchaseInfluence(s, d)))
-    (present(run.ranks), () => run.release())
-  }
 
   /** Personalized ranking seeded on every 100th part: "what is related
     * to THESE products" over the same co-purchase graph. The seed set is
@@ -588,14 +561,6 @@ object GraphOps {
     present(personalizedPageRank(coPurchase(s, d), "s", "d",
       pprSeeds(s, d), "seed", "w", damping = 0.85, iters = 10,
       influence = Some(coPurchaseInfluence(s, d))))
-
-  private def qPersonalizedPageRankManaged(s: SparkSession, d: String)
-      : (DataFrame, () => Unit) = {
-    val run = personalizedPageRankManaged(coPurchase(s, d), "s", "d",
-      pprSeeds(s, d), "seed", "w", damping = 0.85, iters = 10,
-      influence = Some(coPurchaseInfluence(s, d)))
-    (present(run.ranks), () => run.release())
-  }
 
   // The oracle mirrors the power iteration as a DuckDB recursive CTE
   // keyed on an iteration counter. DuckDB quirk (verified on 1.x): ANY
@@ -630,7 +595,7 @@ object GraphOps {
          | )
          |SELECT v AS node, ${Det.r9Sql("r")} AS rank
          |FROM pr WHERE it = 10 ORDER BY node""".stripMargin),
-      managed = Some(qPageRankManaged _)),
+      managed = QDef.scoped(qPageRank)),
     // Personalized variant over the same graph: the oracle re-derives the
     // mod-selected seed set, the decimal-exact normalizing total, and the
     // per-node teleport p(v) — the recursion differs from q_graph_pagerank
@@ -672,5 +637,5 @@ object GraphOps {
          | )
          |SELECT v AS node, ${Det.r9Sql("r")} AS rank
          |FROM pr WHERE it = 10 ORDER BY node""".stripMargin),
-      managed = Some(qPersonalizedPageRankManaged _)))
+      managed = QDef.scoped(qPersonalizedPageRank)))
 }

@@ -1,162 +1,132 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
 
-/** Tracked-checkpoint plumbing shared by the components that hold
-  * STANDING checkpointed frames (GraphOps' RankRun, the dedup CcRun
-  * handles, both streaming cursors).
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
+
+/** The one home of every pinned Spark block in the engine: each eager
+  * `localCheckpoint` and each `persist` goes through here, and each pin
+  * registers with the innermost [[scoped]] scope open on the calling
+  * thread. Releasing the scope frees them all.
   *
-  * Why this exists: `Dataset.unpersist()` does NOT release a
+  * Why pins need an owner: `Dataset.unpersist()` does NOT release a
   * `localCheckpoint`'s pinned RDD on Spark 4.1 — it only uncaches plans
   * through the CacheManager, and the checkpoint's blocks belong to an
-  * internal RDD the CacheManager never saw (verified with a minimal
-  * probe, r16). Any component that supersedes a checkpointed artifact
-  * must therefore capture the pinned RDD ids at checkpoint time and
-  * release them BY ID, or the blocks float until the ContextCleaner
-  * happens to GC the dropped references.
+  * internal RDD the CacheManager never saw. A checkpointed frame
+  * analyzes to a [[org.apache.spark.sql.execution.LogicalRDD]] leaf
+  * wrapping exactly that RDD, so a pin is attributed by reading the id
+  * off the frame's own plan; no capture-window diff of the context's
+  * persistent RDDs is ever taken.
   *
-  * Attribution is EXACT, not a capture-window diff: a localCheckpoint'd
-  * Dataset analyzes to a [[org.apache.spark.sql.execution.LogicalRDD]]
-  * leaf wrapping exactly the internal RDD the checkpoint pinned, so the
-  * ids are read off the checkpointed frame's own plan (the GraphOps r9
-  * pattern). A `getPersistentRDDs` diff around the call would also
-  * capture RDDs pinned by OTHER jobs sharing the SparkContext in the
-  * window (ADVICE r16: an AnnCursor ingest running beside a
-  * TrainReadyCursor, a concurrent `Materialize.table`), and releasing a
-  * foreign localCheckpoint's blocks fails that job irrecoverably — the
-  * truncated lineage cannot recompute them.
+  * Lifetimes:
+  *  - a pin taken inside `scoped { … }` lives until that scope's
+  *    [[Scope.release]] — a composed build's interior barriers are freed
+  *    with its result, whoever pinned them;
+  *  - [[release]] frees one superseded pin now (a loop's previous
+  *    round), whether or not a scope also holds it;
+  *  - a pin taken outside any scope belongs to the code that took it.
+  *    A cursor's standing artifacts are pinned this way: the cursor owns
+  *    them and releases each when its successor has materialized. This
+  *    holds because no query opens a cursor, and this object is
+  *    `private[graft]`, so no caller can wrap a cursor in a scope.
   *
-  * [[sweepWindow]] serializes the one place a window diff is still
-  * unavoidable: sweeping the INTERIOR stage pins of a composed build
-  * (`PipelineOps.trainReadyIncremental` eagerly checkpoints fate
-  * barriers and formatter intermediates that its returned plan no
-  * longer references, so they are invisible to leaf inspection). Every
-  * [[checkpointTracked]] and [[pinTracked]] call takes the lock too, so
-  * no tracked pin can be taken inside a concurrent sweep window. Ad-hoc
-  * UNTRACKED persists (a caller's own `localCheckpoint`/`cache` on the
-  * same SparkContext) during a cursor ingest remain unsafe — documented
-  * on both cursors.
-  */
+  * Scopes are thread-local: a pin registers only with its own thread's
+  * scope, so a cursor ingest and a managed graph run on one session
+  * neither see nor wait for each other's pins. */
 private[graft] object Pins {
 
-  /** JVM-global read-write lock: capture-window SWEEPS (the one place an
-    * id-delta diff is unavoidable) take the WRITE side, tracked
-    * checkpoint creation takes the READ side — so no tracked checkpoint
-    * can be pinned inside a concurrent sweep window (ADVICE r16 — an
-    * instance-level synchronized cannot exclude other instances), while
-    * independent tracked checkpoints (two managed graph runs, a cursor
-    * beside an ad-hoc CC) still run concurrently instead of serializing
-    * the whole JVM behind one monitor. Reentrant for the sweep holder:
-    * a write-lock owner may take the read lock, so the tracked
-    * checkpoints INSIDE a cursor's own window proceed. */
-  private val rw = new java.util.concurrent.locks.ReentrantReadWriteLock
+  /** The pins taken on one thread while a [[scoped]] body ran, minus
+    * those taken in scopes nested inside it. Calling it releases it, so
+    * a scope is itself the release callback of a managed rendering
+    * ([[graft.QDef.managed]]). */
+  final class Scope private[Pins] () extends (() => Unit) {
+    private val pins = mutable.LinkedHashMap.empty[Int, SparkContext]
 
-  /** Run `body` as a capture-window sweep: exclusive against every
-    * tracked checkpoint in the JVM (and other sweeps).
-    *
-    * STALL SCOPE (ADVICE r17): the write lock is held for the FULL
-    * duration of `body` — and the cursors pass their entire composed
-    * ingest build as the body (pair derivation + contracted CC run +
-    * trainReadyIncremental), minutes of work at scale. For that whole
-    * window every tracked checkpoint JVM-wide BLOCKS: other cursors'
-    * ingests, managed CC/graph runs, any GraphOps RankRun sharing the
-    * SparkContext. This is a deliberate trade — the alternative (track
-    * interior pins at their checkpoint sites) would thread a collector
-    * through every eager checkpoint inside the composed build's call
-    * tree. Schedule concurrent cursor/graph work on one JVM with this
-    * serialization in mind; the per-ingest stall is bounded by one
-    * increment's build, never by corpus size. */
-  def sweepWindow[T](body: => T): T = {
-    rw.writeLock().lock()
-    try body finally rw.writeLock().unlock()
+    // only the thread the scope is open on adds to it
+    private[Pins] def add(sc: SparkContext, id: Int): Unit = pins(id) = sc
+
+    /** Ids of the RDDs pinned in this scope, released or not. */
+    def ids: Set[Int] = pins.keySet.toSet
+
+    /** Free every pin of this scope that is still held. Idempotent and
+      * blocking: the blocks are gone when it returns. After release, a
+      * frame backed by these pins can no longer be recomputed. */
+    def release(): Unit =
+      pins.foreach { case (id, sc) => free(sc, Seq(id)) }
+
+    def apply(): Unit = release()
   }
 
-  /** Thread-local id collector backing [[collectTracked]] — test-only
-    * observation, never control flow. */
-  private val collector =
-    new ThreadLocal[scala.collection.mutable.Set[Int]]
-
-  /** TEST HOOK (VERDICT r18 #2): run `body` recording every RDD id that
-    * [[checkpointTracked]] or [[pinTracked]] pins ON THIS THREAD,
-    * returning the body's result plus the recorded ids. GraphSpec's
-    * managed-release assertion uses this to check that a managed run's
-    * OWN pins are gone after `release()` — the previous global
-    * `getPersistentRDDs.size` before/after comparison raced the
-    * ContextCleaner's async cleanup of NEIGHBOR suites' blocks in the
-    * shared session and produced the suite's only flaky failure in six
-    * rounds. Thread-local, so a
-    * concurrent job's checkpoints (an AnnCursor ingest beside the test)
-    * are never misattributed to the collected run. */
-  private[graft] def collectTracked[T](body: => T): (T, Set[Int]) = {
-    val s = scala.collection.mutable.Set.empty[Int]
-    val prev = collector.get
-    collector.set(s)
-    try { val r = body; (r, s.toSet) }
-    finally { if (prev == null) collector.remove() else collector.set(prev) }
+  private val open = new ThreadLocal[List[Scope]] {
+    override def initialValue(): List[Scope] = Nil
   }
 
-  /** Eagerly localCheckpoint `df`, returning the checkpointed frame plus
-    * the persistent-RDD ids the call pinned — read off the frame's own
-    * analyzed plan, so the attribution is exact under concurrency. */
-  def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    rw.readLock().lock()
-    try {
-      val out = df.localCheckpoint(eager = true)
-      val ids = out.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      }.toSet
-      // pinned at Spark 4.1.2: localCheckpoint always yields a LogicalRDD
-      // leaf; an empty set here would mean silent block leaks on release
-      require(ids.nonEmpty,
-        "localCheckpoint produced no LogicalRDD leaf — cannot track blocks")
-      Option(collector.get).foreach(_ ++= ids)
-      (out, ids)
-    } finally rw.readLock().unlock()
+  /** Run `body` with a new scope open on this thread: every pin the body
+    * takes on this thread, outside scopes nested in it, registers with
+    * the returned scope. Release it once the result is consumed. If the
+    * body throws, the scope is released before the exception leaves. */
+  def scoped[T](body: => T): (T, Scope) = {
+    val scope = new Scope
+    val outer = open.get
+    open.set(scope :: outer)
+    try (body, scope)
+    catch { case e: Throwable => scope.release(); throw e }
+    finally open.set(outer)
   }
 
-  /** Pin `rdd` with `pin` (a `persist` or `localCheckpoint` of it) and
-    * return its id, the handle [[release]] frees it by. The RDD's own id is
-    * the pinned one, so the attribution is exact; like
-    * [[checkpointTracked]], the pin is taken under the read lock and
-    * recorded in the [[collectTracked]] collector. */
-  def pinTracked[T](rdd: RDD[T])(pin: RDD[T] => RDD[T]): Int = {
-    rw.readLock().lock()
-    try {
-      pin(rdd)
-      Option(collector.get).foreach(_ += rdd.id)
-      rdd.id
-    } finally rw.readLock().unlock()
-  }
+  private def register(sc: SparkContext, id: Int): Unit =
+    open.get.headOption.foreach(_.add(sc, id))
 
-  /** True when `df` re-executes as a pure columnar file scan — its
-    * optimized plan is a leaf relation under projections/filters only
-    * (no join, aggregate, window, or exchange above the scan). An eager
-    * localCheckpoint exists to bound RE-EXECUTION of expensive upstream
-    * compute; for a scan-only frame it is pure overhead: one extra
-    * driver action plus a block-manager copy of bytes parquet already
-    * holds (r20 — the incremental CC's standing labels are a
-    * [[graft.sources.Materialize]] parquet memo in every
-    * production-shaped caller, and the checkpoint charged every ingest
-    * one action + a V-row copy for nothing). Conservative: anything but
-    * Project/Filter over a relation leaf reports false, so a computed
-    * frame keeps its barrier. */
-  private[graft] def scanOnly(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-    def walk(p: LogicalPlan): Boolean = p match {
-      case pr: Project => walk(pr.child)
-      case f: Filter => walk(f.child)
-      case _: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        true
-      case _ => false
+  /** Ids of the RDDs under `df`'s `LogicalRDD` leaves. */
+  private def leaves(df: DataFrame): Seq[Int] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
     }
-    walk(df.queryExecution.optimizedPlan)
-  }
 
-  /** Free the tracked blocks by RDD id. Idempotent; ids already released
-    * (or never pinned) are skipped. */
-  def release(spark: SparkSession, ids: Set[Int]): Unit = {
-    val persisted = spark.sparkContext.getPersistentRDDs
+  private def free(sc: SparkContext, ids: Iterable[Int]): Unit = {
+    val persisted = sc.getPersistentRDDs
     ids.foreach(id => persisted.get(id).foreach(_.unpersist(blocking = true)))
   }
+
+  /** An eager `localCheckpoint` of `df`: the checkpointed frame, whose
+    * pin registers with the open scope. */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val out = df.localCheckpoint(eager = true)
+    val ids = leaves(out)
+    // pinned at Spark 4.1.2: localCheckpoint always yields a LogicalRDD
+    // leaf; none here would mean blocks no release could find
+    require(ids.nonEmpty,
+      "localCheckpoint produced no LogicalRDD leaf — cannot track blocks")
+    ids.foreach(register(out.sparkSession.sparkContext, _))
+    out
+  }
+
+  /** How [[pin]] holds an RDD's blocks. */
+  sealed trait How
+  /** `persist(MEMORY_AND_DISK)`: cached, spilling past memory. */
+  case object Persist extends How
+  /** `localCheckpoint()`: cached and lineage-truncated once computed. */
+  case object LocalCheckpoint extends How
+
+  /** Pin `rdd` the way `how` says and register it with the open scope.
+    * The pin takes effect when the RDD is first computed. */
+  def pin[T](rdd: RDD[T])(how: How): RDD[T] = {
+    how match {
+      case Persist => rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      case LocalCheckpoint => rdd.localCheckpoint()
+    }
+    register(rdd.sparkContext, rdd.id)
+    rdd
+  }
+
+  /** Free the pins under `df`'s leaves now — pass the frame
+    * [[checkpoint]] returned. Idempotent. */
+  def release(df: DataFrame): Unit =
+    free(df.sparkSession.sparkContext, leaves(df))
+
+  /** Free `rdd`'s pin now. Idempotent. */
+  def release(rdd: RDD[_]): Unit = free(rdd.sparkContext, Seq(rdd.id))
 }

@@ -155,10 +155,9 @@ object PipelineOps {
         col(group).cast("string").as("g"),
         TextOps.toks(col(text)).as("t"))
       .filter(size(col("t")) > 0)
-    val nTok = toksRows
+    val nTok = Pins.checkpoint(toksRows
       .select(col("doc_id"), col("g"),
-        size(col("t")).cast("long").as("n_tok"))
-      .localCheckpoint(true)
+        size(col("t")).cast("long").as("n_tok")))
     val w = packSpansAssemble(toksRows,
       packAssignGrouped(nTok, "doc_id", "n_tok", "g", cap.toDouble), cap)
     if (sorted) w.orderBy("chunk") else w
@@ -382,9 +381,8 @@ object PipelineOps {
     * formatter subtree run once per action, not once per consumer. */
   private def packExamplesCore(toksRows: DataFrame, cap: Long): DataFrame = {
     require(cap >= 1, s"cap must be >= 1, got $cap")
-    val nTok = toksRows
-      .select(col("doc_id"), size(col("t")).cast("long").as("n_tok"))
-      .localCheckpoint(true)
+    val nTok = Pins.checkpoint(toksRows
+      .select(col("doc_id"), size(col("t")).cast("long").as("n_tok")))
     packSpansAssemble(toksRows,
       packAssign(nTok, "doc_id", "n_tok", cap.toDouble), cap)
   }
@@ -582,9 +580,8 @@ object PipelineOps {
             - element_at(col("sts"), col("i") + 1).cast("int")).as("seg"))
     // increment spans: the packExamplesCore shape with the running
     // token count shifted by the prior total (broadcast 1-row join)
-    val nTok = newToks
-      .select(col("doc_id"), size(col("t")).cast("long").as("n_tok"))
-      .localCheckpoint(true)
+    val nTok = Pins.checkpoint(newToks
+      .select(col("doc_id"), size(col("t")).cast("long").as("n_tok")))
     val asg = packAssign(nTok, "doc_id", "n_tok", cap.toDouble)
       .crossJoin(broadcast(totals.select("prior_tok")))
       .select(col("doc_id"), col("n_tok"),
@@ -1233,14 +1230,13 @@ object PipelineOps {
       fimRateBp)
     // slim (doc, source, mass, bucket) relation — checkpointed so the
     // allocation's consumption never re-runs the formatter
-    val base = fmt
+    val base = Pins.checkpoint(fmt
       .select(col("doc_id"), size(col("t")).cast("long").as("n_tok"))
       .join(corpus.select(col(id).as("doc_id"), col(source).as("source")),
         Seq("doc_id"))
       .withColumn("bucket",
         (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % 10000))
-      .localCheckpoint(true)
+          .cast("long") % 10000)))
     val alloc = epochAllocationFromBase(base, budgetTokens, maxEpochs,
       alpha)
     val rep = base
@@ -1873,8 +1869,7 @@ object PipelineOps {
     * NOT fully lazy: the per-doc token-count relation is eagerly
     * localCheckpoint'ed at call time (a lineage barrier — see the
     * comment at the call site), so building the frame already runs the
-    * curation + formatter stages; the pinned blocks are ~16 bytes/doc
-    * and freed by any `getPersistentRDDs` sweep.
+    * curation + formatter stages; the pinned blocks are ~16 bytes/doc.
     *
     * LIBRARY ENTRY POINT — generic over any (id, text) corpus + bench
     * pair; ApiSpec plants one doc per fate/format branch. */
@@ -1900,9 +1895,8 @@ object PipelineOps {
     // stages each consume their input twice (local window + bucket
     // prefix), so lazily the formatter's explode-and-window subtree
     // would execute FOUR times per action. Checkpointing ~16 bytes/doc
-    // buys a single formatter run; the pinned blocks are tiny and freed
-    // by any getPersistentRDDs sweep (Bench/Verify do this per query).
-    val withTokCk = withTok.localCheckpoint(true)
+    // buys a single formatter run; the pinned blocks are tiny.
+    val withTokCk = Pins.checkpoint(withTok)
     val packed = packAssign(withTokCk, "doc_id", "n_tok", cap)
       .select("doc_id", "n_tok", "chunk")
     val order = epochRank(withTokCk, "doc_id", epoch)
@@ -1941,8 +1935,8 @@ object PipelineOps {
         s"(columns: ${corpus.columns.mkString(", ")})"))
     val fates = precomputedFates
       .map(_.select(col("doc_id"), col("fate")))
-      .getOrElse(curateFates(corpus, bench, id, text, minJaccard,
-        contamN, precomputedPairs).localCheckpoint(true))
+      .getOrElse(Pins.checkpoint(curateFates(corpus, bench, id, text,
+        minJaccard, contamN, precomputedPairs)))
     val keptJoined = (mixtureSource match {
       case Some(src) => corpus.select(col(id).as("doc_id"),
         col(text).as("text"), col(src).as("__src"))
@@ -2225,7 +2219,7 @@ object PipelineOps {
         precomputedGrams = precomputedBenchGrams)
       .select(col("doc_id"), lit(true).as("contaminated"))
     // slim (doc_id, fate) barrier — same reasoning as trainReady's
-    val newFates = newBase.select("doc_id")
+    val newFates = Pins.checkpoint(newBase.select("doc_id")
       .join(q, Seq("doc_id"))
       .join(ex, Seq("doc_id"))
       .join(nd, Seq("doc_id"), "left")
@@ -2235,13 +2229,12 @@ object PipelineOps {
           .when(col("ex_dup"), "exact_dup")
           .when(col("nd"), "near_dup")
           .when(col("contaminated"), "contaminated")
-          .otherwise("kept").as("fate"))
-      .localCheckpoint(true)
+          .otherwise("kept").as("fate")))
     val keptNew = newBase.join(
       newFates.filter(col("fate") === "kept").select("doc_id"),
       Seq("doc_id"))
-    val withTokCk = formattedTok(keptNew, formatter, startRateBp,
-      meanSpan, fimRateBp).localCheckpoint(true)
+    val withTokCk = Pins.checkpoint(formattedTok(keptNew, formatter,
+      startRateBp, meanSpan, fimRateBp))
     val packedNew = packAssign(withTokCk, "doc_id", "n_tok", cap)
       .crossJoin(broadcast(priorTotals.select("prior_tok")))
       .select(col("doc_id"), col("n_tok"),

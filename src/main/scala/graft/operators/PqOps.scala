@@ -125,8 +125,9 @@ object PqOps {
       ksub: Int = 16, iters: Int = 3, trainFraction: Double = 1.0): DataFrame = {
     require(m >= 1 && ksub >= 2 && iters >= 1,
       s"bad PQ config: m=$m ksub=$ksub iters=$iters")
-    val ne = SimilarityOps.normalizedVecs(rows, id, vec).localCheckpoint(true)
+    val ne = Pins.checkpoint(SimilarityOps.normalizedVecs(rows, id, vec))
     val cb = trainCodebook(ne, m, ksub, iters, trainFraction)
+    Pins.release(ne) // the codebook is on the driver
     val s = rows.sparkSession
     import s.implicits._
     cb.zipWithIndex.flatMap { case (codes, sub) =>
@@ -262,7 +263,7 @@ object PqOps {
       s"bad IVFPQ config: k=$k refineFactor=$refineFactor nlist=$nlist " +
         s"nprobe=$nprobe")
     require(listShards >= 1, s"listShards must be >= 1, got $listShards")
-    val ne = SimilarityOps.normalizedVecs(rows, id, vec).localCheckpoint(true)
+    val ne = Pins.checkpoint(SimilarityOps.normalizedVecs(rows, id, vec))
     lazy val dim = SimilarityOps.vecDim(ne)
     val centroids = SimilarityOps.resolveCentroids(ne, nlist, iters,
       trainFraction, precomputedCentroids, dim)
@@ -395,7 +396,7 @@ object PqOps {
     // materialization, the search-session shape the index exists for
     val cne0 = SimilarityOps.normalizedVecs(corpus, id, vec)
     val cne =
-      if (precomputedIndex.isEmpty) cne0.localCheckpoint(true) else cne0
+      if (precomputedIndex.isEmpty) Pins.checkpoint(cne0) else cne0
     lazy val dim = SimilarityOps.vecDim(cne)
     val centroids = SimilarityOps.resolveCentroids(cne, nlist, iters,
       trainFraction, precomputedCentroids, dim)

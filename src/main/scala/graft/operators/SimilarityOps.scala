@@ -304,7 +304,7 @@ object SimilarityOps {
     require(nlist >= 2 && nprobe >= 1 && nprobe <= nlist && iters >= 1,
       s"bad IVF config: nlist=$nlist nprobe=$nprobe iters=$iters")
     require(listShards >= 1, s"listShards must be >= 1, got $listShards")
-    val cne = normalizedVecs(corpus, id, vec).localCheckpoint(true)
+    val cne = Pins.checkpoint(normalizedVecs(corpus, id, vec))
     val centroids =
       resolveCentroids(cne, nlist, iters, trainFraction, precomputedCentroids,
         vecDim(cne))
@@ -578,8 +578,9 @@ object SimilarityOps {
       iters: Int = 3, trainFraction: Double = 1.0): DataFrame = {
     require(nlist >= 2 && iters >= 1,
       s"bad IVF config: nlist=$nlist iters=$iters")
-    val ne = normalizedVecs(rows, id, vec).localCheckpoint(true)
+    val ne = Pins.checkpoint(normalizedVecs(rows, id, vec))
     val cents = kmeansCentroids(ne, nlist, iters, trainFraction)
+    Pins.release(ne) // the centroids are on the driver
     val s = rows.sparkSession
     import s.implicits._
     cents.toSeq.zipWithIndex.map { case (c, i) => (i, c) }
@@ -784,9 +785,8 @@ object SimilarityOps {
       s"bad IVF config: nlist=$nlist nprobe=$nprobe iters=$iters")
     require(listShards >= 1, s"listShards must be >= 1, got $listShards")
     // One normalized pass feeds `iters` assign/mean rounds + the final
-    // assignment: materialize it once (released by the caller's unpersist
-    // sweep, like the dedup family's intermediates).
-    val ne = normalizedVecs(rows, id, vec).localCheckpoint(true)
+    // assignment: materialize it once.
+    val ne = Pins.checkpoint(normalizedVecs(rows, id, vec))
     val centroids: Array[Seq[Double]] =
       resolveCentroids(ne, nlist, iters, trainFraction, precomputedCentroids,
         vecDim(ne))
@@ -842,7 +842,7 @@ object SimilarityOps {
   private def assignClusters(rows: DataFrame, id: String, vec: String,
       nlist: Int, iters: Int, trainFraction: Double,
       precomputedCentroids: Option[DataFrame]): DataFrame = {
-    val ne = normalizedVecs(rows, id, vec).localCheckpoint(true)
+    val ne = Pins.checkpoint(normalizedVecs(rows, id, vec))
     val centroids =
       resolveCentroids(ne, nlist, iters, trainFraction, precomputedCentroids,
         vecDim(ne))

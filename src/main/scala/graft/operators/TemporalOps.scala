@@ -339,8 +339,9 @@ object TemporalOps {
     val ud = rows.select(col(key).as("__k"),
       floor(tsLong(rows, ts) / lit(stepUs)).cast("long").as("__b"))
       .distinct()
-    val bounds = ud.agg(min("__b").as("__mnb"), max("__b").as("__mxb"))
-      .localCheckpoint(true) // consumed twice: replication cap + spine
+    // consumed twice: replication cap + spine
+    val bounds = Pins.checkpoint(
+      ud.agg(min("__b").as("__mnb"), max("__b").as("__mxb")))
     val counts = ud.crossJoin(broadcast(bounds))
       .select(col("__k"), explode(sequence(col("__b"),
         least(col("__b") + lit(windowBuckets - 1L), col("__mxb"))))

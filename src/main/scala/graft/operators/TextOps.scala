@@ -582,13 +582,9 @@ object TextOps {
     * shuffle pruning — which cannot fire here because the pruning key is
     * a derived explode, not a join column).
     *
-    * RESOURCE NOTE: the benchmark gram set is `localCheckpoint`ed (the
-    * sketch build and the verify join both consume it, and the returned
-    * plan references the checkpointed blocks). Spark has no end-of-plan
-    * hook to release them, so library callers should, after fully
-    * consuming the result, release via
-    * `spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())`
-    * (what Bench/Verify do between queries); the blocks are
+    * RESOURCE NOTE: the benchmark gram set is checkpointed (the sketch
+    * build and the verify join both consume it, and the returned plan
+    * references the checkpointed blocks); the blocks are
     * benchmark-sized, not corpus-sized.
     *
     * LIBRARY ENTRY POINT — generic over any (train, benchmark) corpus
@@ -623,10 +619,8 @@ object TextOps {
       case Some(g) =>
         require(g.columns.contains("g64"),
           s"precomputed gram table must carry a g64 column, got ${g.columns.toSeq}")
-        g.select(col("g64").cast("long")).distinct()
-          .localCheckpoint(eager = true)
-      case None => decontaminationIndex(bench, text, n)
-        .localCheckpoint(eager = true)
+        Pins.checkpoint(g.select(col("g64").cast("long")).distinct())
+      case None => Pins.checkpoint(decontaminationIndex(bench, text, n))
     }
     val items =
       if (expectedGrams > 0) expectedGrams

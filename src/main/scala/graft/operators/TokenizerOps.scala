@@ -88,16 +88,15 @@ object TokenizerOps {
       s"checkpointEvery must be >= 1, got $checkpointEvery")
     val s = rows.sparkSession
     // Corpus → word-frequency table: the single pass over the data.
-    var words = rows
+    var words = Pins.checkpoint(rows
       .select(explode(toks(col(text))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-      .select(col("freq"), wordSyms(col("word")).as("sym"))
-      .localCheckpoint(eager = true)
+      .select(col("freq"), wordSyms(col("word")).as("sym")))
     val vocabRows = words.count()
     if (vocabRows <= driverVocabRows) {
       val table = words.select("freq", "sym").collect()
         .map(r => (r.getLong(0), r.getString(1).split(" ")))
-      words.unpersist()
+      Pins.release(words)
       import s.implicits._
       return driverMerges(table, nMerges)
         .toDF("rank", "left", "right", "pair_count").orderBy("rank")
@@ -113,6 +112,8 @@ object TokenizerOps {
     // scalar off the materialized blocks.
     val parts = math.max(1L, math.min(words.rdd.getNumPartitions.toLong,
       vocabRows / 10000L + 1L)).toInt
+    // the live checkpoint, released when the next one materializes
+    var pinned = words
     words = words.coalesce(parts)
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var rank = 1
@@ -144,12 +145,15 @@ object TokenizerOps {
         // every [[CheckpointEvery]] rounds: replay work per window grows
         // quadratically in the cadence (r13 measurement: cadence 50 was
         // replay-DOMINATED at 30k vocab rows — see the cadence scaladoc).
-        if (rank % checkpointEvery == 0)
-          words = words.localCheckpoint(eager = true)
+        if (rank % checkpointEvery == 0) {
+          words = Pins.checkpoint(words)
+          Pins.release(pinned)
+          pinned = words
+        }
         rank += 1
       }
     }
-    words.unpersist()
+    Pins.release(pinned)
     import s.implicits._
     merges.result().toDF("rank", "left", "right", "pair_count")
       .orderBy("rank")
@@ -315,7 +319,7 @@ object TokenizerOps {
           lit(java.util.regex.Matcher.quoteReplacement(l + r)))
       }
       enc = enc.withColumn("sym", folded)
-      if (bi < batches.length - 1) enc = enc.localCheckpoint(eager = true)
+      if (bi < batches.length - 1) enc = Pins.checkpoint(enc)
     }
     val vocab = enc
       .withColumn("n_units", size(split(col("sym"), " ")).cast("long"))

@@ -220,10 +220,9 @@ object UnigramOps {
       s"shrinkFactor must be in (0,1), got $shrinkFactor")
     val s = rows.sparkSession
     // Corpus → word-frequency table: the single pass over the data.
-    val words = rows
+    val words = Pins.checkpoint(rows
       .select(explode(toks(col(text))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .localCheckpoint(eager = true)
+      .groupBy("word").agg(count(lit(1)).as("freq")))
     // Regime switch (bit-identical results, see eStepLocal): small word
     // tables fold their E-steps on the driver; big ones distribute.
     val vocabRows = words.count()
@@ -295,7 +294,7 @@ object UnigramOps {
         }
       }
     }
-    words.unpersist()
+    Pins.release(words)
     import s.implicits._
     model.toSeq.sortBy(_._1)
       .map { case (p, lp) => (p, math.round(lp * Scale), lp) }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{PqOps, SimilarityOps}
+import graft.operators.{Pins, PqOps, SimilarityOps}
 
 /** Streaming twin of `graft.Run`'s ANN index lifecycle — the
   * [[TrainReadyCursor]] pattern applied to the vector leg. Per
@@ -48,24 +48,11 @@ final class AnnCursor private (
     pqCfg: Option[(DataFrame, DataFrame, Int, Int)], // codebook, baseline, m, ksub
     initAssignment: DataFrame, initCodes: Option[DataFrame]) {
 
-  // Checkpoint with the pinned-RDD ids captured: Dataset.unpersist does
-  // NOT release a localCheckpoint's pinned RDD (it only uncaches plans
-  // via the cache manager — verified on Spark 4.1), so a cursor relying
-  // on it would leak one pinned block-set per ingest until the
-  // ContextCleaner happens to GC the dropped references. Attribution is
-  // EXACT — ids read off the checkpointed frame's own plan (ADVICE r16:
-  // the earlier getPersistentRDDs diff could capture a FOREIGN
-  // localCheckpoint pinned concurrently — another cursor's, a
-  // Materialize.table's — and releasing it fails that job
-  // irrecoverably). See [[graft.operators.Pins]].
-  private def ckpt(d: DataFrame): (DataFrame, Set[Int]) =
-    graft.operators.Pins.checkpointTracked(d)
-  private def release(pins: Set[Int]): Unit =
-    graft.operators.Pins.release(quantizer.sparkSession, pins)
-
-  private var (assignmentDf, assignmentPins) = ckpt(initAssignment)
-  private var codesState: Option[(DataFrame, Set[Int])] =
-    initCodes.map(ckpt)
+  // The standing assignment and codes are checkpointed frames pinned
+  // outside any scope: the cursor owns them and releases each once its
+  // successor has materialized (see [[graft.operators.Pins]]).
+  private var assignmentDf = Pins.checkpoint(initAssignment)
+  private var codesDf = initCodes.map(Pins.checkpoint)
   private var lastDriftRow: Option[Row] = None
   private var lastPqDriftRow: Option[Row] = None
   private var trips: Long = 0L
@@ -77,7 +64,7 @@ final class AnnCursor private (
 
   /** The standing PQ codes (`out/ann/codes`'s relation) — None when the
     * cursor was opened without the PQ dimension. */
-  def codes: Option[DataFrame] = synchronized { codesState.map(_._1) }
+  def codes: Option[DataFrame] = synchronized { codesDf }
 
   /** The LAST ingested batch's coarse-quantizer drift row
     * (`n_vecs, mean_qerr, max_qerr, baseline_mean, ratio, retrain`) —
@@ -99,28 +86,26 @@ final class AnnCursor private (
     * (the batch still lands — the freeze decision is the operator's,
     * exactly as in the batch ingest). Empty batches are a no-op. */
   def ingest(batch: DataFrame): Boolean = synchronized {
-    val (b, bPins) = ckpt(batch.select(
+    val b = Pins.checkpoint(batch.select(
       org.apache.spark.sql.functions.col(vecId),
       org.apache.spark.sql.functions.col(vec)))
-    if (b.isEmpty) { release(bPins); return false }
+    if (b.isEmpty) { Pins.release(b); return false }
     // successors first (eager), then release the superseded pins — no
     // window where the standing index is unmaterialized
-    val (newAssignment, naPins) = ckpt(assignmentDf
+    val newAssignment = Pins.checkpoint(assignmentDf
       .unionByName(SimilarityOps.ivfAppend(b, vecId, vec, quantizer)))
     val drift = SimilarityOps
       .ivfDrift(b, vecId, vec, quantizer, baseline, maxRatio).head()
     val newCodes = pqCfg.map { case (cb, _, m, ksub) =>
-      ckpt(codesState.get._1
+      Pins.checkpoint(codesDf.get
         .unionByName(PqOps.pqEncode(b, vecId, vec, cb, m, ksub)))
     }
     val pqDrift = pqCfg.map { case (cb, pqBase, m, ksub) =>
       PqOps.pqDrift(b, vecId, vec, cb, pqBase, m, ksub, maxRatio).head()
     }
-    release(assignmentPins); codesState.foreach(c => release(c._2))
-    release(bPins)
+    (assignmentDf +: b +: codesDf.toSeq).foreach(Pins.release)
     assignmentDf = newAssignment
-    assignmentPins = naPins
-    codesState = newCodes
+    codesDf = newCodes
     lastDriftRow = Some(drift)
     lastPqDriftRow = pqDrift
     val tripped = drift.getAs[Boolean]("retrain") ||
@@ -150,17 +135,15 @@ object AnnCursor {
   def apply(priorVectors: DataFrame, vecId: String, vec: String,
       nlist: Int = 16, maxRatio: Double = 1.5, pq: Boolean = false,
       pqM: Int = 8, pqKsub: Int = 16): AnnCursor = {
-    val quant = SimilarityOps.ivfTrain(priorVectors, vecId, vec, nlist)
-      .localCheckpoint(true)
-    val baseline = SimilarityOps
-      .ivfQuantizationError(priorVectors, vecId, vec, quant)
-      .localCheckpoint(true)
+    val quant = Pins.checkpoint(
+      SimilarityOps.ivfTrain(priorVectors, vecId, vec, nlist))
+    val baseline = Pins.checkpoint(SimilarityOps
+      .ivfQuantizationError(priorVectors, vecId, vec, quant))
     val pqCfg = if (!pq) None else {
-      val cb = PqOps.pqTrain(priorVectors, vecId, vec, pqM, pqKsub)
-        .localCheckpoint(true)
-      val pqBase = PqOps
-        .pqQuantizationError(priorVectors, vecId, vec, cb, pqM, pqKsub)
-        .localCheckpoint(true)
+      val cb = Pins.checkpoint(
+        PqOps.pqTrain(priorVectors, vecId, vec, pqM, pqKsub))
+      val pqBase = Pins.checkpoint(PqOps
+        .pqQuantizationError(priorVectors, vecId, vec, cb, pqM, pqKsub))
       Some((cb, pqBase, pqM, pqKsub))
     }
     new AnnCursor(vecId, vec, maxRatio, quant, baseline, pqCfg,
@@ -182,9 +165,9 @@ object AnnCursor {
       pq: Option[(DataFrame, DataFrame, DataFrame)] = None, // codebook, pq_baseline, codes
       pqM: Int = 8, pqKsub: Int = 16): AnnCursor =
     new AnnCursor(vecId, vec, maxRatio,
-      quantizer.localCheckpoint(true), baseline.localCheckpoint(true),
+      Pins.checkpoint(quantizer), Pins.checkpoint(baseline),
       pq.map { case (cb, pqBase, _) =>
-        (cb.localCheckpoint(true), pqBase.localCheckpoint(true), pqM, pqKsub)
+        (Pins.checkpoint(cb), Pins.checkpoint(pqBase), pqM, pqKsub)
       },
       initAssignment = assignment,
       initCodes = pq.map(_._3))

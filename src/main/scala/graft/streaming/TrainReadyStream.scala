@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{DedupOps, PipelineOps}
+import graft.operators.{DedupOps, PipelineOps, Pins}
 
 /** Streaming ingest twin of the COMPOSED build
   * ([[graft.operators.PipelineOps.trainReadyIncremental]]) — the
@@ -56,32 +56,13 @@ final class TrainReadyCursor private (
     initSourceLen: Option[DataFrame],
     initCapTierCrossed: Boolean = false) {
 
-  // A standing artifact is a checkpointed frame PLUS the ids of the
-  // RDDs its localCheckpoint pinned: Dataset.unpersist does NOT release
-  // a localCheckpoint's pinned RDD (it only uncaches plans through the
-  // cache manager — verified on Spark 4.1), so releasing superseded
-  // artifacts through it merely drops the reference and waits for the
-  // ContextCleaner to GC the blocks — storage then floats with GC
-  // timing instead of being ∝ the artifacts. Ids are read off the
-  // checkpointed frame's own plan (ADVICE r16: the earlier
-  // getPersistentRDDs diff could capture a FOREIGN checkpoint pinned in
-  // the window by another cursor or job, whose release fails that job
-  // irrecoverably); the one remaining window diff — the interior stage
-  // pins of the pair derivation and trainReadyIncremental, invisible to
-  // leaf inspection — runs under the JVM-global
-  // [[graft.operators.Pins.sweepWindow]] write lock, which every
-  // tracked checkpoint excludes via its read side. Ad-hoc UNTRACKED
-  // persists on the same SparkContext during an ingest remain unsafe.
-  private type Ckpt = (DataFrame, Set[Int])
-  private def ckpt(d: DataFrame): Ckpt =
-    graft.operators.Pins.checkpointTracked(d)
-  private def release(c: Ckpt): Unit =
-    graft.operators.Pins.release(bench.sparkSession, c._2)
-
-  private var manifestC: Ckpt = ckpt(initManifest)
-  private var hashesC: Ckpt = ckpt(initHashes)
-  private var postingsC: Ckpt = ckpt(initPostings)
-  private var labelsC: Ckpt = ckpt(initClusterLabels)
+  // Each standing artifact is a checkpointed frame pinned outside any
+  // scope: the cursor owns it and releases it once its successor has
+  // materialized (see [[graft.operators.Pins]]).
+  private var manifestC = Pins.checkpoint(initManifest)
+  private var hashesC = Pins.checkpoint(initHashes)
+  private var postingsC = Pins.checkpoint(initPostings)
+  private var labelsC = Pins.checkpoint(initClusterLabels)
   private var nPrior: Long = initDocCount
   // the df-cap tier guard's baseline (VERDICT r17 #2 — graft.Run's
   // `_df_cap.json`, in-cursor): the doc count the standing label table
@@ -95,14 +76,14 @@ final class TrainReadyCursor private (
   // of being silently re-baselined to the current count.
   private var crossed: Boolean = initCapTierCrossed
   private var tokenSk: Array[Byte] = initTokenSketch
-  private var lenQC: Ckpt = ckpt(initLenQuantiles)
-  private var distCC: Ckpt = ckpt(initDistinctContent)
-  private var srcDC: Option[Ckpt] = initSourceDistinct.map(ckpt)
-  private var srcLC: Option[Ckpt] = initSourceLen.map(ckpt)
+  private var lenQC = Pins.checkpoint(initLenQuantiles)
+  private var distCC = Pins.checkpoint(initDistinctContent)
+  private var srcDC = initSourceDistinct.map(Pins.checkpoint)
+  private var srcLC = initSourceLen.map(Pins.checkpoint)
 
   /** The standing manifest (one row per doc ever ingested: fate +
     * formatted n_tok + chunk + rank) as of the last completed ingest. */
-  def manifest: DataFrame = synchronized { manifestC._1 }
+  def manifest: DataFrame = synchronized { manifestC }
 
   /** Docs in the standing corpus (the near-dup df cap's denominator). */
   def docCount: Long = synchronized { nPrior }
@@ -131,7 +112,7 @@ final class TrainReadyCursor private (
     * equals a from-scratch [[graft.operators.DedupOps.connectedComponents]]
     * over the union's pairs bit-for-bit (pinned in
     * graft.StreamingWindowSpec). */
-  def clusterLabels: DataFrame = synchronized { labelsC._1 }
+  def clusterLabels: DataFrame = synchronized { labelsC }
 
   /** The standing token profile — serialized frequent-items bytes over
     * every token ever delivered (decode with
@@ -141,45 +122,36 @@ final class TrainReadyCursor private (
 
   /** The standing length profile — [[graft.operators.RelationalOps
     * .quantileSketch]] table (grp = "all") over per-doc token counts. */
-  def lenQuantiles: DataFrame = synchronized { lenQC._1 }
+  def lenQuantiles: DataFrame = synchronized { lenQC }
 
   /** The standing distinct-content profile —
     * [[graft.operators.RelationalOps.distinctSketch]] table
     * (grp = "all") over content hashes. */
-  def distinctContent: DataFrame = synchronized { distCC._1 }
+  def distinctContent: DataFrame = synchronized { distCC }
 
   /** The standing PER-SOURCE distinct-content profile (grp = the
     * configured `profileSource` column's values) — `graft.Run`'s
     * `stats/source_distinct` dimension, in-cursor (VERDICT r15 #5).
     * None when the cursor was opened without a profileSource. */
-  def sourceDistinct: Option[DataFrame] = synchronized { srcDC.map(_._1) }
+  def sourceDistinct: Option[DataFrame] = synchronized { srcDC }
 
   /** The standing PER-SOURCE length profile — `stats/source_len`'s
     * twin: a per-source [[graft.operators.RelationalOps.quantileSketch]]
     * table over per-doc token counts. */
-  def sourceLen: Option[DataFrame] = synchronized { srcLC.map(_._1) }
+  def sourceLen: Option[DataFrame] = synchronized { srcLC }
 
   /** Ingest one batch: fate against the standing artifacts, continue
     * the pack cursor and rank block, advance the artifacts. Returns the
     * NEW standing manifest (prior rows frozen — manifest in ≡ manifest
-    * out, so ingests chain). Empty batches are a no-op.
-    *
-    * CONCURRENCY (ADVICE r17): the composed build runs inside
-    * [[graft.operators.Pins.sweepWindow]], which holds the JVM-global
-    * capture lock's WRITE side for the whole build — every tracked
-    * checkpoint elsewhere in the JVM (other cursors, managed CC/graph
-    * runs) blocks until this ingest's build completes. One cursor
-    * ingest at a time is the intended deployment shape; see the
-    * sweepWindow scaladoc for the full stall scope. */
+    * out, so ingests chain). Empty batches are a no-op. */
   def ingest(batch: DataFrame): DataFrame = synchronized {
     // the checkpointed batch carries the source column only when the
     // per-source profile is configured; the pipeline stages below see
     // exactly (id, text) either way
-    val bC = ckpt(batch
+    val b = Pins.checkpoint(batch
       .select((col(id) +: col(text) +: profileSrc.map(col).toSeq): _*))
-    val b = bC._1
     val n = b.count()
-    if (n == 0L) { release(bC); return manifestC._1 }
+    if (n == 0L) { Pins.release(b); return manifestC }
     // df-cap tier guard (VERDICT r17 #2 — graft.Run's executeIngest
     // guard, in-cursor): chained ≡ from-scratch for the standing label
     // table holds exactly while the corpus-relative df cap equals the
@@ -200,94 +172,73 @@ final class TrainReadyCursor private (
         "and re-cluster under the current cap (mode=recluster + " +
         "overRun reopen, or a fresh apply()) — see capTierCrossed.")
     }
-    val sc = b.sparkSession.sparkContext
     // successors first (eager), then release the superseded blocks —
     // the order that keeps every ingest's cost ∝ increment without a
-    // window where the standing state is unmaterialized. The composed
-    // build pins stage intermediates during construction (the fate
-    // barrier, the formatted token counts, the CC edge rounds); those
-    // are invisible to plan-leaf inspection (the returned plan no
-    // longer references them), so they are swept by id delta — under
-    // the JVM-global capture lock, which excludes every TRACKED
-    // checkpoint (other cursors, managed graph/CC runs) from the
-    // window (ADVICE r16: the instance-level synchronized could not).
+    // window where the standing state is unmaterialized.
     //
     // Near-dup fates + the standing-label advance share ONE contracted
     // propagation run (VERDICT r16 #2, mirroring graft.Run's ingest):
     // the batch's pairs against the standing postings advance the label
     // state, and the frozen-prior fate bits are read off the upsert.
-    // The pair derivation and the contracted run live INSIDE the sweep
-    // window: the pair kernel eagerly checkpoints interior frames
-    // (increment postings, hot-union buckets) that are invisible to the
-    // returned plan's leaves and released by nothing else — outside the
-    // window they would pin one block-set per ingest for the session
-    // (caught by the r17 self-review). The upsert run's own tracked
-    // blocks land in the same delta; releasing them through the sweep
-    // AFTER the successor checkpoints below makes the managed handle's
-    // release() redundant here (release-by-id is idempotent).
-    val (labelRun, built, innerIds) = graft.operators.Pins.sweepWindow {
-      val before = sc.getPersistentRDDs.keySet
-      val run = DedupOps.connectedComponentsIncrementalManaged(
-        labelsC._1,
+    // The composed build runs in one scope: everything it pins (the pair
+    // kernel's increment postings and buckets, the CC rounds, the fate
+    // barrier, the formatted token counts) is released with it, after
+    // the successor checkpoints below have materialized.
+    val ((upsert, built), build) = Pins.scoped {
+      val upsert = DedupOps.connectedComponentsIncremental(labelsC,
         DedupOps.ngramJaccardPairsIncremental(
           b.select(col(id).as("doc_id"), col(text).as("text")),
-          "doc_id", "text", postingsC._1, nPrior, minJaccard),
+          "doc_id", "text", postingsC, nPrior, minJaccard),
         "da", "db")
-      val nd = DedupOps.nearDupFromLabelUpsert(run.labels,
+      val nd = DedupOps.nearDupFromLabelUpsert(upsert,
         b.select(col(id).as("doc_id")))
-      val bm = PipelineOps.trainReadyIncremental(
-        manifestC._1, bench.limit(0), b.select(col(id), col(text)), bench,
+      (upsert, PipelineOps.trainReadyIncremental(
+        manifestC, bench.limit(0), b.select(col(id), col(text)), bench,
         id, text, cap, epoch,
         formatter, startRateBp, meanSpan, fimRateBp, minJaccard, contamN,
-        precomputedPostings = Some(postingsC._1),
-        precomputedHashes = Some(hashesC._1),
+        precomputedPostings = Some(postingsC),
+        precomputedHashes = Some(hashesC),
         priorDocCount = Some(nPrior), sorted = false,
-        precomputedNearDup = Some(nd))
-      (run, bm, sc.getPersistentRDDs.keySet.toSet.filterNot(before))
+        precomputedNearDup = Some(nd)))
     }
-    val newManifest = ckpt(built)
-    val newHashes = ckpt(hashesC._1
+    val newManifest = Pins.checkpoint(built)
+    val newHashes = Pins.checkpoint(hashesC
       .unionByName(b.select(md5(col(text).cast("binary")).as("h"))))
-    val newPostings = ckpt(DedupOps
-      .ngramPostingsAppend(postingsC._1, b, id, text))
+    val newPostings = Pins.checkpoint(DedupOps
+      .ngramPostingsAppend(postingsC, b, id, text))
     // standing-label advance: untouched rows ∪ the upsert — the same
-    // apply graft.Run stages to index/cluster_labels (the upsert's
-    // blocks are released by the window sweep below, after this
-    // checkpoint has materialized)
-    val newLabels = ckpt(labelsC._1
-      .join(labelRun.labels.select("doc_id"), Seq("doc_id"), "left_anti")
-      .unionByName(labelRun.labels.select("doc_id", "cluster_rep")))
+    // apply graft.Run stages to index/cluster_labels
+    val newLabels = Pins.checkpoint(labelsC
+      .join(upsert.select("doc_id"), Seq("doc_id"), "left_anti")
+      .unionByName(upsert.select("doc_id", "cluster_rep")))
     // profile advance — the Run ingest's bytes-merges, in-cursor: token
     // bytes merge on the driver (kilobytes), the two 1-row sketch
     // tables through the library merge entry points
     val newTokenSk = graft.functions.FreqItems.mergeBytes(tokenSk,
       graft.operators.TextOps.tokenSketchBytes(b, text)
         .head().getAs[Array[Byte]]("sk"))
-    val newLenQ = ckpt(graft.operators.RelationalOps.quantileSketchMerge(
-      lenQC._1, TrainReadyCursor.lenSketch(b, id, text), "grp"))
-    val newDistC = ckpt(graft.operators.RelationalOps.distinctSketchMerge(
-      distCC._1, TrainReadyCursor.contentSketch(b, text), "grp"))
+    val newLenQ = Pins.checkpoint(graft.operators.RelationalOps
+      .quantileSketchMerge(lenQC, TrainReadyCursor.lenSketch(b, id, text),
+        "grp"))
+    val newDistC = Pins.checkpoint(graft.operators.RelationalOps
+      .distinctSketchMerge(distCC, TrainReadyCursor.contentSketch(b, text),
+        "grp"))
     // per-source profile advance (when configured): same group-keyed
     // merges as graft.Run's stats/source_* artifacts — new sources
     // appear as new groups, existing ones merge
     val newSrcD = profileSrc.map { src =>
-      ckpt(graft.operators.RelationalOps.distinctSketchMerge(
-        srcDC.get._1, TrainReadyCursor.sourceContentSketch(b, src, text),
+      Pins.checkpoint(graft.operators.RelationalOps.distinctSketchMerge(
+        srcDC.get, TrainReadyCursor.sourceContentSketch(b, src, text),
         "grp"))
     }
     val newSrcL = profileSrc.map { src =>
-      ckpt(graft.operators.RelationalOps.quantileSketchMerge(
-        srcLC.get._1, TrainReadyCursor.sourceLenSketch(b, src, text),
+      Pins.checkpoint(graft.operators.RelationalOps.quantileSketchMerge(
+        srcLC.get, TrainReadyCursor.sourceLenSketch(b, src, text),
         "grp"))
     }
-    val pinned = sc.getPersistentRDDs
-    innerIds.foreach(i =>
-      pinned.get(i).foreach(_.unpersist(blocking = true)))
-    labelRun.release() // subset of innerIds — idempotent belt-and-braces
-    release(manifestC); release(hashesC); release(postingsC)
-    release(labelsC); release(lenQC); release(distCC)
-    srcDC.foreach(release); srcLC.foreach(release)
-    release(bC)
+    build.release()
+    (Seq(manifestC, hashesC, postingsC, labelsC, lenQC, distCC, b) ++
+      srcDC ++ srcLC).foreach(Pins.release)
     manifestC = newManifest
     hashesC = newHashes
     postingsC = newPostings
@@ -298,7 +249,7 @@ final class TrainReadyCursor private (
     srcDC = newSrcD
     srcLC = newSrcL
     nPrior += n
-    newManifest._1
+    newManifest
   }
 
   /** Wire a STREAMING `(id, text)` frame into this cursor: one
@@ -371,13 +322,11 @@ object TrainReadyCursor {
     val prior = priorCorpus.select(
       (col(id).as("doc_id") +: col(text).as("text") +:
         profileSource.map(col).toSeq): _*)
-    // bootstrap through the MANAGED run so the prior corpus's
-    // propagation blocks free once the constructor's own checkpoint of
-    // the label table has materialized (the plain form would pin them
-    // for the session — the exact leak CcRun exists to prevent)
-    val ccRun = DedupOps.connectedComponentsManaged(
+    // the prior corpus's pair and propagation blocks are freed once the
+    // constructor's own checkpoint of the label table has materialized
+    val (labels, bootstrap) = Pins.scoped(DedupOps.connectedComponents(
       DedupOps.ngramJaccardPairs(prior, "doc_id", "text", minJaccard),
-      "da", "db")
+      "da", "db"))
     val nPrior = priorCorpus.count()
     val cursor = new TrainReadyCursor(bench, id, text, cap, epoch,
       formatter,
@@ -388,7 +337,7 @@ object TrainReadyCursor {
       initHashes = prior
         .select(md5(col("text").cast("binary")).as("h")),
       initPostings = DedupOps.ngramPostings(prior, "doc_id", "text"),
-      initClusterLabels = ccRun.labels,
+      initClusterLabels = labels,
       initDocCount = nPrior,
       // the labels above are derived from scratch over the prior corpus
       // right here, so the tier baseline IS the prior count
@@ -401,7 +350,7 @@ object TrainReadyCursor {
         sourceContentSketch(prior, src, "text")),
       initSourceLen = profileSource.map(src =>
         sourceLenSketch(prior, src, "text")))
-    ccRun.release() // the constructor's eager ckpt re-materialized them
+    bootstrap.release()
     cursor
   }
 

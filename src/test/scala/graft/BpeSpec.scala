@@ -62,6 +62,7 @@ class BpeSpec extends SparkSpec {
     val expected = referenceBpe(texts, 10)
     // driverVocabRows = -1 forces the DISTRIBUTED round loop (the
     // production-vocab regime) regardless of the corpus's vocab size.
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val got = TokenizerOps.bpeMerges(
       graft.sources.Tables(spark, sf, "documents"), "text", nMerges = 10,
       driverVocabRows = -1L)
@@ -70,6 +71,10 @@ class BpeSpec extends SparkSpec {
       .toSeq
     assert(got == expected,
       s"distributed:\n  ${got.mkString("\n  ")}\nreference:\n  ${expected.mkString("\n  ")}")
+    // training returns a driver-built table: every checkpoint of the
+    // word table, the superseded ones included, is released by then
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
+    assert(left.isEmpty, s"BPE training left RDDs pinned: $left")
   }
 
   test("driver-loop (small-vocab) regime learns the identical merge table") {

@@ -363,24 +363,27 @@ class GraphSpec extends SparkSpec {
     // end to end at sf0.001, then release restores the block baseline.
     // subset, not equality (ADVICE r11): a future query adding a managed
     // rendering extends this loop's coverage instead of breaking it
-    val managed = SparkEntry.managedQueries
-    assert(Set("q_graph_pagerank", "q_graph_ppr").subsetOf(managed.keySet),
-      s"graph queries missing from managed inventory: ${managed.keySet}")
+    val managed = SparkEntry.all.flatMap(q => q.managed.map(q.name -> _))
+    assert(Set("q_graph_pagerank", "q_graph_ppr")
+      .subsetOf(managed.map(_._1).toSet),
+      s"graph queries missing from managed inventory: ${managed.map(_._1)}")
     managed.foreach { case (name, mfn) =>
       // the plain build runs FIRST so any shared memo (Materialize
-      // parquet) is already on disk — a memo built inside the collect
-      // window below would attribute ITS pins to the managed run
+      // parquet) is already on disk — a memo built inside the managed
+      // run's scope below would attribute ITS pins to the managed run
       val plain = SparkEntry.queries(name)(spark, sf).collect().toSeq
-      // Pin accounting is ID-BASED (VERDICT r18 #2): the run's own
-      // tracked checkpoint ids — recorded by Pins at checkpoint time —
-      // must all be unpinned after release(). The previous global
-      // `getPersistentRDDs.size` before/after comparison raced the
-      // ContextCleaner's async cleanup of EARLIER suites' blocks in the
-      // shared session (the suite's only flaky failure in six rounds:
-      // it could not distinguish "this run leaked" from
-      // "suite-neighborhood state moved").
-      val ((frame, release), trackedIds) =
-        graft.operators.Pins.collectTracked(mfn(spark, sf))
+      // Pin accounting is ID-BASED (VERDICT r18 #2): the ids the run's
+      // own scope recorded at pin time must all be unpinned after
+      // release(). A global `getPersistentRDDs.size` before/after
+      // comparison raced the ContextCleaner's async cleanup of EARLIER
+      // suites' blocks in the shared session (the suite's only flaky
+      // failure in six rounds: it could not distinguish "this run
+      // leaked" from "suite-neighborhood state moved").
+      val (frame, release) = mfn(spark, sf)
+      val trackedIds = release match {
+        case scope: graft.operators.Pins.Scope => scope.ids
+        case other => fail(s"$name: managed release is not a pin scope: $other")
+      }
       assert(trackedIds.nonEmpty,
         s"$name: managed run recorded no tracked checkpoints — the " +
           "release-path assertion below would be vacuous")

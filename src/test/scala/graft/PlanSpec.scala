@@ -457,7 +457,8 @@ class PlanSpec extends SparkSpec {
     operators.GraphOps.memoBuilds.foreach { case (_, build) =>
       build(spark, sf).write.format("noop").mode("overwrite").save()
     }
-    val managed = SparkEntry.managedQueries("q_graph_pagerank")
+    val managed = SparkEntry.all.find(_.name == "q_graph_pagerank")
+      .flatMap(_.managed).get
     val (rows, jobs) = jobsDuring {
       val (frame, release) = managed(spark, sf)
       try frame.collect() finally release()

@@ -168,6 +168,7 @@ class RunSpec extends SparkSpec {
     inc.write.parquet(s"$dir/inc")
     bench.write.parquet(s"$dir/bench")
 
+    val pinnedBefore = s.sparkContext.getPersistentRDDs.keySet
     val buildSpec = Run.parseSpec(
       s"""{"corpus": "$dir/prior", "benchmark": "$dir/bench",
          | "out": "$dir/build", "id": "id", "text": "body",
@@ -185,6 +186,10 @@ class RunSpec extends SparkSpec {
          | "cap": 16, "formatter": "$formatter", "chunksPerPart": 2}"""
         .stripMargin)
     val summary = Run.execute(s, ingSpec)
+    // a build plus an ingest leaves nothing pinned: every block either
+    // job pinned is released before Run.execute returns
+    val left = s.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
+    assert(left.isEmpty, s"build + ingest left RDDs pinned: $left")
 
     // increment fates: every planted fate decided from the persisted
     // artifacts alone (the prior corpus is gone from this path)

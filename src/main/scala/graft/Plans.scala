@@ -34,10 +34,10 @@ object Plans {
     "q_ivf_append", "q_heavy_hitters", "q_distinct_incr",
     // r15: incremental KLL quantile maintenance
     "q_quantiles_incr")
-  // q_graph_pagerank is deliberately absent: its per-round localCheckpoint
-  // truncates lineage, so a dump here would show only the final checkpoint
-  // scan. The real iteration plan is pinned in PlanSpec instead
-  // ("pageRank's iteration round...").
+  // q_graph_pagerank is deliberately absent: its rank loop runs on RDDs
+  // behind a localCheckpoint barrier, so a dump here would show only the
+  // final checkpoint scan. The loop's shape is pinned in PlanSpec instead
+  // (the "rank loop: ..." tests).
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")

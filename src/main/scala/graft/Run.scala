@@ -7,7 +7,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{PipelineOps, Pins}
+import graft.operators.{PipelineOps, Pins, StandingCorpus}
 
 /** Config-driven END-TO-END build runner — the one command a user of the
   * reference points at a corpus to get the full training-data build this
@@ -572,13 +572,6 @@ object Run {
     }
 
     // 2. every artifact directory that exists is _SUCCESS-complete
-    val knownDirs = Seq("fates", "report", "manifest", "windows",
-      "index/hashes", "index/postings", "index/cluster_labels",
-      "stats/heavy_tokens",
-      "stats/token_sketch", "stats/len_quantiles", "stats/distinct_content",
-      "stats/source_distinct", "stats/source_len", "ann/quantizer",
-      "ann/assignment", "ann/baseline", "ann/codebook", "ann/codes",
-      "ann/pq_baseline")
     check("stage_complete", ".") {
       val partial = knownDirs.filter(d =>
         Files.isDirectory(Paths.get(out, d)) && !stageDone(s"$out/$d"))
@@ -716,10 +709,7 @@ object Run {
     // 8. per-ingest advance coherence + readability — the staged-swap
     // artifacts must all carry the SAME increment stamp (the label table
     // advances through the same machinery since r17)
-    val profileDirs = Seq("stats/token_sketch", "stats/len_quantiles",
-      "stats/distinct_content", "stats/source_distinct", "stats/source_len",
-      "index/cluster_labels")
-      .filter(done)
+    val profileDirs = ingestRewriteArtifacts.filter(done)
     if (profileDirs.nonEmpty) {
       check("profile_stamps", "stats") {
         val stamps = profileDirs.map { d =>
@@ -736,21 +726,20 @@ object Run {
       }
       check("profile_readable", "stats") {
         import graft.operators.RelationalOps
+        import StandingCorpus.{DistinctContent, LenQuantiles, TokenSketch}
+        def read(a: String) = s.read.parquet(s"$out/$a")
         val issues = scala.collection.mutable.ArrayBuffer.empty[String]
-        if (done("stats/token_sketch")) {
-          val sk = s.read.parquet(s"$out/stats/token_sketch")
-            .head().getAs[Array[Byte]]("sk")
+        if (done(TokenSketch)) {
+          val sk = read(TokenSketch).head().getAs[Array[Byte]]("sk")
           val (nTok, _, _) =
             graft.functions.FreqItems.decode(sk, Long.MaxValue)
           if (nTok < 0) issues += "token_sketch decoded a negative stream"
         }
-        if (done("stats/len_quantiles"))
-          RelationalOps.quantileSketchEstimate(
-            s.read.parquet(s"$out/stats/len_quantiles"), "grp", Seq(0.5))
-            .collect()
-        if (done("stats/distinct_content"))
-          RelationalOps.distinctSketchEstimate(
-            s.read.parquet(s"$out/stats/distinct_content"), "grp")
+        if (done(LenQuantiles))
+          RelationalOps.quantileSketchEstimate(read(LenQuantiles), "grp",
+            Seq(0.5)).collect()
+        if (done(DistinctContent))
+          RelationalOps.distinctSketchEstimate(read(DistinctContent), "grp")
             .collect()
         if (issues.isEmpty) None else Some(issues.mkString("; "))
       }
@@ -905,7 +894,7 @@ object Run {
     // carry the stats artifacts' advance stamp onto the rebuilt table so
     // the audit's per-ingest coherence check stays meaningful (the
     // reclustered table covers exactly the same corpus state)
-    val stampSrc = Paths.get(out, "stats/token_sketch", "_advanced_from")
+    val stampSrc = Paths.get(out, StandingCorpus.TokenSketch, "_advanced_from")
     if (Files.exists(stampSrc))
       Files.copy(stampSrc, Paths.get(staging, "_advanced_from"))
     // the doc count this staging was derived under, persisted INSIDE the
@@ -1160,12 +1149,6 @@ object Run {
     }
 
     // 2. partial (no _SUCCESS) artifact directories → quarantine
-    val knownDirs = Seq("fates", "report", "manifest", "windows",
-      "index/hashes", "index/postings", "index/cluster_labels",
-      "stats/heavy_tokens", "stats/token_sketch", "stats/len_quantiles",
-      "stats/distinct_content", "stats/source_distinct", "stats/source_len",
-      "ann/quantizer", "ann/assignment", "ann/baseline", "ann/codebook",
-      "ann/codes", "ann/pq_baseline")
     knownDirs.foreach { d =>
       val p = Paths.get(out, d)
       if (Files.isDirectory(p) && !stageDone(p.toString)) {
@@ -1341,7 +1324,7 @@ object Run {
     // keeps its own, and the audit's coherence check would flag a
     // healthy directory (found by the r17 sf0.1 lifecycle drive)
     val stamp: Option[String] = {
-      val p = Paths.get(spec.out, "stats/token_sketch", "_advanced_from")
+      val p = Paths.get(spec.out, StandingCorpus.TokenSketch, "_advanced_from")
       if (Files.exists(p)) Some(Files.readString(p)) else None
     }
     def rebuild(path: String)(build: => DataFrame): Unit = {
@@ -1353,36 +1336,8 @@ object Run {
       graft.operators.TextOps.frequentTokens(corpus, spec.text,
         minShare = 0.005)
     }
-    rebuild(s"${spec.out}/stats/token_sketch") {
-      graft.operators.TextOps.tokenSketchBytes(corpus, spec.text)
-    }
-    rebuild(s"${spec.out}/stats/len_quantiles") {
-      graft.operators.RelationalOps.quantileSketch(
-        graft.operators.TextOps.tokenCounts(corpus, spec.id, spec.text)
-          .withColumn("grp", lit("all")),
-        "grp", "n_tok")
-    }
-    rebuild(s"${spec.out}/stats/distinct_content") {
-      graft.operators.RelationalOps.distinctSketch(
-        corpus.select(lit("all").as("grp"),
-          md5(col(spec.text).cast("binary")).as("h")),
-        "grp", "h")
-    }
-    spec.profileSource.foreach { src =>
-      rebuild(s"${spec.out}/stats/source_distinct") {
-        graft.operators.RelationalOps.distinctSketch(
-          corpus.select(col(src).cast("string").as("grp"),
-            md5(col(spec.text).cast("binary")).as("h")),
-          "grp", "h")
-      }
-      rebuild(s"${spec.out}/stats/source_len") {
-        graft.operators.RelationalOps.quantileSketch(
-          graft.operators.TextOps.tokenCounts(corpus, src, spec.text)
-            .select(col("doc_id").cast("string").as("grp"),
-              col("n_tok")),
-          "grp", "n_tok")
-      }
-    }
+    StandingCorpus.profile(corpus, spec.id, spec.text, spec.profileSource)
+      .foreach { case (a, sketch) => rebuild(s"${spec.out}/$a")(sketch) }
     val nHeavy = s.read.parquet(s"${spec.out}/stats/heavy_tokens").count()
     val summary =
       s"""{"mode":"stats","corpus":"${esc(spec.corpus)}",""" +
@@ -1574,7 +1529,7 @@ object Run {
     // "never trust the denormalized column" rule taken to its on-disk
     // conclusion: every ingest write stays ∝ increment, append-only)
     stage(s"${spec.out}/index/hashes") {
-      corpus.select(md5(col(spec.text).cast("binary")).as("h"))
+      StandingCorpus.contentHashes(corpus, spec.text)
     }
     stage(s"${spec.out}/index/postings") {
       corpus
@@ -1593,53 +1548,17 @@ object Run {
     }
 
     // 1d. the STANDING corpus profile (VERDICT r14 #3) — the mergeable
-    // sketch BYTES behind the stats. The exact heavy-token list above
-    // is a build snapshot (exact counts need a corpus scan); these
-    // three ADVANCE per ingest by bytes-merge, so an estimate-grade
-    // profile always covers the whole corpus at cost ∝ increment:
-    //   stats/token_sketch      frequent-items bytes, token stream
-    //   stats/len_quantiles     KLL bytes, per-doc token counts
-    //   stats/distinct_content  HLL bytes, content hashes
-    stage(s"${spec.out}/stats/token_sketch") {
-      graft.operators.TextOps.tokenSketchBytes(corpus, spec.text)
-    }
-    stage(s"${spec.out}/stats/len_quantiles") {
-      graft.operators.RelationalOps.quantileSketch(
-        graft.operators.TextOps.tokenCounts(corpus, spec.id, spec.text)
-          .withColumn("grp", lit("all")),
-        "grp", "n_tok")
-    }
-    stage(s"${spec.out}/stats/distinct_content") {
-      graft.operators.RelationalOps.distinctSketch(
-        corpus.select(lit("all").as("grp"),
-          md5(col(spec.text).cast("binary")).as("h")),
-        "grp", "h")
-    }
-
-    // 1d-bis. optional PER-SOURCE profile (`"profileSource"` names the
-    // corpus's source column): the mixture pipeline's watch table —
-    // distinct-content and length-quantile sketches keyed by source,
-    // advanced per ingest like the global profile. Per-source token
-    // sketches are deliberately omitted (|sources| × maxMapSize maps;
-    // run tokenDivergence per source pair when needed).
-    spec.profileSource.foreach { src =>
-      stage(s"${spec.out}/stats/source_distinct") {
-        graft.operators.RelationalOps.distinctSketch(
-          corpus.select(col(src).cast("string").as("grp"),
-            md5(col(spec.text).cast("binary")).as("h")),
-          "grp", "h")
-      }
-      stage(s"${spec.out}/stats/source_len") {
-        // tokenCounts keyed by the SOURCE column: one row per doc,
-        // labeled by source — exactly the (grp, n_tok) relation the
-        // per-group sketch folds, no join
-        graft.operators.RelationalOps.quantileSketch(
-          graft.operators.TextOps.tokenCounts(corpus, src, spec.text)
-            .select(col("doc_id").cast("string").as("grp"),
-              col("n_tok")),
-          "grp", "n_tok")
-      }
-    }
+    // sketch BYTES behind the stats ([[StandingCorpus.profile]]). The
+    // exact heavy-token list above is a build snapshot (exact counts
+    // need a corpus scan); the profile ADVANCES per ingest by
+    // bytes-merge, so an estimate-grade profile always covers the whole
+    // corpus at cost ∝ increment. With `"profileSource"` (the corpus's
+    // source column) it adds the mixture pipeline's watch table:
+    // distinct-content and length sketches keyed by source. Per-source
+    // token sketches are deliberately omitted (|sources| × maxMapSize
+    // maps; run tokenDivergence per source pair when needed).
+    StandingCorpus.profile(corpus, spec.id, spec.text, spec.profileSource)
+      .foreach { case (a, sketch) => stage(s"${spec.out}/$a")(sketch) }
 
     // 1e. optional ANN artifacts (`"vectors"` in the spec, r15): the
     // trained coarse quantizer, the full-corpus assignment (the
@@ -1778,9 +1697,16 @@ object Run {
     * the near-dup label table whose per-ingest advance already rewrites
     * it whole). */
   private val ingestRewriteArtifacts =
-    Seq("stats/token_sketch", "stats/len_quantiles",
-      "stats/distinct_content", "stats/source_distinct",
-      "stats/source_len", "index/cluster_labels")
+    StandingCorpus.ProfileArtifacts :+ "index/cluster_labels"
+
+  /** Every artifact directory a build, ingest or maintenance mode
+    * writes — what the audit requires to be `_SUCCESS`-complete and
+    * repair quarantines when it is not. */
+  private val knownDirs = Seq("fates", "report", "manifest", "windows",
+    "index/hashes", "index/postings", "index/cluster_labels",
+    "stats/heavy_tokens") ++ StandingCorpus.ProfileArtifacts ++
+    Seq("ann/quantizer", "ann/assignment", "ann/baseline", "ann/codebook",
+      "ann/codes", "ann/pq_baseline")
 
   /** Top-level regular-file names of `dir` (empty when absent). The
     * append artifacts are flat parquet directories, so one level is the
@@ -1933,30 +1859,14 @@ object Run {
       .agg(coalesce(sum(when(col("chunk").isNotNull, col("n_tok"))),
         lit(0L)).as("t"))
       .head().getAs[Long]("t")
-    // df-cap tier guard (VERDICT r16 #3): chained ≡ from-scratch for the
-    // incremental dedup family (pairs, and therefore the standing label
-    // table) holds exactly while the corpus-relative df cap is the one
-    // the standing artifacts were derived under. Compare the baseline
-    // cap (_df_cap.json — the doc count at the last build/recluster)
-    // with the post-ingest union's; a crossing degrades silently
-    // otherwise, so it warns LOUDLY, lands in the summary, and keeps
+    // df-cap tier guard (VERDICT r16 #3): compare the baseline cap
+    // (_df_cap.json — the doc count at the last build/recluster) with the
+    // post-ingest union's. A crossing lands in the summary and keeps
     // firing on every later ingest until `"mode": "recluster"`
     // re-baselines the label artifact under the current cap.
     val nInc = inc.count()
     val clusteredDocs = readDfCapDocs(out).getOrElse(nPrior)
-    val capBase = graft.operators.DedupOps.dfCapFor(clusteredDocs)
-    val capUnion = graft.operators.DedupOps.dfCapFor(nPrior + nInc)
-    val capCrossed = capBase != capUnion
-    if (capCrossed)
-      System.err.println("[run] WARNING: this ingest moves the corpus " +
-        s"across a df-cap tier (cap $capBase at the last full cluster " +
-        s"over $clusteredDocs docs -> cap $capUnion at the union's " +
-        s"${nPrior + nInc}): the standing pair/label artifacts are no " +
-        "longer exactly union-equivalent. The ingest proceeds (fates " +
-        "land under the standing artifacts); schedule " +
-        "\"mode\": \"recluster\" to re-derive index/cluster_labels from " +
-        "the posting index under the current cap and re-baseline the " +
-        "guard.")
+    val tier = StandingCorpus.capCrossing(clusteredDocs, nPrior + nInc)
     val hashes = s.read.parquet(s"$out/index/hashes")
     // the RAW append-only store goes straight in: the incremental pair
     // derivation counts the candidate docs' df itself from the raw rows
@@ -1965,26 +1875,16 @@ object Run {
     val postings = s.read.parquet(s"$out/index/postings")
 
     // near-dup fates + the standing cluster-label advance share ONE
-    // contracted propagation run (VERDICT r16 #2): the increment's pairs
-    // advance `index/cluster_labels` via supernode contraction, and the
-    // frozen-prior fate bits are read off the same upsert
-    // ([[graft.operators.DedupOps.nearDupFromLabelUpsert]]). The pair
-    // list and the contracted run materialize EAGERLY here (checkpointed
+    // contracted propagation run ([[StandingCorpus.fate]]). The pair list
+    // and the contracted run materialize EAGERLY here (checkpointed
     // inside the CC entry point), so they read the PRE-ingest postings —
     // the appends below never feed back into this ingest's fates. A
     // pre-r17 build dir (no label artifact) falls back to the in-call
     // derivation with a loud warning.
     val labelsPath = s"$out/index/cluster_labels"
-    val labelRun: Option[graft.operators.DedupOps.CcRun] =
-      if (stageDone(labelsPath)) {
-        val pairs = graft.operators.DedupOps.ngramJaccardPairsIncremental(
-          inc.select(col(spec.id).as("doc_id"),
-            col(spec.text).as("text")),
-          "doc_id", "text", postings, nPrior, spec.minJaccard)
-        Some(graft.operators.DedupOps
-          .connectedComponentsIncrementalManaged(
-            s.read.parquet(labelsPath), pairs, "da", "db"))
-      } else {
+    val labels =
+      if (stageDone(labelsPath)) Some(s.read.parquet(labelsPath))
+      else {
         System.err.println(s"[run] WARNING: '$labelsPath' absent " +
           "(pre-label build?) — ingest fates fall back to the in-call " +
           "derivation and the standing label table is not advanced; " +
@@ -1995,17 +1895,10 @@ object Run {
           "ADVICE r17; build stage 0 now refuses that path).")
         None
       }
-    val nd = labelRun.map(run =>
-      graft.operators.DedupOps.nearDupFromLabelUpsert(run.labels,
-        inc.select(col(spec.id).as("doc_id"))))
-    val built = PipelineOps.trainReadyIncremental(
-      manifest, bench.limit(0), inc, bench, spec.id, spec.text,
-      cap = spec.cap.toDouble, formatter = spec.formatter,
-      minJaccard = spec.minJaccard, contamN = spec.contamN,
-      precomputedPostings = Some(postings),
-      precomputedHashes = Some(hashes),
-      priorDocCount = Some(nPrior), sorted = false,
-      precomputedNearDup = nd)
+    val (upsert, built) = StandingCorpus.fate(manifest, hashes, postings,
+      labels, nPrior, inc, bench,
+      StandingCorpus.Config(spec.id, spec.text, spec.cap.toDouble,
+        spec.formatter, spec.minJaccard, spec.contamN))
     // the increment's rows only — prior rows pass through the build
     // bit-identical and are ALREADY on disk. Materialized eagerly so
     // the append below never reads the path it writes.
@@ -2045,7 +1938,7 @@ object Run {
     faultPoint(spec, "ingest:after_windows")
 
     // index advance — append-only
-    inc.select(md5(col(spec.text).cast("binary")).as("h"))
+    StandingCorpus.contentHashes(inc, spec.text)
       .write.mode("append").parquet(s"$out/index/hashes")
     faultPoint(spec, "ingest:mid_index_append")
     inc.select(col(spec.id).as("doc_id"),
@@ -2053,8 +1946,8 @@ object Run {
           .as("sh64"))
       .write.mode("append").parquet(s"$out/index/postings")
 
-    // corpus-profile advance (VERDICT r14 #3): the three mergeable
-    // sketch artifacts move forward by a bytes-merge with the
+    // corpus-profile advance (VERDICT r14 #3): the mergeable sketch
+    // artifacts move forward by a bytes-merge with the
     // increment's own sketch — after any number of ingests the profile
     // estimates equal a from-scratch build's over the whole corpus
     // (RunSpec pins it across two ingests). The exact
@@ -2072,18 +1965,10 @@ object Run {
     // verified, stamped, and swapped exactly like the profile artifacts
     // (crash-safe, retry-idempotent); the rewrite is ∝ the label table,
     // which holds only docs with ≥1 near-dup pair — a vanishing corpus
-    // fraction. The upsert's checkpoint blocks are released once the
-    // swap lands.
+    // fraction.
     faultPoint(spec, "ingest:before_label_advance")
-    labelRun.foreach { run =>
-      advanceArtifact(s, spec, labelsPath, spec.increment.getOrElse("")) {
-        standing =>
-          standing
-            .join(run.labels.select("doc_id"), Seq("doc_id"), "left_anti")
-            .unionByName(run.labels.select("doc_id", "cluster_rep"))
-      }
-      run.release()
-    }
+    upsert.foreach(u => advanceArtifact(s, spec, labelsPath,
+      spec.increment.getOrElse(""))(StandingCorpus.advanceLabels(_, u)))
 
     // ANN ingest (optional, r15): `"vectors"` names the INCREMENT's
     // vector parquet — append its assignment rows to the standing index
@@ -2159,8 +2044,8 @@ object Run {
         s""""n_windows":${wtot.getAs[Long]("n")},""" +
         s""""n_window_tokens":${wtot.getAs[Long]("t")},""" +
         s""""df_cap":{"clustered_docs":$clusteredDocs,""" +
-        s""""base_cap":$capBase,"union_docs":${nPrior + nInc},""" +
-        s""""union_cap":$capUnion,"crossed":$capCrossed}""" +
+        s""""base_cap":${tier.base},"union_docs":${nPrior + nInc},""" +
+        s""""union_cap":${tier.union},"crossed":${tier.crossed}}""" +
         profileSummary(s, out).map("," + _).getOrElse("") +
         annDrift.map("," + _).getOrElse("") + "}"
     // commit: every artifact advanced — the new SUMMARY lands FIRST,
@@ -2195,67 +2080,19 @@ object Run {
     * artifact that did survive. The swap plus the per-increment stamp
     * make the profile advance both crash-safe and retry-idempotent. */
   private def advanceProfile(s: SparkSession, spec: Spec,
-      inc: DataFrame): Unit = {
-    val out = spec.out
-    val tag = spec.increment.getOrElse("")
-    import graft.operators.{RelationalOps, TextOps}
-
-    val skPath = s"$out/stats/token_sketch"
-    if (stageDone(skPath)) advanceArtifact(s, spec, skPath, tag) { standing =>
-      val sBytes = standing.head().getAs[Array[Byte]]("sk")
-      val incSk = TextOps.tokenSketchBytes(inc, spec.text)
-        .head().getAs[Array[Byte]]("sk")
-      s.createDataFrame(java.util.List.of(
-          org.apache.spark.sql.Row(
-            graft.functions.FreqItems.mergeBytes(sBytes, incSk))),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("sk",
-            org.apache.spark.sql.types.BinaryType, nullable = false))))
-    } else warnNoProfile(skPath)
-    // "between per-artifact profile advances" — the half-advanced state
-    // the profile_stamps audit check describes
-    faultPoint(spec, "ingest:mid_profile_advance")
-
-    val lqPath = s"$out/stats/len_quantiles"
-    if (stageDone(lqPath)) advanceArtifact(s, spec, lqPath, tag) { standing =>
-      RelationalOps.quantileSketchMerge(standing,
-        RelationalOps.quantileSketch(
-          TextOps.tokenCounts(inc, spec.id, spec.text)
-            .withColumn("grp", lit("all")), "grp", "n_tok"),
-        "grp")
-    } else warnNoProfile(lqPath)
-
-    val dcPath = s"$out/stats/distinct_content"
-    if (stageDone(dcPath)) advanceArtifact(s, spec, dcPath, tag) { standing =>
-      RelationalOps.distinctSketchMerge(standing,
-        RelationalOps.distinctSketch(
-          inc.select(lit("all").as("grp"),
-            md5(col(spec.text).cast("binary")).as("h")), "grp", "h"),
-        "grp")
-    } else warnNoProfile(dcPath)
-
-    // per-source profile advance (when the build carries one): new
-    // sources appear as new groups, existing ones merge
-    spec.profileSource.foreach { src =>
-      val sdPath = s"$out/stats/source_distinct"
-      if (stageDone(sdPath)) advanceArtifact(s, spec, sdPath, tag) { standing =>
-        RelationalOps.distinctSketchMerge(standing,
-          RelationalOps.distinctSketch(
-            inc.select(col(src).cast("string").as("grp"),
-              md5(col(spec.text).cast("binary")).as("h")), "grp", "h"),
-          "grp")
-      } else warnNoProfile(sdPath)
-      val slPath = s"$out/stats/source_len"
-      if (stageDone(slPath)) advanceArtifact(s, spec, slPath, tag) { standing =>
-        RelationalOps.quantileSketchMerge(standing,
-          RelationalOps.quantileSketch(
-            TextOps.tokenCounts(inc, src, spec.text)
-              .select(col("doc_id").cast("string").as("grp"),
-                col("n_tok")), "grp", "n_tok"),
-          "grp")
-      } else warnNoProfile(slPath)
-    }
-  }
+      inc: DataFrame): Unit =
+    StandingCorpus.profile(inc, spec.id, spec.text, spec.profileSource)
+      .foreach { case (a, incSketch) =>
+        val path = s"${spec.out}/$a"
+        if (stageDone(path))
+          advanceArtifact(s, spec, path, spec.increment.getOrElse(""))(
+            StandingCorpus.mergeProfile(a, _, incSketch))
+        else warnNoProfile(path)
+        // "between per-artifact profile advances" — the half-advanced
+        // state the profile_stamps audit check describes
+        if (a == StandingCorpus.TokenSketch)
+          faultPoint(spec, "ingest:mid_profile_advance")
+      }
 
   /** One staged profile-artifact advance (ADVICE r15). `merged` maps the
     * eagerly-checkpointed standing table to the advanced table; the
@@ -2313,18 +2150,16 @@ object Run {
     * totals. None when a pre-profile build dir lacks the artifacts. */
   private def profileSummary(s: SparkSession, out: String): Option[String] = {
     import graft.operators.RelationalOps
-    if (!stageDone(s"$out/stats/token_sketch") ||
-        !stageDone(s"$out/stats/len_quantiles") ||
-        !stageDone(s"$out/stats/distinct_content")) return None
-    val sk = s.read.parquet(s"$out/stats/token_sketch")
-      .head().getAs[Array[Byte]]("sk")
+    import StandingCorpus.{DistinctContent, LenQuantiles, TokenSketch}
+    if (!StandingCorpus.GlobalProfile.forall(a => stageDone(s"$out/$a")))
+      return None
+    def read(a: String) = s.read.parquet(s"$out/$a")
+    val sk = read(TokenSketch).head().getAs[Array[Byte]]("sk")
     val (nTok, _, _) = graft.functions.FreqItems.decode(sk, Long.MaxValue)
-    val lq = RelationalOps.quantileSketchEstimate(
-      s.read.parquet(s"$out/stats/len_quantiles"), "grp", Seq(0.5, 0.95))
-      .head()
-    val dc = RelationalOps.distinctSketchEstimate(
-      s.read.parquet(s"$out/stats/distinct_content"), "grp")
-      .head().getLong(1)
+    val lq = RelationalOps.quantileSketchEstimate(read(LenQuantiles), "grp",
+      Seq(0.5, 0.95)).head()
+    val dc = RelationalOps.distinctSketchEstimate(read(DistinctContent),
+      "grp").head().getLong(1)
     Some(s""""profile":{"n_tokens":$nTok,"len_p50":${lq.getDouble(1)},""" +
       s""""len_p95":${lq.getDouble(2)},"distinct_content_est":$dc}""")
   }

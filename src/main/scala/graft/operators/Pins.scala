@@ -29,9 +29,10 @@ import org.apache.spark.storage.StorageLevel
   *    round), whether or not a scope also holds it;
   *  - a pin taken outside any scope belongs to the code that took it.
   *    A cursor's standing artifacts are pinned this way: the cursor owns
-  *    them and releases each when its successor has materialized. This
-  *    holds because no query opens a cursor, and this object is
-  *    `private[graft]`, so no caller can wrap a cursor in a scope.
+  *    them, releases each when its successor has materialized, and
+  *    releases all of them on `close()`. This holds because no query
+  *    opens a cursor, and this object is `private[graft]`, so no caller
+  *    can wrap a cursor in a scope.
   *
   * Scopes are thread-local: a pin registers only with its own thread's
   * scope, so a cursor ingest and a managed graph run on one session

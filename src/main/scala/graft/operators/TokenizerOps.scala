@@ -312,6 +312,7 @@ object TokenizerOps {
     var enc = tok.select("word").distinct()
       .withColumn("sym", wordSyms(col("word")))
     val batches = merges.grouped(50).toSeq
+    var pinned: Option[DataFrame] = None
     batches.zipWithIndex.foreach { case (batch, bi) =>
       val folded = batch.foldLeft(col("sym")) { case (acc, (l, r)) =>
         regexp_replace(acc,
@@ -319,7 +320,13 @@ object TokenizerOps {
           lit(java.util.regex.Matcher.quoteReplacement(l + r)))
       }
       enc = enc.withColumn("sym", folded)
-      if (bi < batches.length - 1) enc = Pins.checkpoint(enc)
+      // once the next checkpoint has materialized, nothing reads the
+      // one it supersedes; the last stays pinned, the result reads it
+      if (bi < batches.length - 1) {
+        enc = Pins.checkpoint(enc)
+        pinned.foreach(Pins.release)
+        pinned = Some(enc)
+      }
     }
     val vocab = enc
       .withColumn("n_units", size(split(col("sym"), " ")).cast("long"))

@@ -47,30 +47,39 @@ object Materialize {
   }
   private val done = new ConcurrentHashMap[String, (String, StructType)]()
 
-  def table(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
+  def table(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     // Key by application: temp-dir contents outlive a stopped session,
     // but a new application must not trust another's files (different
     // conf, different data dir lifetimes are encoded in the key).
+    publish(s, key, root + "/" + java.util.UUID.nameUUIDFromBytes(
+      (s.sparkContext.applicationId + "/" + key).getBytes("UTF-8")))(build)
+
+  /** Write `build` to `path` once per Spark application and `key`, and
+    * return a read of the written table with the schema kept when it was
+    * published. The one publish step behind [[table]] and
+    * [[OracleAux.table]].
+    *
+    * NOT computeIfAbsent (r19): memo builds NEST — curateFateManifest
+    * builds through curatePairs, coPurchaseInfluence through coPurchase,
+    * pq_adc_codes through the pq_adc_codebook aux — and a nested
+    * computeIfAbsent on one ConcurrentHashMap throws
+    * IllegalStateException("Recursive update") whenever the two keys
+    * land in the same hash bin. The keys embed the per-run
+    * applicationId, so the collision was a per-run lottery: the
+    * inherited CORRECTNESS_LOCAL.json carried exactly this failure on
+    * q_train_ready_epochs. Double-checked build under the object
+    * monitor instead — reentrant, so nested builds on one thread are
+    * fine; builds are one-time per key, so serializing them is
+    * irrelevant next to the build cost; the path is a pure function of
+    * the key, so publishing after the parquet write keeps every reader
+    * on a fully-written table. */
+  private[sources] def publish(s: SparkSession, key: String, path: String)
+      (build: => DataFrame): DataFrame = {
     val full = s.sparkContext.applicationId + "/" + key
-    // NOT computeIfAbsent (r19): memo builds NEST — curateFateManifest
-    // builds through curatePairs, coPurchaseInfluence through coPurchase —
-    // and a nested computeIfAbsent on one ConcurrentHashMap throws
-    // IllegalStateException("Recursive update") whenever the two keys
-    // land in the same hash bin. The keys embed the per-run applicationId,
-    // so the collision was a per-run lottery: the inherited
-    // CORRECTNESS_LOCAL.json carried exactly this failure on
-    // q_train_ready_epochs. Double-checked build under the object
-    // monitor instead — reentrant, so nested builds on one thread are
-    // fine; builds are one-time per key, so serializing them is
-    // irrelevant next to the build cost; the path is a pure function of
-    // the key, so publishing after the parquet write keeps every reader
-    // on a fully-written table.
     if (!done.containsKey(full)) this.synchronized {
       if (!done.containsKey(full)) {
-        val p = root + "/" +
-          java.util.UUID.nameUUIDFromBytes(full.getBytes("UTF-8")).toString
-        build.write.mode("overwrite").parquet(p)
-        done.put(full, (p, s.read.parquet(p).schema))
+        build.write.mode("overwrite").parquet(path)
+        done.put(full, (path, s.read.parquet(path).schema))
         ()
       }
     }

@@ -3,7 +3,6 @@ package graft.sources
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** Persisted intermediates the DuckDB oracle can read.
   *
@@ -79,36 +78,13 @@ object OracleAux {
     else sql.replace(frag, s"$Root/$sf/")
   }
 
-  private val written = new ConcurrentHashMap[String, (String, StructType)]()
-
   /** Write `build` to `<Root>/<sf-basename>/<name>` (once per JVM and
-    * application) and return a read-back frame of the written bytes.
-    * As in [[Materialize.table]], the schema is inferred once, when the
-    * table is published, and kept next to its path: a later read starts
-    * no schema-inference job.
-    *
-    * NOT computeIfAbsent (r19): aux builds NEST — pq_adc_codes builds
-    * through the shared pq_adc_codebook aux — and a nested
-    * computeIfAbsent on one ConcurrentHashMap throws
-    * IllegalStateException("Recursive update") whenever the keys land in
-    * the same hash bin (the keys embed the per-run applicationId, so the
-    * collision is a per-run lottery — the Materialize twin of this bug
-    * was caught in the inherited CORRECTNESS_LOCAL.json). Double-checked
-    * build under the object monitor: reentrant for nested builds,
-    * one-time per key. */
+    * application) and return a read-back frame of the written bytes,
+    * through [[Materialize.publish]]: a later read starts no
+    * schema-inference job. */
   def table(s: SparkSession, sfDir: String, name: String)
       (build: => DataFrame): DataFrame = {
     val sf = new java.io.File(sfDir).getName
-    val key = s.sparkContext.applicationId + "/" + sf + "/" + name
-    if (!written.containsKey(key)) this.synchronized {
-      if (!written.containsKey(key)) {
-        val p = s"$Root/$sf/$name"
-        build.write.mode("overwrite").parquet(p)
-        written.put(key, (p, s.read.parquet(p).schema))
-        ()
-      }
-    }
-    val (p, schema) = written.get(key)
-    s.read.schema(schema).parquet(p)
+    Materialize.publish(s, s"oracle_aux/$sf/$name", s"$Root/$sf/$name")(build)
   }
 }

@@ -30,12 +30,12 @@ import graft.operators.{Pins, PqOps, SimilarityOps}
   * (and codes) are eagerly-checkpointed frames; every ingest builds the
   * successor, then releases the superseded block — pinned storage is
   * ∝ the index size, never ∝ the number of ingests (asserted in
-  * graft.StreamingAnnSpec). Batch ≡ stream by construction: feeding
-  * batches B1, B2, … yields bit-for-bit the assignment/codes a chained
-  * batch `ivfAppend`/`pqEncode` over the same split yields — which is
-  * also exactly what `graft.Run`'s ingest appends to `out/ann`, so a
-  * production deployment can write [[assignment]]/[[codes]] to the same
-  * artifact tables interchangeably.
+  * graft.StreamingAnnSpec); [[close]] releases the rest. Batch ≡ stream
+  * by construction: feeding batches B1, B2, … yields bit-for-bit the
+  * assignment/codes a chained batch `ivfAppend`/`pqEncode` over the same
+  * split yields — which is also exactly what `graft.Run`'s ingest
+  * appends to `out/ann`, so a production deployment can write
+  * [[assignment]]/[[codes]] to the same artifact tables interchangeably.
   *
   * Scale shape: cost ∝ batch — assignment and encode are broadcast-
   * kernel codegen projections (no joins, no shuffles; PlanSpec pins the
@@ -48,14 +48,16 @@ final class AnnCursor private (
     pqCfg: Option[(DataFrame, DataFrame, Int, Int)], // codebook, baseline, m, ksub
     initAssignment: DataFrame, initCodes: Option[DataFrame]) {
 
-  // The standing assignment and codes are checkpointed frames pinned
-  // outside any scope: the cursor owns them and releases each once its
-  // successor has materialized (see [[graft.operators.Pins]]).
+  // The frozen artifacts and the standing assignment and codes are
+  // checkpointed frames pinned outside any scope: the cursor owns them,
+  // releases the assignment and codes once their successors have
+  // materialized, and everything on close (see [[graft.operators.Pins]]).
   private var assignmentDf = Pins.checkpoint(initAssignment)
   private var codesDf = initCodes.map(Pins.checkpoint)
   private var lastDriftRow: Option[Row] = None
   private var lastPqDriftRow: Option[Row] = None
   private var trips: Long = 0L
+  private var closed = false
 
   /** The standing IVF assignment `(vec_id, l, ne)` — every vector ever
     * ingested, as of the last completed ingest. The exact relation
@@ -86,6 +88,7 @@ final class AnnCursor private (
     * (the batch still lands — the freeze decision is the operator's,
     * exactly as in the batch ingest). Empty batches are a no-op. */
   def ingest(batch: DataFrame): Boolean = synchronized {
+    require(!closed, "this AnnCursor is closed")
     val b = Pins.checkpoint(batch.select(
       org.apache.spark.sql.functions.col(vecId),
       org.apache.spark.sql.functions.col(vec)))
@@ -112,6 +115,15 @@ final class AnnCursor private (
       pqDrift.exists(_.getAs[Boolean]("retrain"))
     if (tripped) trips += 1
     tripped
+  }
+
+  /** Release every block the cursor holds: the frozen quantizer,
+    * baseline, codebook and PQ baseline, and the standing assignment and
+    * codes. Idempotent; the cursor takes no further ingest. */
+  def close(): Unit = synchronized {
+    (Seq(quantizer, baseline, assignmentDf) ++ codesDf ++
+      pqCfg.toSeq.flatMap(c => Seq(c._1, c._2))).foreach(Pins.release)
+    closed = true
   }
 
   /** Wire a STREAMING `(vec_id, embedding)` frame into this cursor: one

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{DedupOps, PipelineOps, Pins}
+import graft.operators.{DedupOps, Pins, StandingCorpus}
 
 /** Streaming ingest twin of the COMPOSED build
   * ([[graft.operators.PipelineOps.trainReadyIncremental]]) — the
@@ -27,42 +27,38 @@ import graft.operators.{DedupOps, PipelineOps, Pins}
   *
   * State discipline: the cursor holds exactly the standing artifacts
   * `graft.Run` persists — manifest, hash table, posting index, near-dup
-  * cluster-label table (as eagerly-checkpointed frames; the label table
-  * advances per ingest by the same contracted upsert that fates the
-  * batch — VERDICT r16 #2), the prior doc count (one long), and
-  * the corpus PROFILE (r15: the three mergeable sketch artifacts —
-  * token frequent-items bytes held driver-side at kilobyte size,
-  * length-KLL and content-HLL as 1-row checkpointed frames). Every
-  * ingest builds the successors, then releases the superseded blocks —
-  * pinned storage is ∝ the artifacts' size, NEVER ∝ the number of
-  * ingests (asserted in the spec). A production deployment writes the
-  * same artifacts to tables (the README walkthrough) instead of
-  * holding them as checkpoint blocks; the per-batch algebra —
-  * `hashes ∪ md5(batch)`, [[DedupOps.ngramPostingsAppend]],
-  * `manifest ∪ increment rows`, the profile bytes-merges — is
-  * identical.
+  * cluster-label table, the corpus PROFILE tables (the three global
+  * sketch tables, plus the two per-source ones with a profileSource) —
+  * as eagerly-checkpointed frames, and the prior doc count (one long).
+  * Every ingest builds the successors, then releases the superseded
+  * blocks — pinned storage is ∝ the artifacts' size, NEVER ∝ the number
+  * of ingests (asserted in the spec); [[close]] releases the rest. A
+  * production deployment writes the same artifacts to tables (the
+  * README walkthrough) instead of holding them as checkpoint blocks.
+  * Each ingest runs the very steps `graft.Run`'s ingest runs — the
+  * df-cap tier guard, the fate step, the label advance, the content
+  * hashes and the profile merges all come from
+  * [[graft.operators.StandingCorpus]] — so the two paths advance a
+  * build identically (pinned in graft.StreamingWindowSpec).
   */
 final class TrainReadyCursor private (
-    bench: DataFrame, id: String, text: String, cap: Double,
-    epoch: String, formatter: String, startRateBp: Int, meanSpan: Int,
-    fimRateBp: Int, minJaccard: Double, contamN: Int,
+    bench: DataFrame, cfg: StandingCorpus.Config,
     profileSrc: Option[String],
     initManifest: DataFrame, initHashes: DataFrame,
     initPostings: DataFrame, initClusterLabels: DataFrame,
     initDocCount: Long, initClusteredDocs: Long,
-    initTokenSketch: Array[Byte], initLenQuantiles: DataFrame,
-    initDistinctContent: DataFrame,
-    initSourceDistinct: Option[DataFrame],
-    initSourceLen: Option[DataFrame],
+    initProfile: Seq[(String, DataFrame)],
     initCapTierCrossed: Boolean = false) {
 
   // Each standing artifact is a checkpointed frame pinned outside any
   // scope: the cursor owns it and releases it once its successor has
-  // materialized (see [[graft.operators.Pins]]).
+  // materialized, or on close (see [[graft.operators.Pins]]).
   private var manifestC = Pins.checkpoint(initManifest)
   private var hashesC = Pins.checkpoint(initHashes)
   private var postingsC = Pins.checkpoint(initPostings)
   private var labelsC = Pins.checkpoint(initClusterLabels)
+  private var profileC = initProfile.map { case (a, d) =>
+    a -> Pins.checkpoint(d) }
   private var nPrior: Long = initDocCount
   // the df-cap tier guard's baseline (VERDICT r17 #2 — graft.Run's
   // `_df_cap.json`, in-cursor): the doc count the standing label table
@@ -75,11 +71,13 @@ final class TrainReadyCursor private (
   // was crossed before the open, so the operator cue stays up instead
   // of being silently re-baselined to the current count.
   private var crossed: Boolean = initCapTierCrossed
-  private var tokenSk: Array[Byte] = initTokenSketch
-  private var lenQC = Pins.checkpoint(initLenQuantiles)
-  private var distCC = Pins.checkpoint(initDistinctContent)
-  private var srcDC = initSourceDistinct.map(Pins.checkpoint)
-  private var srcLC = initSourceLen.map(Pins.checkpoint)
+  private var closed = false
+
+  private def standing: Seq[DataFrame] =
+    Seq(manifestC, hashesC, postingsC, labelsC) ++ profileC.map(_._2)
+
+  private def profileOf(artifact: String): Option[DataFrame] =
+    profileC.collectFirst { case (`artifact`, d) => d }
 
   /** The standing manifest (one row per doc ever ingested: fate +
     * formatted n_tok + chunk + rank) as of the last completed ingest. */
@@ -118,138 +116,91 @@ final class TrainReadyCursor private (
     * every token ever delivered (decode with
     * [[graft.functions.FreqItems.decode]], compare builds with
     * [[graft.operators.TextOps.tokenDivergenceSketch]]). */
-  def tokenSketch: Array[Byte] = synchronized { tokenSk }
+  def tokenSketch: Array[Byte] = synchronized {
+    profileOf(StandingCorpus.TokenSketch).get
+      .head().getAs[Array[Byte]]("sk")
+  }
 
   /** The standing length profile — [[graft.operators.RelationalOps
     * .quantileSketch]] table (grp = "all") over per-doc token counts. */
-  def lenQuantiles: DataFrame = synchronized { lenQC }
+  def lenQuantiles: DataFrame = synchronized {
+    profileOf(StandingCorpus.LenQuantiles).get
+  }
 
   /** The standing distinct-content profile —
     * [[graft.operators.RelationalOps.distinctSketch]] table
     * (grp = "all") over content hashes. */
-  def distinctContent: DataFrame = synchronized { distCC }
+  def distinctContent: DataFrame = synchronized {
+    profileOf(StandingCorpus.DistinctContent).get
+  }
 
   /** The standing PER-SOURCE distinct-content profile (grp = the
     * configured `profileSource` column's values) — `graft.Run`'s
     * `stats/source_distinct` dimension, in-cursor (VERDICT r15 #5).
     * None when the cursor was opened without a profileSource. */
-  def sourceDistinct: Option[DataFrame] = synchronized { srcDC }
+  def sourceDistinct: Option[DataFrame] = synchronized {
+    profileOf(StandingCorpus.SourceDistinct)
+  }
 
   /** The standing PER-SOURCE length profile — `stats/source_len`'s
     * twin: a per-source [[graft.operators.RelationalOps.quantileSketch]]
     * table over per-doc token counts. */
-  def sourceLen: Option[DataFrame] = synchronized { srcLC }
+  def sourceLen: Option[DataFrame] = synchronized {
+    profileOf(StandingCorpus.SourceLen)
+  }
 
   /** Ingest one batch: fate against the standing artifacts, continue
     * the pack cursor and rank block, advance the artifacts. Returns the
     * NEW standing manifest (prior rows frozen — manifest in ≡ manifest
     * out, so ingests chain). Empty batches are a no-op. */
   def ingest(batch: DataFrame): DataFrame = synchronized {
+    require(!closed, "this TrainReadyCursor is closed")
     // the checkpointed batch carries the source column only when the
-    // per-source profile is configured; the pipeline stages below see
-    // exactly (id, text) either way
-    val b = Pins.checkpoint(batch
-      .select((col(id) +: col(text) +: profileSrc.map(col).toSeq): _*))
+    // per-source profile is configured
+    val b = Pins.checkpoint(batch.select(
+      (col(cfg.id) +: col(cfg.text) +: profileSrc.map(col).toSeq): _*))
     val n = b.count()
     if (n == 0L) { Pins.release(b); return manifestC }
-    // df-cap tier guard (VERDICT r17 #2 — graft.Run's executeIngest
-    // guard, in-cursor): chained ≡ from-scratch for the standing label
-    // table holds exactly while the corpus-relative df cap equals the
-    // one the table was derived under. A long-lived cursor crossing
-    // 50k/500k docs would otherwise degrade the artifact silently —
-    // warn loudly, latch [[capTierCrossed]], keep ingesting (fates
-    // still land under the standing artifacts, same as Run).
-    val capBase = DedupOps.dfCapFor(clusteredDocs)
-    val capUnion = DedupOps.dfCapFor(nPrior + n)
-    if (capBase != capUnion) {
+    if (StandingCorpus.capCrossing(clusteredDocs, nPrior + n).crossed)
       crossed = true
-      System.err.println("[cursor] WARNING: this ingest moves the " +
-        s"corpus across a df-cap tier (cap $capBase at the last full " +
-        s"cluster over $clusteredDocs docs -> cap $capUnion at the " +
-        s"union's ${nPrior + n}): the standing pair/label artifacts " +
-        "are no longer exactly union-equivalent. The cursor proceeds " +
-        "(fates land under the standing artifacts); stop the stream " +
-        "and re-cluster under the current cap (mode=recluster + " +
-        "overRun reopen, or a fresh apply()) — see capTierCrossed.")
-    }
     // successors first (eager), then release the superseded blocks —
     // the order that keeps every ingest's cost ∝ increment without a
-    // window where the standing state is unmaterialized.
-    //
-    // Near-dup fates + the standing-label advance share ONE contracted
-    // propagation run (VERDICT r16 #2, mirroring graft.Run's ingest):
-    // the batch's pairs against the standing postings advance the label
-    // state, and the frozen-prior fate bits are read off the upsert.
-    // The composed build runs in one scope: everything it pins (the pair
-    // kernel's increment postings and buckets, the CC rounds, the fate
-    // barrier, the formatted token counts) is released with it, after
-    // the successor checkpoints below have materialized.
-    val ((upsert, built), build) = Pins.scoped {
-      val upsert = DedupOps.connectedComponentsIncremental(labelsC,
-        DedupOps.ngramJaccardPairsIncremental(
-          b.select(col(id).as("doc_id"), col(text).as("text")),
-          "doc_id", "text", postingsC, nPrior, minJaccard),
-        "da", "db")
-      val nd = DedupOps.nearDupFromLabelUpsert(upsert,
-        b.select(col(id).as("doc_id")))
-      (upsert, PipelineOps.trainReadyIncremental(
-        manifestC, bench.limit(0), b.select(col(id), col(text)), bench,
-        id, text, cap, epoch,
-        formatter, startRateBp, meanSpan, fimRateBp, minJaccard, contamN,
-        precomputedPostings = Some(postingsC),
-        precomputedHashes = Some(hashesC),
-        priorDocCount = Some(nPrior), sorted = false,
-        precomputedNearDup = Some(nd)))
-    }
+    // window where the standing state is unmaterialized. The fate step
+    // runs in one scope: everything it pins (the pair kernel's
+    // increment postings and buckets, the CC rounds, the fate barrier,
+    // the formatted token counts) is released with it, after the
+    // successor checkpoints below have materialized.
+    val ((upsert, built), fate) = Pins.scoped(StandingCorpus.fate(
+      manifestC, hashesC, postingsC, Some(labelsC), nPrior, b, bench, cfg))
     val newManifest = Pins.checkpoint(built)
     val newHashes = Pins.checkpoint(hashesC
-      .unionByName(b.select(md5(col(text).cast("binary")).as("h"))))
+      .unionByName(StandingCorpus.contentHashes(b, cfg.text)))
     val newPostings = Pins.checkpoint(DedupOps
-      .ngramPostingsAppend(postingsC, b, id, text))
-    // standing-label advance: untouched rows ∪ the upsert — the same
-    // apply graft.Run stages to index/cluster_labels
-    val newLabels = Pins.checkpoint(labelsC
-      .join(upsert.select("doc_id"), Seq("doc_id"), "left_anti")
-      .unionByName(upsert.select("doc_id", "cluster_rep")))
-    // profile advance — the Run ingest's bytes-merges, in-cursor: token
-    // bytes merge on the driver (kilobytes), the two 1-row sketch
-    // tables through the library merge entry points
-    val newTokenSk = graft.functions.FreqItems.mergeBytes(tokenSk,
-      graft.operators.TextOps.tokenSketchBytes(b, text)
-        .head().getAs[Array[Byte]]("sk"))
-    val newLenQ = Pins.checkpoint(graft.operators.RelationalOps
-      .quantileSketchMerge(lenQC, TrainReadyCursor.lenSketch(b, id, text),
-        "grp"))
-    val newDistC = Pins.checkpoint(graft.operators.RelationalOps
-      .distinctSketchMerge(distCC, TrainReadyCursor.contentSketch(b, text),
-        "grp"))
-    // per-source profile advance (when configured): same group-keyed
-    // merges as graft.Run's stats/source_* artifacts — new sources
-    // appear as new groups, existing ones merge
-    val newSrcD = profileSrc.map { src =>
-      Pins.checkpoint(graft.operators.RelationalOps.distinctSketchMerge(
-        srcDC.get, TrainReadyCursor.sourceContentSketch(b, src, text),
-        "grp"))
-    }
-    val newSrcL = profileSrc.map { src =>
-      Pins.checkpoint(graft.operators.RelationalOps.quantileSketchMerge(
-        srcLC.get, TrainReadyCursor.sourceLenSketch(b, src, text),
-        "grp"))
-    }
-    build.release()
-    (Seq(manifestC, hashesC, postingsC, labelsC, lenQC, distCC, b) ++
-      srcDC ++ srcLC).foreach(Pins.release)
+      .ngramPostingsAppend(postingsC, b, cfg.id, cfg.text))
+    val newLabels = Pins.checkpoint(
+      StandingCorpus.advanceLabels(labelsC, upsert.get))
+    val newProfile = StandingCorpus.profile(b, cfg.id, cfg.text, profileSrc)
+      .map { case (a, inc) =>
+        a -> Pins.checkpoint(
+          StandingCorpus.mergeProfile(a, profileOf(a).get, inc))
+      }
+    fate.release()
+    (b +: standing).foreach(Pins.release)
     manifestC = newManifest
     hashesC = newHashes
     postingsC = newPostings
     labelsC = newLabels
-    tokenSk = newTokenSk
-    lenQC = newLenQ
-    distCC = newDistC
-    srcDC = newSrcD
-    srcLC = newSrcL
+    profileC = newProfile
     nPrior += n
     newManifest
+  }
+
+  /** Release every block the cursor holds. Idempotent; the cursor takes
+    * no further ingest, and the frames its accessors returned can no
+    * longer be recomputed. */
+  def close(): Unit = synchronized {
+    standing.foreach(Pins.release)
+    closed = true
   }
 
   /** Wire a STREAMING `(id, text)` frame into this cursor: one
@@ -265,37 +216,6 @@ final class TrainReadyCursor private (
 }
 
 object TrainReadyCursor {
-
-  /** Per-batch length-profile sketch (grp = "all"), shared by ingest
-    * and bootstrap. */
-  private def lenSketch(d: DataFrame, id: String, text: String): DataFrame =
-    graft.operators.RelationalOps.quantileSketch(
-      graft.operators.TextOps.tokenCounts(d, id, text)
-        .withColumn("grp", lit("all")), "grp", "n_tok")
-
-  /** Per-batch content-hash distinct sketch (grp = "all"). */
-  private def contentSketch(d: DataFrame, text: String): DataFrame =
-    graft.operators.RelationalOps.distinctSketch(
-      d.select(lit("all").as("grp"),
-        md5(col(text).cast("binary")).as("h")), "grp", "h")
-
-  /** Per-batch PER-SOURCE content-hash distinct sketch (grp = the
-    * source column's values) — `graft.Run`'s stats/source_distinct. */
-  private def sourceContentSketch(d: DataFrame, src: String,
-      text: String): DataFrame =
-    graft.operators.RelationalOps.distinctSketch(
-      d.select(col(src).cast("string").as("grp"),
-        md5(col(text).cast("binary")).as("h")), "grp", "h")
-
-  /** Per-batch PER-SOURCE length sketch — stats/source_len's shape:
-    * tokenCounts keyed by the source column gives the (grp, n_tok)
-    * relation directly, no join. */
-  private def sourceLenSketch(d: DataFrame, src: String,
-      text: String): DataFrame =
-    graft.operators.RelationalOps.quantileSketch(
-      graft.operators.TextOps.tokenCounts(d, src, text)
-        .select(col("doc_id").cast("string").as("grp"), col("n_tok")),
-      "grp", "n_tok")
 
   /** Open a cursor over a standing build: `priorManifest` is a
     * [[graft.operators.PipelineOps.trainReady]] /
@@ -328,28 +248,21 @@ object TrainReadyCursor {
       DedupOps.ngramJaccardPairs(prior, "doc_id", "text", minJaccard),
       "da", "db"))
     val nPrior = priorCorpus.count()
-    val cursor = new TrainReadyCursor(bench, id, text, cap, epoch,
-      formatter,
-      startRateBp, meanSpan, fimRateBp, minJaccard, contamN,
+    val cursor = new TrainReadyCursor(bench,
+      StandingCorpus.Config(id, text, cap, formatter, minJaccard, contamN,
+        epoch, startRateBp, meanSpan, fimRateBp),
       profileSrc = profileSource,
       initManifest = priorManifest
         .select("doc_id", "fate", "n_tok", "chunk", "rank"),
-      initHashes = prior
-        .select(md5(col("text").cast("binary")).as("h")),
+      initHashes = StandingCorpus.contentHashes(prior, "text"),
       initPostings = DedupOps.ngramPostings(prior, "doc_id", "text"),
       initClusterLabels = labels,
       initDocCount = nPrior,
       // the labels above are derived from scratch over the prior corpus
       // right here, so the tier baseline IS the prior count
       initClusteredDocs = nPrior,
-      initTokenSketch = graft.operators.TextOps
-        .tokenSketchBytes(prior, "text").head().getAs[Array[Byte]]("sk"),
-      initLenQuantiles = lenSketch(prior, "doc_id", "text"),
-      initDistinctContent = contentSketch(prior, "text"),
-      initSourceDistinct = profileSource.map(src =>
-        sourceContentSketch(prior, src, "text")),
-      initSourceLen = profileSource.map(src =>
-        sourceLenSketch(prior, src, "text")))
+      initProfile =
+        StandingCorpus.profile(prior, "doc_id", "text", profileSource))
     bootstrap.release()
     cursor
   }
@@ -394,20 +307,19 @@ object TrainReadyCursor {
     import java.nio.file.{Files, Paths}
     def done(art: String): Boolean =
       Files.exists(Paths.get(out, art, "_SUCCESS"))
-    Seq("manifest", "index/hashes", "index/postings",
-      "index/cluster_labels", "stats/token_sketch", "stats/len_quantiles",
-      "stats/distinct_content").foreach { a =>
+    (Seq("manifest", "index/hashes", "index/postings",
+      "index/cluster_labels") ++ StandingCorpus.GlobalProfile).foreach { a =>
       require(done(a), s"'$out/$a' is missing or incomplete — overRun " +
         "opens a completed graft.Run build directory (for a pre-label " +
         "directory run \"mode\": \"recluster\" first; it creates " +
         "index/cluster_labels from the posting index)")
     }
-    profileSource.foreach { _ =>
-      Seq("stats/source_distinct", "stats/source_len").foreach(a =>
-        require(done(a), s"'$out/$a' is missing — the build was not " +
-          "run with a profileSource; open without one or re-run " +
-          "\"mode\": \"stats\" with the source configured"))
-    }
+    val sourceProfile =
+      if (profileSource.isDefined) StandingCorpus.SourceProfile else Nil
+    sourceProfile.foreach(a =>
+      require(done(a), s"'$out/$a' is missing — the build was not " +
+        "run with a profileSource; open without one or re-run " +
+        "\"mode\": \"stats\" with the source configured"))
     // Same-config rule, ENFORCED (ADVICE r18): the scaladoc has always
     // stated that cap/formatter/minJaccard/contamN must be the ones the
     // directory was built with, but nothing checked — a reopen with a
@@ -465,8 +377,9 @@ object TrainReadyCursor {
           "create the real baseline and reopen.")
         nDocs
       }
-    new TrainReadyCursor(bench, id, text, cap, epoch, formatter,
-      startRateBp, meanSpan, fimRateBp, minJaccard, contamN,
+    new TrainReadyCursor(bench,
+      StandingCorpus.Config(id, text, cap, formatter, minJaccard, contamN,
+        epoch, startRateBp, meanSpan, fimRateBp),
       profileSrc = profileSource,
       initManifest = manifest
         .select("doc_id", "fate", "n_tok", "chunk", "rank"),
@@ -484,14 +397,8 @@ object TrainReadyCursor {
         .select("doc_id", "cluster_rep"),
       initDocCount = nDocs,
       initClusteredDocs = clusteredDocs,
-      initTokenSketch = s.read.parquet(s"$out/stats/token_sketch")
-        .head().getAs[Array[Byte]]("sk"),
-      initLenQuantiles = s.read.parquet(s"$out/stats/len_quantiles"),
-      initDistinctContent = s.read.parquet(s"$out/stats/distinct_content"),
-      initSourceDistinct = profileSource.map(_ =>
-        s.read.parquet(s"$out/stats/source_distinct")),
-      initSourceLen = profileSource.map(_ =>
-        s.read.parquet(s"$out/stats/source_len")),
+      initProfile = (StandingCorpus.GlobalProfile ++ sourceProfile)
+        .map(a => a -> s.read.parquet(s"$out/$a")),
       initCapTierCrossed = capMissing)
   }
 }

@@ -129,6 +129,32 @@ class BpeSpec extends SparkSpec {
       s"encoding did not compress: ${got.values.sum} tokens vs $charsTotal chars")
   }
 
+  test("encode across three 50-rule batches matches the reference and keeps one batch checkpoint pinned") {
+    val corpus = graft.sources.Tables(spark, sf, "documents")
+    // the fixture corpus runs out of pairs before 120 merges: pad the
+    // learned table with letter-pair rules the trainer did not pick
+    val learned = TokenizerOps.bpeMerges(corpus, "text", nMerges = 120)
+      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
+    val letters = "etaoinsrhl".map(_.toString)
+    val model = (learned ++ (for (a <- letters; b <- letters) yield (a, b))
+      .filterNot(learned.contains)).take(120)
+    assert(model.length == 120, s"fixture: ${model.length} rules")
+    val (got, scope) = graft.operators.Pins.scoped(
+      TokenizerOps.bpeEncode(corpus, "doc_id", "text", model)
+        .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap)
+    try {
+      // each batch but the last is checkpointed; a superseded one is
+      // released once its successor has materialized
+      val held = scope.ids & spark.sparkContext.getPersistentRDDs.keySet
+      assert(held.size <= 1, s"batch checkpoints still pinned: $held")
+    } finally scope.release()
+    corpus.select("doc_id", "text").collect().foreach { r =>
+      val expected = referenceEncode(r.getString(1), model)
+      assert(got(r.getLong(0)) == expected,
+        s"doc ${r.getLong(0)}: got ${got(r.getLong(0))}, expected $expected")
+    }
+  }
+
   test("merges respect word boundaries (</w> marker present in final units)") {
     val got = TokenizerOps.bpeMerges(
       graft.sources.Tables(spark, sf, "documents"), "text", nMerges = 10)

@@ -88,6 +88,26 @@ class StreamingAnnSpec extends SparkSpec {
     assert(rows(cursor.assignment) == standing && cursor.tripCount == 1L)
   }
 
+  test("AnnCursor.close releases every block pinned since the open") {
+    val s = spark
+    import s.implicits._
+    val prior = (cluster(Array(1f, 0f, 0f), 0 until 20, 0.05f) ++
+      cluster(Array(0f, 1f, 0f), 20 until 40, 0.05f))
+      .toDF("vec_id", "embedding")
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    val cursor = AnnCursor(prior, "vec_id", "embedding", nlist = 2,
+      pq = true, pqM = 3, pqKsub = 4)
+    cursor.ingest(cluster(Array(1f, 0f, 0f), 100 until 110, 0.05f)
+      .toDF("vec_id", "embedding"))
+    assert((s.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
+      "fixture: an open cursor holds its artifacts")
+    cursor.close()
+    val left = s.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"closed cursor left RDDs pinned: $left")
+    cursor.close()
+    intercept[IllegalArgumentException](cursor.ingest(prior))
+  }
+
   test("AnnCursor.over: a cursor reopened over persisted Run-shaped artifacts continues the bootstrap cursor bit-for-bit") {
     val s = spark
     import s.implicits._

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{PipelineOps, Pins, StandingCorpus}
@@ -244,13 +244,10 @@ object Run {
     * swap, and a partial staged write refuses to replace the original.
     * The window store is NOT touched (its part directories are already
     * chunk-partitioned and rewritten whole by ingests), nor are the
-    * single-write stats/ann baselines. The swap (delete + move) is not
-    * atomic: on a crash between the two, the staged `<dir>__compact`
-    * holds the full verified data — move it into place to finish. */
+    * single-write stats/ann baselines. Crash contract:
+    * [[stagedSwap]]. */
   private def executeCompact(s: SparkSession, spec: Spec): String = {
-    val targets = Seq("manifest", "index/hashes", "index/postings",
-      "ann/assignment", "ann/codes")
-    val results = targets.flatMap { t =>
+    val results = ingestAppendArtifacts.flatMap { t =>
       val path = s"${spec.out}/$t"
       if (!stageDone(path)) None else Some(t -> compactDir(s, spec, t, path))
     }
@@ -260,9 +257,7 @@ object Run {
     }.mkString("[", ",", "]")
     val summary =
       s"""{"mode":"compact","out":"${esc(spec.out)}","compacted":$lines}"""
-    Files.write(Paths.get(spec.out, "COMPACT.json"),
-      summary.getBytes(StandardCharsets.UTF_8))
-    summary
+    writeSummary(spec.out, "COMPACT.json", summary)
   }
 
   /** Compact one parquet directory; returns (files before, files
@@ -284,17 +279,12 @@ object Run {
     val target =
       math.max(1L, (bytes + (128L << 20) - 1) / (128L << 20)).toInt
     val nBefore = s.read.parquet(path).count()
-    val staging = path + "__compact"
-    s.read.parquet(path).repartition(target)
-      .write.mode("overwrite").parquet(staging)
-    val nStaged = s.read.parquet(staging).count()
-    require(nStaged == nBefore,
-      s"compaction of '$path' staged $nStaged rows != $nBefore — " +
-        s"refusing the swap; staged data left at '$staging'")
-    faultPoint(spec, s"compact:staged:$artifact")
-    rmTree(dir)
-    faultPoint(spec, s"compact:swap:$artifact")
-    Files.move(Paths.get(staging), dir)
+    stagedSwap(spec, path, Staging.Compact, s":$artifact") { staging =>
+      s.read.parquet(path).repartition(target).write.parquet(staging)
+      val nStaged = s.read.parquet(staging).count()
+      verifyStaged(nStaged == nBefore, staging)(
+        s"compaction of '$path' staged $nStaged rows != $nBefore")
+    }
     (before.size.toLong, dataFiles(dir).size.toLong, nBefore)
   }
 
@@ -307,10 +297,8 @@ object Run {
     * codebook (when the build carries one) retrains and re-encodes, and
     * BOTH distortion baselines re-measure — then the entire `out/ann`
     * directory swaps atomically from a fully-verified staging copy. The
-    * old artifacts stay intact (and searchable) until the swap; a crash
-    * before it loses nothing, a crash between the delete and the move
-    * leaves the verified `out/ann__retrain` to move into place — the
-    * [[executeCompact]] contract at directory scope. The stored build
+    * old artifacts stay intact (and searchable) until the swap (the
+    * [[stagedSwap]] contract at directory scope). The stored build
     * fingerprint's `vectors` field is updated to the retrain corpus, so
     * later ingests verify against the artifacts' true provenance.
     *
@@ -330,59 +318,54 @@ object Run {
         "a PQ codebook — retrain must rebuild exactly the artifacts the " +
         "build carries")
     val vecs = s.read.parquet(spec.vectors.get)
-    val staging = s"${spec.out}/ann__retrain"
-    if (Files.exists(Paths.get(staging))) rmTree(Paths.get(staging))
+    val (nAssigned, baseRow) =
+      stagedSwap(spec, s"${spec.out}/ann", Staging.Retrain) { staging =>
+        // 1. fresh quantizer on the CURRENT corpus, then re-assign +
+        // re-baseline
+        graft.operators.SimilarityOps
+          .ivfTrain(vecs, spec.vecId, spec.vec, nlist = spec.nlist)
+          .write.parquet(s"$staging/quantizer")
+        val quant = s.read.parquet(s"$staging/quantizer")
+        graft.operators.SimilarityOps
+          .ivfAppend(vecs, spec.vecId, spec.vec, quant)
+          .write.parquet(s"$staging/assignment")
+        graft.operators.SimilarityOps
+          .ivfQuantizationError(vecs, spec.vecId, spec.vec, quant)
+          .write.parquet(s"$staging/baseline")
+        // 2. the PQ artifacts, when the build carries them
+        if (spec.pq) {
+          graft.operators.PqOps.pqTrain(vecs, spec.vecId, spec.vec,
+              m = spec.pqM, ksub = spec.pqKsub)
+            .write.parquet(s"$staging/codebook")
+          val cb = s.read.parquet(s"$staging/codebook")
+          graft.operators.PqOps.pqEncode(vecs, spec.vecId, spec.vec, cb,
+              m = spec.pqM, ksub = spec.pqKsub)
+            .write.parquet(s"$staging/codes")
+          graft.operators.PqOps.pqQuantizationError(vecs, spec.vecId,
+              spec.vec, cb, m = spec.pqM, ksub = spec.pqKsub)
+            .write.parquet(s"$staging/pq_baseline")
+        }
+        // 3. the staged index is complete and consistent: nlist centroid
+        // rows, assignment == codes == the corpus's assignable (non-zero)
+        // vectors, baselines measured over the same count
+        val nAssigned = s.read.parquet(s"$staging/assignment").count()
+        val nQuant = s.read.parquet(s"$staging/quantizer").count()
+        val baseRow = s.read.parquet(s"$staging/baseline").head()
+        verifyStaged(nQuant == spec.nlist && nAssigned > 0 &&
+            baseRow.getAs[Long]("n_vecs") == nAssigned, staging)(
+          s"staged retrain inconsistent (quantizer $nQuant rows, " +
+            s"assignment $nAssigned, baseline over " +
+            s"${baseRow.getAs[Long]("n_vecs")})")
+        if (spec.pq) {
+          val nCodes = s.read.parquet(s"$staging/codes").count()
+          verifyStaged(nCodes == nAssigned, staging)(
+            s"staged codes $nCodes != assignment $nAssigned")
+        }
+        (nAssigned, baseRow)
+      }
 
-    // 1. fresh quantizer on the CURRENT corpus, then re-assign + re-baseline
-    graft.operators.SimilarityOps
-      .ivfTrain(vecs, spec.vecId, spec.vec, nlist = spec.nlist)
-      .write.parquet(s"$staging/quantizer")
-    val quant = s.read.parquet(s"$staging/quantizer")
-    graft.operators.SimilarityOps
-      .ivfAppend(vecs, spec.vecId, spec.vec, quant)
-      .write.parquet(s"$staging/assignment")
-    graft.operators.SimilarityOps
-      .ivfQuantizationError(vecs, spec.vecId, spec.vec, quant)
-      .write.parquet(s"$staging/baseline")
-    // 2. the PQ artifacts, when the build carries them
-    if (spec.pq) {
-      graft.operators.PqOps.pqTrain(vecs, spec.vecId, spec.vec,
-          m = spec.pqM, ksub = spec.pqKsub)
-        .write.parquet(s"$staging/codebook")
-      val cb = s.read.parquet(s"$staging/codebook")
-      graft.operators.PqOps.pqEncode(vecs, spec.vecId, spec.vec, cb,
-          m = spec.pqM, ksub = spec.pqKsub)
-        .write.parquet(s"$staging/codes")
-      graft.operators.PqOps.pqQuantizationError(vecs, spec.vecId,
-          spec.vec, cb, m = spec.pqM, ksub = spec.pqKsub)
-        .write.parquet(s"$staging/pq_baseline")
-    }
-
-    // 3. verify the staged index is complete and consistent BEFORE any
-    // destructive step: nlist centroid rows, assignment == codes ==
-    // the corpus's assignable (non-zero) vectors, baselines measured
-    // over the same count
-    val nAssigned = s.read.parquet(s"$staging/assignment").count()
-    val nQuant = s.read.parquet(s"$staging/quantizer").count()
-    val baseRow = s.read.parquet(s"$staging/baseline").head()
-    require(nQuant == spec.nlist && nAssigned > 0 &&
-        baseRow.getAs[Long]("n_vecs") == nAssigned,
-      s"staged retrain inconsistent (quantizer $nQuant rows, assignment " +
-        s"$nAssigned, baseline over ${baseRow.getAs[Long]("n_vecs")}) — " +
-        s"refusing the swap; staged data left at '$staging'")
-    if (spec.pq) {
-      val nCodes = s.read.parquet(s"$staging/codes").count()
-      require(nCodes == nAssigned,
-        s"staged codes $nCodes != assignment $nAssigned — refusing the " +
-          s"swap; staged data left at '$staging'")
-    }
-
-    // 4. the swap, then re-point the stored fingerprint's vectors field
-    // (shape is unchanged — checked above; provenance is not)
-    faultPoint(spec, "retrain:staged")
-    rmTree(Paths.get(s"${spec.out}/ann"))
-    faultPoint(spec, "retrain:swap")
-    Files.move(Paths.get(staging), Paths.get(s"${spec.out}/ann"))
+    // 4. re-point the stored fingerprint's vectors field (shape is
+    // unchanged — checked above; provenance is not)
     val fpp = fingerprintPath(spec.out)
     if (Files.exists(fpp)) {
       val prior = new ObjectMapper().readTree(Files.readString(fpp))
@@ -400,9 +383,7 @@ object Run {
         s""""out":"${esc(spec.out)}","n_vecs":$nAssigned,""" +
         s""""baseline_mean":${baseRow.getAs[Double]("mean_qerr")}""" +
         pqJson + "}"
-    Files.write(Paths.get(spec.out, "RETRAIN.json"),
-      summary.getBytes(StandardCharsets.UTF_8))
-    summary
+    writeSummary(spec.out, "RETRAIN.json", summary)
   }
 
   /** `"mode": "audit"` — the read-only consistency fsck over a build
@@ -417,9 +398,9 @@ object Run {
     * Checks, each reported as its own line (`ok` per check, `ok`
     * overall; a check that itself errors reports as a failure with the
     * error text, and never stops the remaining checks):
-    *   - `staging_leftover`   no `*__compact` / `*__advance` /
-    *     `ann__retrain` staging directory anywhere under `out` (each is
-    *     a verified swap the crash contract says to finish by hand)
+    *   - `staging_leftover`   no `<artifact>__<kind>` staging directory
+    *     ([[Staging]] lists the kinds) anywhere under `out` (each is a
+    *     verified swap the crash contract says to finish by hand)
     *   - `stage_complete`     every artifact directory that EXISTS
     *     carries `_SUCCESS` (a dir without one is a partial write)
     *   - `fingerprint`        `_spec_fingerprint.json` present
@@ -473,67 +454,69 @@ object Run {
     * (r17); measured at the stats/compact maintenance band (22 s at
     * 600k docs). The audit is schedulable at the same cadence as
     * `mode=compact`. */
-  private def executeAudit(s: SparkSession, spec: Spec): String = {
+  private def executeAudit(s: SparkSession, spec: Spec): String =
+    audit(s, spec)._1
+
+  /** One audit check's outcome. `recovery` is the manual recovery
+    * [[executeRepair]] reports when the check still fails after the
+    * mechanical repair arms. A skipped check is `ok`, its `detail` says
+    * why it was skipped. */
+  private final case class Finding(check: String, artifact: String,
+      ok: Boolean, detail: String, recovery: String,
+      skipped: Boolean = false)
+
+  /** Run the [[executeAudit]] checks and write `out/AUDIT.json`; returns
+    * its content and the findings it lists. */
+  private def audit(s: SparkSession, spec: Spec): (String, Seq[Finding]) = {
     val out = spec.out
     require(Files.isDirectory(Paths.get(out)),
       s"audit target '$out' is not a directory")
 
     // shape params from the stored fingerprint (fall back to the spec)
-    val fpNode: Option[JsonNode] = {
-      val p = fingerprintPath(out)
-      if (Files.exists(p)) Some(new ObjectMapper().readTree(Files.readString(p)))
-      else None
-    }
-    val shape = fpNode.map(_.get("shape"))
-    def shapeInt(k: String, dflt: Int): Int =
-      shape.flatMap(n => Option(n.get(k))).map(_.asInt).getOrElse(dflt)
-    def shapeLong(k: String, dflt: Long): Long =
-      shape.flatMap(n => Option(n.get(k))).map(_.asLong).getOrElse(dflt)
-    def shapeStr(k: String, dflt: String): String =
-      shape.flatMap(n => Option(n.get(k))).map(_.asText).getOrElse(dflt)
-    val chunksPerPart = shapeLong("chunksPerPart", spec.chunksPerPart)
-    val nlist = shapeInt("nlist", spec.nlist)
-    val pqM = shapeInt("pqM", spec.pqM)
-    val pqKsub = shapeInt("pqKsub", spec.pqKsub)
-    val vecId = shapeStr("vecId", spec.vecId)
+    val shape = storedShape(out)
+    val chunksPerPart =
+      shapeOr(shape, "chunksPerPart", spec.chunksPerPart)(_.asLong)
+    val nlist = shapeOr(shape, "nlist", spec.nlist)(_.asInt)
+    val pqM = shapeOr(shape, "pqM", spec.pqM)(_.asInt)
+    val pqKsub = shapeOr(shape, "pqKsub", spec.pqKsub)(_.asInt)
+    val vecId = shapeOr(shape, "vecId", spec.vecId)(_.asText)
 
-    val findings = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, Boolean, String, Boolean)] // +skipped
-    def check(name: String, artifact: String)(body: => Option[String]): Unit =
+    val findings = scala.collection.mutable.ArrayBuffer.empty[Finding]
+    def check(name: String, artifact: String,
+        recovery: String = "see the audit detail")(
+        body: => Option[String]): Unit =
       findings += (try body match {
-        case None => (name, artifact, true, "", false)
-        case Some(detail) => (name, artifact, false, detail, false)
+        case None => Finding(name, artifact, true, "", recovery)
+        case Some(detail) => Finding(name, artifact, false, detail, recovery)
       } catch {
-        case e: Exception =>
-          (name, artifact, false, s"check errored: ${e.getMessage}", false)
+        case e: Exception => Finding(name, artifact, false,
+          s"check errored: ${e.getMessage}", recovery)
       })
     // a shape-dependent check with no stored fingerprint: running it
     // against the audit spec's defaults would judge a healthy directory
     // corrupt (or error outright on a differing vecId column), so it
     // reports indeterminate instead (ADVICE r16); the fingerprint check
     // fails the audit overall either way
-    def checkShaped(name: String, artifact: String)(
+    def checkShaped(name: String, artifact: String, recovery: String)(
         body: => Option[String]): Unit =
-      if (fpNode.isDefined) check(name, artifact)(body)
-      else findings += ((name, artifact, true,
+      if (shape.isDefined) check(name, artifact, recovery)(body)
+      else findings += Finding(name, artifact, true,
         "skipped: no stored fingerprint — the build's shape params are " +
-          "unknown and the spec's defaults may not be the build's", true))
+          "unknown and the spec's defaults may not be the build's",
+        recovery, skipped = true)
+    val rebuildWindows = "the window store diverged — restore from a " +
+      "copy, or rebuild with an overwrite build"
+    val rebuildIndexes = "restore from a copy, or rebuild the indexes " +
+      "with an overwrite build over the full corpus"
+    val rerunIngest = "re-run the failed ingest (advanced artifacts skip " +
+      "via their stamp), or refresh with \"mode\": \"stats\""
+    val retrain = "rebuild the ANN artifacts with \"mode\": \"retrain\" " +
+      "on the current vector corpus"
 
     // 1. interrupted staged swaps anywhere under out
     check("staging_leftover", ".") {
-      import scala.jdk.CollectionConverters._
-      val st = Files.walk(Paths.get(out))
-      val stray =
-        try st.iterator().asScala.filter { p =>
-          val n = p.getFileName.toString
-          Files.isDirectory(p) && (n.endsWith("__compact") ||
-            n.endsWith("__advance") || n.endsWith("__recluster") ||
-            n.endsWith("__repair") || n == "ann__retrain") &&
-            // quarantined trees are already-adjudicated debris, not an
-            // interrupted swap (mode=repair moves partials there)
-            !Paths.get(out).relativize(p).toString.startsWith("_quarantine")
-        }.map(p => Paths.get(out).relativize(p).toString).toVector
-        finally st.close()
+      val stray = leftovers(out)
+        .map(l => Paths.get(out).relativize(l.staging).toString)
       if (stray.isEmpty) None
       else Some(s"interrupted staged swap(s): ${stray.mkString(", ")} — " +
         "each holds fully verified data; move it into place (or delete " +
@@ -562,7 +545,10 @@ object Run {
     // undetected — exactly the degradation the guard exists to catch
     // (ADVICE r17; build stage 0 now writes the baseline FIRST, so this
     // state only arises from a pre-r18 crash or manual deletion)
-    check("df_cap_baseline", "index/_df_cap.json") {
+    check("df_cap_baseline", "index/_df_cap.json",
+        "the doc count the labels were derived under is not recoverable " +
+          "from the artifacts — \"mode\": \"recluster\" re-derives the " +
+          "labels under the current cap and re-baselines the tier guard") {
       if (stageDone(s"$out/index/cluster_labels") &&
           !Files.exists(dfCapPath(out)))
         Some("index/cluster_labels present with no index/_df_cap.json " +
@@ -580,8 +566,10 @@ object Run {
         partial.mkString(", ") + " — a crashed write; rebuild or remove")
     }
 
-    check("fingerprint", "_spec_fingerprint.json") {
-      if (fpNode.isDefined) None
+    check("fingerprint", "_spec_fingerprint.json",
+        "no stored provenance — re-stamp by re-running the original " +
+          "build spec, or verify provenance out-of-band") {
+      if (shape.isDefined) None
       else Some("no stored spec fingerprint (pre-fingerprint or foreign " +
         "build dir) — resume/ingest shape guards cannot verify provenance")
     }
@@ -591,18 +579,18 @@ object Run {
     // 3. manifest uniqueness (the double-appended-ingest signature)
     if (done("manifest")) {
       val manifest = s.read.parquet(s"$out/manifest")
-      check("manifest_unique", "manifest") {
-        val r = manifest
-          .agg(count(lit(1)).as("n"), countDistinct(col("doc_id")).as("d"))
-          .head()
-        val (n, d) = (r.getAs[Long]("n"), r.getAs[Long]("d"))
+      check("manifest_unique", "manifest", "duplicates did not collapse " +
+          "to one row per doc — restore the manifest from a copy") {
+        val (n, d) = rowsAndKeys(manifest, "doc_id")
         if (n == d) None
         else Some(s"$n manifest rows over $d distinct doc_ids — " +
           s"${n - d} duplicated row(s); a failed ingest was likely " +
           "re-run without cleaning its partial appends")
       }
       // 4. one content hash per manifest doc
-      if (done("index/hashes")) check("hashes_count", "index/hashes") {
+      if (done("index/hashes")) check("hashes_count", "index/hashes",
+          "the hash table cannot be rebuilt from the manifest (it needs " +
+            s"the texts) — $rebuildIndexes") {
         val nh = s.read.parquet(s"$out/index/hashes").count()
         val nm = manifest.count()
         if (nh == nm) None
@@ -610,25 +598,24 @@ object Run {
           "and manifest have diverged (partial append on one side)")
       }
       // 5. no orphan postings
-      if (done("index/postings")) check("postings_docs", "index/postings") {
-        val orphans = s.read.parquet(s"$out/index/postings")
-          .select("doc_id").distinct()
-          .join(manifest.select("doc_id"), Seq("doc_id"), "left_anti")
-          .count()
-        if (orphans == 0L) None
-        else Some(s"$orphans posting doc_id(s) missing from the " +
-          "manifest — orphan shingle rows from a partial append")
-      }
+      if (done("index/postings"))
+        check("postings_docs", "index/postings", rebuildIndexes) {
+          val orphans = s.read.parquet(s"$out/index/postings")
+            .select("doc_id").distinct()
+            .join(manifest.select("doc_id"), Seq("doc_id"), "left_anti")
+            .count()
+          if (orphans == 0L) None
+          else Some(s"$orphans posting doc_id(s) missing from the " +
+            "manifest — orphan shingle rows from a partial append")
+        }
       // 5b. duplicate postings (r17): the shingle kernel emits a per-doc
       // SET, so the raw index holds at most one row per (doc, shingle)
       // by construction — duplicates are a double-appended ingest, and
       // they silently inflate every df the readers re-count from rows
       if (done("index/postings"))
-        check("postings_unique", "index/postings") {
-          val r = s.read.parquet(s"$out/index/postings")
-            .agg(count(lit(1)).as("n"),
-              countDistinct(col("doc_id"), col("sh64")).as("d")).head()
-          val (n, dn) = (r.getAs[Long]("n"), r.getAs[Long]("d"))
+        check("postings_unique", "index/postings", rebuildIndexes) {
+          val (n, dn) = rowsAndKeys(s.read.parquet(s"$out/index/postings"),
+            "doc_id", "sh64")
           if (n == dn) None
           else Some(s"$n posting rows over $dn distinct (doc, shingle) " +
             s"pairs — ${n - dn} double-appended row(s) inflating the " +
@@ -640,11 +627,10 @@ object Run {
       // is itself a member labeled with itself (the connectedComponents
       // invariant an advance must preserve)
       if (done("index/cluster_labels"))
-        check("cluster_labels", "index/cluster_labels") {
+        check("cluster_labels", "index/cluster_labels",
+            "rebuild the label table with \"mode\": \"recluster\"") {
           val labels = s.read.parquet(s"$out/index/cluster_labels")
-          val r = labels.agg(count(lit(1)).as("n"),
-            countDistinct(col("doc_id")).as("d")).head()
-          val (n, dn) = (r.getAs[Long]("n"), r.getAs[Long]("d"))
+          val (n, dn) = rowsAndKeys(labels, "doc_id")
           val orphans = labels.select("doc_id").distinct()
             .join(manifest.select("doc_id"), Seq("doc_id"), "left_anti")
             .count()
@@ -670,7 +656,7 @@ object Run {
       if (done("windows")) {
         val windows = PipelineOps.readWindows(s, s"$out/windows",
           chunksPerPart)
-        check("windows_tokens", "windows") {
+        check("windows_tokens", "windows", rebuildWindows) {
           val wt = windows
             .agg(coalesce(sum("n_tokens"), lit(0L)).as("t"))
             .head().getAs[Long]("t")
@@ -682,7 +668,7 @@ object Run {
           else Some(s"window store holds $wt tokens but the manifest " +
             s"packed $mt — the store and manifest have diverged")
         }
-        checkShaped("windows_chunks", "windows") {
+        checkShaped("windows_chunks", "windows", rebuildWindows) {
           // the RAW store read — readWindows projects `part` away, and
           // this check is precisely about the physical layout
           val r = s.read.parquet(s"$out/windows")
@@ -711,7 +697,7 @@ object Run {
     // advances through the same machinery since r17)
     val profileDirs = ingestRewriteArtifacts.filter(done)
     if (profileDirs.nonEmpty) {
-      check("profile_stamps", "stats") {
+      check("profile_stamps", "stats", rerunIngest) {
         val stamps = profileDirs.map { d =>
           val p = Paths.get(out, d, "_advanced_from")
           d -> (if (Files.exists(p)) Some(Files.readString(p)) else None)
@@ -724,7 +710,7 @@ object Run {
           "lagging ones (re-run the ingest: advanced artifacts skip via " +
           "their stamp) before the next ingest")
       }
-      check("profile_readable", "stats") {
+      check("profile_readable", "stats", rerunIngest) {
         import graft.operators.RelationalOps
         import StandingCorpus.{DistinctContent, LenQuantiles, TokenSketch}
         def read(a: String) = s.read.parquet(s"$out/$a")
@@ -748,7 +734,7 @@ object Run {
     // 9. the ANN index family
     if (done("ann/quantizer")) {
       val quant = s.read.parquet(s"$out/ann/quantizer")
-      checkShaped("ann_quantizer", "ann/quantizer") {
+      checkShaped("ann_quantizer", "ann/quantizer", retrain) {
         val r = quant.agg(count(lit(1)).as("n"),
           countDistinct(col("list")).as("d"),
           coalesce(max(col("list")), lit(-1)).as("m")).head()
@@ -763,23 +749,20 @@ object Run {
         // the duplicate-id arm is shape-free and always runs; the
         // list-range arm needs the build's nlist, so without a stored
         // fingerprint it is folded into the shape-skip set
-        check("ann_assignment", "ann/assignment") {
-          val r = assign.agg(count(lit(1)).as("n"),
-            countDistinct(col("vec_id")).as("d"),
-            coalesce(sum(when(col("l") < 0 || col("l") >= nlist, 1L)
-              .otherwise(0L)), lit(0L)).as("oor")).head()
-          val (n, d, oor) = (r.getAs[Long]("n"), r.getAs[Long]("d"),
-            r.getAs[Long]("oor"))
+        check("ann_assignment", "ann/assignment", retrain) {
+          val (n, d) = rowsAndKeys(assign, "vec_id")
+          lazy val oor =
+            assign.filter(col("l") < 0 || col("l") >= nlist).count()
           if (n != d)
             Some(s"$n assignment rows over $d distinct vec_ids — " +
               s"${n - d} duplicated row(s); a failed ANN ingest was " +
               "likely re-run without cleaning its partial appends")
-          else if (fpNode.isDefined && oor != 0L)
+          else if (shape.isDefined && oor != 0L)
             Some(s"$oor assignment row(s) reference a list id outside " +
               s"0..${nlist - 1} — assigned against a DIFFERENT quantizer")
           else None
         }
-        check("ann_baseline", "ann/baseline") {
+        check("ann_baseline", "ann/baseline", retrain) {
           if (!done("ann/baseline"))
             Some("assignment exists but the training-distortion baseline " +
               "is missing — the ingest drift gate cannot run")
@@ -793,44 +776,44 @@ object Run {
               "(>= 1, <= the standing assignment)")
           }
         }
-        if (done("ann/codes")) checkShaped("ann_codes", "ann/codes") {
-          val codes = s.read.parquet(s"$out/ann/codes")
-            .select(col(vecId).as("vec_id"))
-          val nc = codes.count()
-          val na = assign.count()
-          if (nc != na)
-            Some(s"$nc code rows != $na assignment rows — the PQ codes " +
-              "and IVF assignment have diverged (partial append on one " +
-              "side)")
-          else {
-            val unmatched = codes
-              .join(assign.select("vec_id"), Seq("vec_id"), "left_anti")
-              .count()
-            if (unmatched == 0L) None
-            else Some(s"$unmatched code row(s) for vec_ids absent from " +
-              "the assignment — encoded and assigned sets have diverged")
+        if (done("ann/codes"))
+          checkShaped("ann_codes", "ann/codes", retrain) {
+            val codes = s.read.parquet(s"$out/ann/codes")
+              .select(col(vecId).as("vec_id"))
+            val nc = codes.count()
+            val na = assign.count()
+            if (nc != na)
+              Some(s"$nc code rows != $na assignment rows — the PQ codes " +
+                "and IVF assignment have diverged (partial append on one " +
+                "side)")
+            else {
+              val unmatched = codes
+                .join(assign.select("vec_id"), Seq("vec_id"), "left_anti")
+                .count()
+              if (unmatched == 0L) None
+              else Some(s"$unmatched code row(s) for vec_ids absent from " +
+                "the assignment — encoded and assigned sets have diverged")
+            }
           }
+      }
+      if (done("ann/codebook"))
+        checkShaped("ann_codebook", "ann/codebook", retrain) {
+          val n = s.read.parquet(s"$out/ann/codebook").count()
+          if (n == pqM.toLong * pqKsub) None
+          else Some(s"codebook has $n rows, expected m x ksub = " +
+            s"${pqM.toLong * pqKsub}")
         }
-      }
-      if (done("ann/codebook")) checkShaped("ann_codebook", "ann/codebook") {
-        val n = s.read.parquet(s"$out/ann/codebook").count()
-        if (n == pqM.toLong * pqKsub) None
-        else Some(s"codebook has $n rows, expected m x ksub = " +
-          s"${pqM.toLong * pqKsub}")
-      }
     }
 
-    val ok = findings.forall(_._3)
-    val lines = findings.map { case (name, artifact, o, detail, skip) =>
-      s"""{"check":"${esc(name)}","artifact":"${esc(artifact)}",""" +
-        s""""ok":$o,"detail":"${esc(detail)}"""" +
-        (if (skip) ""","skipped":true""" else "") + "}"
+    val lines = findings.map { f =>
+      s"""{"check":"${esc(f.check)}","artifact":"${esc(f.artifact)}",""" +
+        s""""ok":${f.ok},"detail":"${esc(f.detail)}"""" +
+        (if (f.skipped) ""","skipped":true""" else "") + "}"
     }.mkString("[", ",", "]")
-    val summary =
-      s"""{"mode":"audit","out":"${esc(out)}","ok":$ok,"checks":$lines}"""
-    Files.write(Paths.get(out, "AUDIT.json"),
-      summary.getBytes(StandardCharsets.UTF_8))
-    summary
+    val summary = s"""{"mode":"audit","out":"${esc(out)}",""" +
+      s""""ok":${findings.forall(_.ok)},"checks":$lines}"""
+    writeSummary(out, "AUDIT.json", summary)
+    (summary, findings.toSeq)
   }
 
   /** The df-cap baseline record `out/index/_df_cap.json` (VERDICT r16
@@ -869,9 +852,8 @@ object Run {
     * until the NEXT crossing. Historical manifest FATES stay frozen by
     * design (the frozen-prior contract: a prior doc's fate is never
     * revisited) — the recluster re-baselines the label artifact that
-    * future ingests fate against. Staged-swap crash contract as
-    * [[executeRetrain]]: a leftover `cluster_labels__recluster` holds
-    * the fully built table — move it into place (or `mode=repair`).
+    * future ingests fate against. Crash contract: [[stagedSwap]] (a
+    * leftover `cluster_labels__recluster` holds the fully built table).
     * Only `out` is needed beyond the build's shape fields (the doc
     * count comes off the manifest). */
   private def executeRecluster(s: SparkSession, spec: Spec): String = {
@@ -882,46 +864,42 @@ object Run {
       s"'$out' has no posting index + manifest — recluster rebuilds an " +
         "existing build's label artifact")
     val nDocs = s.read.parquet(s"$out/manifest").count()
-    val run = graft.operators.DedupOps.connectedComponentsManaged(
-      graft.operators.DedupOps.ngramJaccardPairsFromPostings(
-        s.read.parquet(s"$out/index/postings"), nDocs, spec.minJaccard),
-      "da", "db")
-    val staging = s"$out/index/cluster_labels__recluster"
-    if (Files.exists(Paths.get(staging))) rmTree(Paths.get(staging))
-    run.labels.write.parquet(staging)
-    run.release()
-    val nLabels = s.read.parquet(staging).count()
-    // carry the stats artifacts' advance stamp onto the rebuilt table so
-    // the audit's per-ingest coherence check stays meaningful (the
-    // reclustered table covers exactly the same corpus state)
-    val stampSrc = Paths.get(out, StandingCorpus.TokenSketch, "_advanced_from")
-    if (Files.exists(stampSrc))
-      Files.copy(stampSrc, Paths.get(staging, "_advanced_from"))
-    // the doc count this staging was derived under, persisted INSIDE the
-    // staging (ADVICE r17): when a crash lands between the delete and
-    // the move, mode=repair completes the swap — and must re-baseline
-    // the tier guard to THIS count, not the manifest's at repair time
-    // (an ingest may have run in the window; it warned about the missing
-    // label dir but appended to the manifest, so the rebuilt labels do
-    // not cover it — repair compares and reports manual on a mismatch).
-    Files.writeString(Paths.get(staging, "_recluster_docs"),
-      nDocs.toString)
-    faultPoint(spec, "recluster:staged")
     // also the creation path for a pre-label (pre-r17) build dir: with
     // no standing table the swap is just the move
-    if (Files.exists(Paths.get(s"$out/index/cluster_labels")))
-      rmTree(Paths.get(s"$out/index/cluster_labels"))
-    faultPoint(spec, "recluster:swap")
-    Files.move(Paths.get(staging), Paths.get(s"$out/index/cluster_labels"))
+    val nLabels = stagedSwap(spec, s"$out/index/cluster_labels",
+        Staging.Recluster) { staging =>
+      val labels = graft.operators.DedupOps.connectedComponents(
+        graft.operators.DedupOps.ngramJaccardPairsFromPostings(
+          s.read.parquet(s"$out/index/postings"), nDocs, spec.minJaccard),
+        "da", "db")
+      labels.write.parquet(staging)
+      Pins.release(labels)
+      // carry the stats artifacts' advance stamp onto the rebuilt table
+      // so the audit's per-ingest coherence check stays meaningful (the
+      // reclustered table covers exactly the same corpus state)
+      val stampSrc =
+        Paths.get(out, StandingCorpus.TokenSketch, "_advanced_from")
+      if (Files.exists(stampSrc))
+        Files.copy(stampSrc, Paths.get(staging, "_advanced_from"))
+      // the doc count this staging was derived under, persisted INSIDE
+      // the staging (ADVICE r17): when a crash lands between the delete
+      // and the move, mode=repair completes the swap — and must
+      // re-baseline the tier guard to THIS count, not the manifest's at
+      // repair time (an ingest may have run in the window; it warned
+      // about the missing label dir but appended to the manifest, so the
+      // rebuilt labels do not cover it — repair compares and reports
+      // manual on a mismatch).
+      Files.writeString(Paths.get(staging, "_recluster_docs"),
+        nDocs.toString)
+      s.read.parquet(staging).count()
+    }
     faultPoint(spec, "recluster:before_dfcap")
     writeDfCap(out, nDocs)
     val summary =
       s"""{"mode":"recluster","out":"${esc(out)}","docs":$nDocs,""" +
         s""""cap":${graft.operators.DedupOps.dfCapFor(nDocs)},""" +
         s""""n_labels":$nLabels}"""
-    Files.write(Paths.get(out, "RECLUSTER.json"),
-      summary.getBytes(StandardCharsets.UTF_8))
-    summary
+    writeSummary(out, "RECLUSTER.json", summary)
   }
 
   /** `"mode": "repair"` — the WRITE arm of the fsck (VERDICT r16 #4):
@@ -939,8 +917,8 @@ object Run {
     *     (ingest itself refuses to run over a pending journal); an
     *     orphan `_ingest_backup` without the journal is setup debris
     *     from a crash before any mutation — deleted
-    *   - interrupted staged swaps (`*__compact` / `*__advance` /
-    *     `*__recluster` / `ann__retrain`): COMPLETED (staging moved into
+    *   - interrupted staged swaps (a `<artifact>__<kind>` staging,
+    *     [[Staging]] lists the kinds): COMPLETED (staging moved into
     *     place) when the original is gone and the staging is
     *     `_SUCCESS`-complete — the crash landed between the delete and
     *     the move, past verification; ROLLED BACK (staging deleted) when
@@ -972,7 +950,6 @@ object Run {
     * corruption → audit flags → repair → audit CLEAN, content ≡
     * pre-crash. */
   private def executeRepair(s: SparkSession, spec: Spec): String = {
-    import scala.jdk.CollectionConverters._
     val out = spec.out
     require(Files.isDirectory(Paths.get(out)),
       s"repair target '$out' is not a directory")
@@ -1012,9 +989,8 @@ object Run {
         val arr = files.get(a)
         val keep = (0 until arr.size).map(arr.get(_).asText).toSet
         val dir = Paths.get(out, a)
-        listFileNames(dir).filterNot(keep).foreach { f =>
-          Files.delete(dir.resolve(f)); deleted += 1
-        }
+        listNames(dir)(Files.isRegularFile(_)).filterNot(keep)
+          .foreach { f => Files.delete(dir.resolve(f)); deleted += 1 }
         // a crash MID-write also leaves the committer's _temporary tree
         val tmp = dir.resolve("_temporary")
         if (Files.exists(tmp)) rmTree(tmp)
@@ -1027,12 +1003,12 @@ object Run {
         if (Files.exists(tmp)) rmTree(tmp)
       }
       val wb = backupP.resolve("windows_parts")
-      listDirNames(wb).foreach(p =>
+      listNames(wb)(Files.isDirectory(_)).foreach(p =>
         copyTree(wb.resolve(p), windows.resolve(p)))
       ingestRewriteArtifacts.foreach { a =>
         val b = backupP.resolve(a.replace("/", "__"))
         val cur = Paths.get(out, a)
-        val stagingA = Paths.get(out, a + "__advance")
+        val stagingA = stagingOf(s"$out/$a", Staging.Advance)
         if (Files.isDirectory(b)) {
           if (Files.exists(stagingA)) rmTree(stagingA)
           if (Files.exists(cur)) rmTree(cur)
@@ -1070,37 +1046,16 @@ object Run {
     }
 
     // 1. interrupted staged swaps: complete, roll back, or quarantine
-    val st = Files.walk(Paths.get(out))
-    val staged =
-      try st.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        Files.isDirectory(p) && (n.endsWith("__compact") ||
-          n.endsWith("__advance") || n.endsWith("__recluster") ||
-          n.endsWith("__repair") || n == "ann__retrain") &&
-          !Paths.get(out).relativize(p).toString.startsWith("_quarantine")
-      }.toVector
-      finally st.close()
-    staged.foreach { p =>
-      val rel = Paths.get(out).relativize(p).toString
-      val original = p.resolveSibling(
-        p.getFileName.toString
-          .replaceAll("__(compact|advance|recluster|repair|retrain)$", ""))
-      // a staged write is trustworthy only when its own markers are
-      // complete (ann__retrain is a directory TREE — its children carry
-      // the markers)
-      val verified =
-        if (p.getFileName.toString == "ann__retrain")
-          Seq("quantizer", "assignment", "baseline")
-            .forall(c => stageDone(s"$p/$c"))
-        else stageDone(p.toString)
-      if (Files.exists(original))
+    leftovers(out).foreach { l =>
+      val rel = Paths.get(out).relativize(l.staging).toString
+      if (Files.exists(l.original))
         // the original survived — the crash hit before the destructive
         // half, so the staging is superseded debris: roll back
-        { rmTree(p); actions += (("rolled_back_swap", rel,
-          s"original '${Paths.get(out).relativize(original)}' intact — " +
+        { rmTree(l.staging); actions += (("rolled_back_swap", rel,
+          s"original '${Paths.get(out).relativize(l.original)}' intact — " +
             "staging deleted; re-run the producing job")) }
-      else if (verified) {
-        Files.move(p, original)
+      else if (l.verified) {
+        finishSwap(l.staging, l.original)
         // a completed RECLUSTER swap must also re-baseline the tier
         // guard (executeRecluster writes _df_cap.json after its move, so
         // a crash between the two leaves the guard firing on a directory
@@ -1113,10 +1068,9 @@ object Run {
         // reported manual with the recovery named instead of silencing
         // the guard against a baseline the labels don't honor.
         val extra =
-          if (p.getFileName.toString == "cluster_labels__recluster" &&
-              stageDone(s"$out/manifest")) {
+          if (l.kind == Staging.Recluster && stageDone(s"$out/manifest")) {
             val nManifest = s.read.parquet(s"$out/manifest").count()
-            val marker = Paths.get(original.toString, "_recluster_docs")
+            val marker = l.original.resolve("_recluster_docs")
             val derivedUnder =
               if (Files.exists(marker))
                 Files.readString(marker).trim.toLong
@@ -1137,12 +1091,12 @@ object Run {
             }
           } else ""
         actions += (("completed_swap",
-          Paths.get(out).relativize(original).toString,
+          Paths.get(out).relativize(l.original).toString,
           s"moved '$rel' into place — the crash landed between the " +
             s"delete and the move, past verification$extra"))
       }
       else {
-        val q = quarantine(p)
+        val q = quarantine(l.staging)
         manual += ((rel, s"staging incomplete AND original missing — " +
           s"quarantined to '$q'; rebuild with the producing mode"))
       }
@@ -1165,24 +1119,20 @@ object Run {
     // 3. double-appended manifest → keep each doc's first-append row
     if (stageDone(s"$out/manifest")) {
       val manifest = s.read.parquet(s"$out/manifest")
-      val r = manifest
-        .agg(count(lit(1)).as("n"), countDistinct(col("doc_id")).as("d"))
-        .head()
-      val (n, d) = (r.getAs[Long]("n"), r.getAs[Long]("d"))
+      val (n, d) = rowsAndKeys(manifest, "doc_id")
       if (n != d) {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("doc_id")
           .orderBy(col("rank").asc_nulls_last, col("chunk").asc_nulls_last)
-        val deduped = manifest.withColumn("__rk", row_number().over(w))
-          .filter(col("__rk") === 1).drop("__rk")
-        val staging = s"$out/manifest__repair"
-        deduped.write.mode("overwrite").parquet(staging)
-        val nStaged = s.read.parquet(staging).count()
-        require(nStaged == d,
-          s"manifest dedup staged $nStaged rows != $d distinct docs — " +
-            s"refusing the swap; staged data left at '$staging'")
-        rmTree(Paths.get(s"$out/manifest"))
-        Files.move(Paths.get(staging), Paths.get(s"$out/manifest"))
+        stagedSwap(spec, s"$out/manifest", Staging.Repair, ":manifest") {
+          staging =>
+            manifest.withColumn("__rk", row_number().over(w))
+              .filter(col("__rk") === 1).drop("__rk")
+              .write.parquet(staging)
+            val nStaged = s.read.parquet(staging).count()
+            verifyStaged(nStaged == d, staging)(
+              s"manifest dedup staged $nStaged rows != $d distinct docs")
+        }
         actions += (("deduped_manifest", "manifest",
           s"${n - d} double-appended row(s) removed (kept each doc's " +
             "first-append row). NOTE: if the retried ingest also " +
@@ -1194,16 +1144,11 @@ object Run {
     // 4. duplicated appends on the key-unique artifacts — row-identical
     // by determinism (a retry against the same frozen artifacts/kernels
     // computes the same rows), so a verified distinct() reverses them;
-    // anything else is manual. The codes id column comes from the
-    // stored fingerprint when present (the audit's rule: judge the
-    // directory against what BUILT it).
-    val codesId = {
-      val p = fingerprintPath(out)
-      if (!Files.exists(p)) spec.vecId
-      else Option(new ObjectMapper().readTree(Files.readString(p))
-          .at("/shape/vecId"))
-        .filter(!_.isMissingNode).map(_.asText).getOrElse(spec.vecId)
-    }
+    // rows that do not collapse to one per key refuse the swap and are
+    // manual. The codes id column comes from the stored fingerprint when
+    // present (the audit's rule: judge the directory against what BUILT
+    // it).
+    val codesId = shapeOr(storedShape(out), "vecId", spec.vecId)(_.asText)
     Seq(
       ("ann/assignment", Seq("vec_id"), "deduped_ann",
         "restore from a copy or rebuild with \"mode\": \"retrain\""),
@@ -1215,26 +1160,24 @@ object Run {
       .foreach { case (art, keys, actionName, recovery) =>
         if (stageDone(s"$out/$art")) {
           val t = s.read.parquet(s"$out/$art")
-          val r = t.agg(count(lit(1)).as("n"),
-            countDistinct(col(keys.head), keys.tail.map(col): _*).as("d"))
-            .head()
-          val (n, d) = (r.getAs[Long]("n"), r.getAs[Long]("d"))
-          if (n != d) {
-            val staging = s"$out/${art}__repair"
-            t.distinct().write.mode("overwrite").parquet(staging)
-            val nStaged = s.read.parquet(staging).count()
-            if (nStaged == d) {
-              rmTree(Paths.get(s"$out/$art"))
-              Files.move(Paths.get(staging), Paths.get(s"$out/$art"))
-              actions += ((actionName, art,
-                s"${n - d} double-appended row(s) removed (row-identical " +
-                  "retry appends)"))
-            } else {
-              rmTree(Paths.get(staging))
+          val (n, d) = rowsAndKeys(t, keys: _*)
+          if (n != d) try {
+            stagedSwap(spec, s"$out/$art", Staging.Repair, s":$art") {
+              staging =>
+                t.distinct().write.parquet(staging)
+                val nStaged = s.read.parquet(staging).count()
+                verifyStaged(nStaged == d, staging)(
+                  s"dedup of '$art' staged $nStaged rows != $d keys")
+            }
+            actions += ((actionName, art,
+              s"${n - d} double-appended row(s) removed (row-identical " +
+                "retry appends)"))
+          } catch {
+            case r: SwapRefused =>
+              rmTree(Paths.get(r.staging))
               manual += ((art, s"$n rows over $d distinct keys do NOT " +
                 "collapse to one row per key — the duplicates differ " +
                 s"(appended against different artifacts?); $recovery"))
-            }
           }
         }
       }
@@ -1242,49 +1185,13 @@ object Run {
     // close the loop (the scaladoc's promise): whatever the audit still
     // flags AFTER the mechanical arms is genuinely non-reversible from
     // the artifacts alone — surface each residual failure as a manual
-    // entry carrying the applicable recovery, so REPAIR.json alone tells
+    // entry carrying its check's recovery, so REPAIR.json alone tells
     // the operator everything left to do (the audit also re-lands
     // out/AUDIT.json reflecting the post-repair state)
-    val residual = new ObjectMapper().readTree(executeAudit(s, spec))
-    val resChecks = residual.get("checks")
-    (0 until resChecks.size).map(resChecks.get)
-      .filter(!_.get("ok").asBoolean).foreach { c =>
-        val name = c.get("check").asText
-        val recovery = name match {
-          case "hashes_count" =>
-            "the hash table cannot be rebuilt from the manifest (it " +
-              "needs the texts) — restore from a copy, or rebuild the " +
-              "indexes with an overwrite build over the full corpus"
-          case "windows_tokens" | "windows_chunks" =>
-            "the window store diverged — restore from a copy, or " +
-              "rebuild with an overwrite build"
-          case n if n.startsWith("ann_") =>
-            "rebuild the ANN artifacts with \"mode\": \"retrain\" on " +
-              "the current vector corpus"
-          case n if n.startsWith("profile_") =>
-            "re-run the failed ingest (advanced artifacts skip via " +
-              "their stamp), or refresh with \"mode\": \"stats\""
-          case "cluster_labels" =>
-            "rebuild the label table with \"mode\": \"recluster\""
-          case "df_cap_baseline" =>
-            "the doc count the labels were derived under is not " +
-              "recoverable from the artifacts — \"mode\": \"recluster\" " +
-              "re-derives the labels under the current cap and " +
-              "re-baselines the tier guard"
-          case "postings_docs" | "postings_unique" =>
-            "restore from a copy, or rebuild the indexes with an " +
-              "overwrite build over the full corpus"
-          case "manifest_unique" =>
-            "duplicates did not collapse to one row per doc — restore " +
-              "the manifest from a copy"
-          case "fingerprint" =>
-            "no stored provenance — re-stamp by re-running the " +
-              "original build spec, or verify provenance out-of-band"
-          case _ => "see the audit detail"
-        }
-        manual += ((s"$name (${c.get("artifact").asText})",
-          s"${c.get("detail").asText} -> $recovery"))
-      }
+    audit(s, spec)._2.filterNot(_.ok).foreach { f =>
+      manual += ((s"${f.check} (${f.artifact})",
+        s"${f.detail} -> ${f.recovery}"))
+    }
 
     val actionLines = actions.map { case (a, art, detail) =>
       s"""{"action":"${esc(a)}","artifact":"${esc(art)}",""" +
@@ -1297,9 +1204,7 @@ object Run {
       s"""{"mode":"repair","out":"${esc(out)}",""" +
         s""""n_actions":${actions.size},"actions":$actionLines,""" +
         s""""manual":$manualLines}"""
-    Files.write(Paths.get(out, "REPAIR.json"),
-      summary.getBytes(StandardCharsets.UTF_8))
-    summary
+    writeSummary(out, "REPAIR.json", summary)
   }
 
   /** `"mode": "stats"` — the EXACT stats refresh the ingest scaladoc
@@ -1343,9 +1248,7 @@ object Run {
       s"""{"mode":"stats","corpus":"${esc(spec.corpus)}",""" +
         s""""out":"${esc(spec.out)}","n_heavy_tokens":$nHeavy""" +
         profileSummary(s, spec.out).map("," + _).getOrElse("") + "}"
-    Files.write(Paths.get(spec.out, "STATS.json"),
-      summary.getBytes(StandardCharsets.UTF_8))
-    summary
+    writeSummary(spec.out, "STATS.json", summary)
   }
 
   /** A stage directory counts as DONE only with its `_SUCCESS` marker —
@@ -1361,6 +1264,109 @@ object Run {
       .iterator().asScala.foreach(Files.delete)
     finally st.close()
   }
+
+  /** The staging kinds of [[stagedSwap]]: the suffix a job gives its
+    * staging directory and the prefix of its two fault seams. */
+  private object Staging {
+    val Compact = "compact"
+    val Advance = "advance"
+    val Recluster = "recluster"
+    val Repair = "repair"
+    val Retrain = "retrain"
+    val Kinds = Seq(Compact, Advance, Recluster, Repair, Retrain)
+  }
+
+  private def stagingOf(path: String, kind: String): java.nio.file.Path =
+    Paths.get(s"${path}__$kind")
+
+  /** Staged data that failed verification: the swap is refused and the
+    * staging left in place for inspection. */
+  private final class SwapRefused(detail: String, val staging: String)
+      extends IllegalArgumentException(
+        s"$detail — refusing the swap; staged data left at '$staging'")
+
+  private def verifyStaged(ok: Boolean, staging: String)(
+      detail: => String): Unit =
+    if (!ok) throw new SwapRefused(detail, staging)
+
+  /** The one commit protocol of every job that rewrites an artifact
+    * whole: remove a stale `<path>__<kind>`, run `stage` on it (write,
+    * [[verifyStaged]], add markers), delete the original if there is
+    * one, move the staging into place; returns what `stage` returned.
+    * A crash before the delete leaves the original intact and the
+    * staging debris; a crash between the delete and the move leaves the
+    * verified staging, which finishes the job once moved into place.
+    * Audit and repair find either state by its name ([[leftovers]]).
+    * The fault seams `<kind>:staged<seam>` and `<kind>:swap<seam>` fire
+    * after the stage and between the delete and the move. */
+  private def stagedSwap[T](spec: Spec, path: String, kind: String,
+      seam: String = "")(stage: String => T): T = {
+    val (staging, original) = (stagingOf(path, kind), Paths.get(path))
+    if (Files.exists(staging)) rmTree(staging)
+    val staged = stage(staging.toString)
+    faultPoint(spec, s"$kind:staged$seam")
+    if (Files.exists(original)) rmTree(original)
+    faultPoint(spec, s"$kind:swap$seam")
+    finishSwap(staging, original)
+    staged
+  }
+
+  /** The swap's last step, where repair resumes a swap a crash cut
+    * between the delete and the move. */
+  private def finishSwap(staging: java.nio.file.Path,
+      original: java.nio.file.Path): Unit =
+    Files.move(staging, original)
+
+  /** A staging directory an interrupted swap left, and the original it
+    * replaces. */
+  private final case class Leftover(staging: java.nio.file.Path,
+      original: java.nio.file.Path, kind: String) {
+    /** The staged write is complete: its own `_SUCCESS` marker, or for a
+      * retrain (a directory tree) its children's. */
+    def verified: Boolean =
+      if (kind == Staging.Retrain)
+        Seq("quantizer", "assignment", "baseline")
+          .forall(c => stageDone(staging.resolve(c).toString))
+      else stageDone(staging.toString)
+  }
+
+  /** Every leftover staging directory under `out`, except under
+    * `_quarantine` (debris repair has already adjudicated). */
+  private def leftovers(out: String): Seq[Leftover] = {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(out)
+    val st = Files.walk(root)
+    try st.iterator().asScala
+      .filter(p => Files.isDirectory(p) &&
+        !root.relativize(p).toString.startsWith("_quarantine"))
+      .flatMap { p =>
+        val n = p.getFileName.toString
+        Staging.Kinds.find(k => n.endsWith(s"__$k")).map(k =>
+          Leftover(p, p.resolveSibling(n.stripSuffix(s"__$k")), k))
+      }.toVector
+    finally st.close()
+  }
+
+  /** Rows of `t` and its distinct `keys` — unequal counts are the
+    * signature of a duplicated append. */
+  private def rowsAndKeys(t: DataFrame, keys: String*): (Long, Long) = {
+    val r = t.agg(count(lit(1)),
+      countDistinct(col(keys.head), keys.tail.map(col): _*)).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** The `shape` of `out`'s stored build fingerprint — audit and repair
+    * judge a directory against what BUILT it. None without one. */
+  private def storedShape(out: String): Option[JsonNode] = {
+    val p = fingerprintPath(out)
+    if (!Files.exists(p)) None
+    else Some(new ObjectMapper().readTree(Files.readString(p)).path("shape"))
+  }
+
+  private def shapeOr[T](shape: Option[JsonNode], key: String, dflt: T)(
+      read: JsonNode => T): T =
+    shape.map(_.path(key)).filterNot(_.isMissingNode).map(read)
+      .getOrElse(dflt)
 
   /** Canonical fingerprint strings the resume/ingest guard compares
     * (ADVICE r14). `shape` covers every spec field that determines the
@@ -1466,9 +1472,9 @@ object Run {
     // as its own artifact so every later ingest ADVANCES it (supernode
     // contraction, [[graft.operators.DedupOps.connectedComponentsIncremental]])
     // instead of re-clustering, and derives the increment's near-dup
-    // fates from the same run. Built through the managed handle so the
-    // propagation rounds' checkpoint blocks are freed as soon as the
-    // artifact lands. Scale note: the table holds only docs with ≥1
+    // fates from the same run. The propagation rounds' checkpoint blocks
+    // are released as soon as the artifact lands (and by the mode's
+    // scope if the write throws). Scale note: the table holds only docs with ≥1
     // near-dup pair — a vanishing fraction of the corpus (0.8% on the
     // test corpus) — so the per-ingest staged rewrite below stays ∝
     // near-dup volume, never ∝ corpus.
@@ -1501,15 +1507,15 @@ object Run {
       // skipped once the labels are _SUCCESS-complete).
       writeDfCap(spec.out, nCorpus)
       faultPoint(spec, "build:after_dfcap")
-      val run = graft.operators.DedupOps.connectedComponentsManaged(
+      val labels = graft.operators.DedupOps.connectedComponents(
         graft.operators.DedupOps.ngramJaccardPairs(
           corpus.select(col(spec.id).as("doc_id"),
             col(spec.text).as("text")),
           "doc_id", "text", spec.minJaccard),
         "da", "db")
-      run.labels.write.mode("overwrite")
+      labels.write.mode("overwrite")
         .parquet(s"${spec.out}/index/cluster_labels")
-      run.release()
+      Pins.release(labels)
     }
     val clusterLabels = s.read.parquet(s"${spec.out}/index/cluster_labels")
 
@@ -1636,26 +1642,13 @@ object Run {
         s"${spec.out}/windows", spec.chunksPerPart, mode = "overwrite")
 
     // 5. summary attesting what landed on disk
-    val wtot = PipelineOps.readWindows(s, s"${spec.out}/windows",
-        spec.chunksPerPart)
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum("n_tokens"), lit(0L)).as("t"))
-      .head()
-    val fateLines = report.map(r =>
-      s"""{"fate":"${esc(r.getAs[String]("fate"))}","n_docs":${
-        r.getAs[Long]("n_docs")},"tok_total":${
-        r.getAs[Long]("tok_total")}}""").mkString("[", ",", "]")
     val summary =
       s"""{"corpus":"${esc(spec.corpus)}","out":"${esc(spec.out)}",""" +
         s""""cap":${spec.cap},"formatter":"${esc(spec.formatter)}",""" +
         s""""chunksPerPart":${spec.chunksPerPart},""" +
-        s""""fates":$fateLines,""" +
-        s""""n_windows":${wtot.getAs[Long]("n")},""" +
-        s""""n_window_tokens":${wtot.getAs[Long]("t")}""" +
+        fatesAndWindows(s, spec, "fates", report) +
         profileSummary(s, spec.out).map("," + _).getOrElse("") + "}"
-    Files.write(Paths.get(spec.out, "SUMMARY.json"),
-      summary.getBytes(StandardCharsets.UTF_8))
-    summary
+    writeSummary(spec.out, "SUMMARY.json", summary)
   }
 
   // ---- crash-safe ingest journal (VERDICT r17 #4) -------------------
@@ -1708,28 +1701,18 @@ object Run {
     Seq("ann/quantizer", "ann/assignment", "ann/baseline", "ann/codebook",
       "ann/codes", "ann/pq_baseline")
 
-  /** Top-level regular-file names of `dir` (empty when absent). The
-    * append artifacts are flat parquet directories, so one level is the
-    * whole inventory; underscore markers (_SUCCESS) are recorded too —
+  /** Names of `dir`'s top-level entries that `keep` accepts (empty when
+    * `dir` is absent). The append artifacts are flat parquet
+    * directories, so one level of regular files is the whole inventory; underscore markers (_SUCCESS) are recorded too —
     * append rewrites them under the SAME name, so they survive the
     * unrecorded-file rollback. */
-  private def listFileNames(dir: java.nio.file.Path): Seq[String] = {
+  private def listNames(dir: java.nio.file.Path)(
+      keep: java.nio.file.Path => Boolean): Seq[String] = {
     import scala.jdk.CollectionConverters._
     if (!Files.isDirectory(dir)) Seq.empty
     else {
       val st = Files.list(dir)
-      try st.iterator().asScala.filter(Files.isRegularFile(_))
-        .map(_.getFileName.toString).toVector
-      finally st.close()
-    }
-  }
-
-  private def listDirNames(dir: java.nio.file.Path): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    if (!Files.isDirectory(dir)) Seq.empty
-    else {
-      val st = Files.list(dir)
-      try st.iterator().asScala.filter(Files.isDirectory(_))
+      try st.iterator().asScala.filter(keep)
         .map(_.getFileName.toString).toVector
       finally st.close()
     }
@@ -1760,7 +1743,7 @@ object Run {
     * one odd directory alone. The store's own writer only ever emits
     * numeric indices, so a skipped name is never ours to roll back. */
   private def windowPartsFrom(out: String, partIdxLo: Long): Seq[String] =
-    listDirNames(Paths.get(out, "windows"))
+    listNames(Paths.get(out, "windows"))(Files.isDirectory(_))
       .filter(_.startsWith("part="))
       .filter(_.stripPrefix("part=").toLongOption.exists(_ >= partIdxLo))
 
@@ -1789,8 +1772,8 @@ object Run {
     parts.foreach(p => copyTree(Paths.get(out, "windows", p),
       backup.resolve("windows_parts").resolve(p)))
     val files = ingestAppendArtifacts.map { a =>
-      s""""${esc(a)}":[${listFileNames(Paths.get(out, a))
-        .map(f => s""""${esc(f)}"""").mkString(",")}]"""
+      val names = listNames(Paths.get(out, a))(Files.isRegularFile(_))
+      s""""${esc(a)}":[${names.map(f => s""""${esc(f)}"""").mkString(",")}]"""
     }.mkString("{", ",", "}")
     Files.writeString(Paths.get(out, JournalName),
       s"""{"increment":"${esc(spec.increment.getOrElse(""))}",""" +
@@ -2026,24 +2009,13 @@ object Run {
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum("n_tok"), lit(0L)).as("tok_total"))
       .orderBy("fate").collect()
-    val wtot = PipelineOps.readWindows(s, s"$out/windows",
-        spec.chunksPerPart)
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum("n_tokens"), lit(0L)).as("t"))
-      .head()
-    val fateLines = incFates.map(r =>
-      s"""{"fate":"${esc(r.getAs[String]("fate"))}","n_docs":${
-        r.getAs[Long]("n_docs")},"tok_total":${
-        r.getAs[Long]("tok_total")}}""").mkString("[", ",", "]")
     val summary =
       s"""{"mode":"ingest","increment":"${esc(spec.increment.get)}",""" +
         s""""out":"${esc(out)}","cap":${spec.cap},""" +
         s""""formatter":"${esc(spec.formatter)}",""" +
         s""""chunksPerPart":${spec.chunksPerPart},""" +
-        s""""increment_fates":$fateLines,""" +
-        s""""n_windows":${wtot.getAs[Long]("n")},""" +
-        s""""n_window_tokens":${wtot.getAs[Long]("t")},""" +
-        s""""df_cap":{"clustered_docs":$clusteredDocs,""" +
+        fatesAndWindows(s, spec, "increment_fates", incFates) +
+        s""","df_cap":{"clustered_docs":$clusteredDocs,""" +
         s""""base_cap":${tier.base},"union_docs":${nPrior + nInc},""" +
         s""""union_cap":${tier.union},"crossed":${tier.crossed}}""" +
         profileSummary(s, out).map("," + _).getOrElse("") +
@@ -2060,8 +2032,7 @@ object Run {
     // pre-ingest SUMMARY from the journal's backup set), and a
     // journal-free directory is always a fully-committed one whose
     // SUMMARY matches its artifacts.
-    Files.write(Paths.get(out, "SUMMARY.json"),
-      summary.getBytes(StandardCharsets.UTF_8))
+    writeSummary(out, "SUMMARY.json", summary)
     faultPoint(spec, "ingest:after_summary")
     clearIngestJournal(out)
     summary
@@ -2099,10 +2070,8 @@ object Run {
     * result lands in `<path>__advance`, is VERIFIED (readable, group
     * count no smaller than the standing table's — a merge never loses
     * groups), stamped with the increment path, and only then swapped
-    * into place. Crash contract (same as [[executeCompact]]'s): before
-    * the swap the original is intact and a retry redoes the merge; a
-    * crash between the delete and the move leaves the fully verified
-    * staged directory — move `<path>__advance` into place to finish.
+    * into place. Crash contract: [[stagedSwap]]; before the swap a
+    * retry redoes the merge.
     * A RETRY of an ingest whose advance already swapped finds its own
     * increment stamp and SKIPS the re-merge — the one double-merge
     * hazard the in-place overwrite had. (Appending artifacts — manifest,
@@ -2123,18 +2092,14 @@ object Run {
     val standing = Pins.checkpoint(s.read.parquet(path))
     try {
       val nStanding = standing.count()
-      val staging = path + "__advance"
-      merged(standing).write.mode("overwrite").parquet(staging)
-      val nStaged = s.read.parquet(staging).count()
-      require(nStaged >= nStanding,
-        s"profile advance of '$path' staged $nStaged rows < standing " +
-          s"$nStanding — refusing the swap; staged data left at " +
-          s"'$staging'")
-      Files.writeString(Paths.get(staging, stampName), incrementTag)
-      faultPoint(spec, s"advance:staged:$rel")
-      rmTree(Paths.get(path))
-      faultPoint(spec, s"advance:swap:$rel")
-      Files.move(Paths.get(staging), Paths.get(path))
+      stagedSwap(spec, path, Staging.Advance, s":$rel") { staging =>
+        merged(standing).write.parquet(staging)
+        val nStaged = s.read.parquet(staging).count()
+        verifyStaged(nStaged >= nStanding, staging)(
+          s"profile advance of '$path' staged $nStaged rows < standing " +
+            s"$nStanding")
+        Files.writeString(Paths.get(staging, stampName), incrementTag)
+      }
     } finally Pins.release(standing)
   }
 
@@ -2162,6 +2127,30 @@ object Run {
       "grp").head().getLong(1)
     Some(s""""profile":{"n_tokens":$nTok,"len_p50":${lq.getDouble(1)},""" +
       s""""len_p95":${lq.getDouble(2)},"distinct_content_est":$dc}""")
+  }
+
+  /** A summary's `"<key>":[per-fate counts]` and the window totals
+    * counted from the persisted store (the summary attests what is ON
+    * DISK, not what the plan promised). */
+  private def fatesAndWindows(s: SparkSession, spec: Spec, key: String,
+      fates: Array[Row]): String = {
+    val w = PipelineOps.readWindows(s, s"${spec.out}/windows",
+        spec.chunksPerPart)
+      .agg(count(lit(1)), coalesce(sum("n_tokens"), lit(0L))).head()
+    fates.map(r =>
+      s"""{"fate":"${esc(r.getAs[String]("fate"))}","n_docs":${
+        r.getAs[Long]("n_docs")},"tok_total":${
+        r.getAs[Long]("tok_total")}}""")
+      .mkString(s""""$key":[""", ",", "]") +
+      s""","n_windows":${w.getLong(0)},"n_window_tokens":${w.getLong(1)}"""
+  }
+
+  /** Write a mode's summary to `out/<name>`; returns it. */
+  private def writeSummary(out: String, name: String,
+      summary: String): String = {
+    Files.write(Paths.get(out, name),
+      summary.getBytes(StandardCharsets.UTF_8))
+    summary
   }
 
   private def esc(x: String): String = x.flatMap {

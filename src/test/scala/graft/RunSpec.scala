@@ -18,6 +18,24 @@ class RunSpec extends SparkSpec {
   private def clean(prefix: String): String =
     ("the" +: words(prefix, 31) :+ "and").mkString(" ")
 
+  private def copyTree(from: java.nio.file.Path,
+      to: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    val st = Files.walk(from)
+    try st.iterator().asScala.foreach { p =>
+      val t = to.resolve(from.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(t)
+      else Files.copy(p, t)
+    } finally st.close()
+  }
+
+  private def rmTree(p: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    val st = Files.walk(p)
+    try st.iterator().asScala.toVector.reverseIterator.foreach(Files.delete)
+    finally st.close()
+  }
+
   test("Run.execute builds fates/report/manifest/windows matching the direct composition") {
     val s = spark
     import s.implicits._
@@ -636,16 +654,6 @@ class RunSpec extends SparkSpec {
           s"audit touched '${f.getName}'"))
 
     // corruptions, each on its own COPY of the clean build
-    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      val st = java.nio.file.Files.walk(from)
-      try st.iterator().asScala.foreach { p =>
-        val t = to.resolve(from.relativize(p))
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.createDirectories(t)
-        else java.nio.file.Files.copy(p, t)
-      } finally st.close()
-    }
     def corrupt(name: String)(f: String => Unit): Map[String, String] = {
       val c = s"$dir/c_$name"
       copyTree(java.nio.file.Paths.get(s"$dir/build"),
@@ -667,14 +675,17 @@ class RunSpec extends SparkSpec {
       Set("manifest_unique", "hashes_count", "windows_tokens"), s"$dup")
     assert(dup("manifest_unique").contains("1 duplicated row"), s"$dup")
 
-    // 3. an interrupted staged swap → staging_leftover names it
+    // 3. interrupted staged swaps, one of every staging kind →
+    // staging_leftover names each
+    val leftovers = Seq("manifest__compact", "stats/len_quantiles__advance",
+      "index/cluster_labels__recluster", "manifest__repair", "ann__retrain")
     val stray = corrupt("stray") { c =>
-      Files.createDirectories(
-        java.nio.file.Paths.get(s"$c/stats/len_quantiles__advance"))
+      leftovers.foreach(l =>
+        Files.createDirectories(java.nio.file.Paths.get(s"$c/$l")))
     }
-    assert(stray.keySet == Set("staging_leftover") &&
-      stray("staging_leftover").contains("len_quantiles__advance"),
-      s"$stray")
+    assert(stray.keySet == Set("staging_leftover"), s"$stray")
+    leftovers.foreach(l =>
+      assert(stray("staging_leftover").contains(l), s"$l: $stray"))
 
     // 4. a crashed write (missing _SUCCESS) → stage_complete names it
     val partial = corrupt("partial") { c =>
@@ -772,15 +783,6 @@ class RunSpec extends SparkSpec {
     Run.execute(s, spec(s"$dir/build", ingestJson("inc2")))
 
     // uncompacted reference copy, then compact the original
-    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      val st = Files.walk(from)
-      try st.iterator().asScala.foreach { p =>
-        val t = to.resolve(from.relativize(p))
-        if (Files.isDirectory(p)) Files.createDirectories(t)
-        else Files.copy(p, t)
-      } finally st.close()
-    }
     copyTree(java.nio.file.Paths.get(s"$dir/build"),
       java.nio.file.Paths.get(s"$dir/copy"))
     Run.execute(s, Run.parseSpec(s"""{"mode": "compact", "out": "$dir/build"}"""))
@@ -889,10 +891,31 @@ class RunSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(fates0(2L) == "kept" && fates0(3L) == "near_dup", s"$fates0")
 
+    // the pre-label fallback: a copy of the build without its label
+    // table ingests the same increment with the near-dup fates derived
+    // in-call (no table is created), and fates it exactly as the label
+    // advance does
+    val noLabels = s"$dir/nolabels"
+    copyTree(java.nio.file.Paths.get(s"$dir/build"),
+      java.nio.file.Paths.get(noLabels))
+    rmTree(java.nio.file.Paths.get(s"$noLabels/index/cluster_labels"))
+    Run.execute(s, Run.parseSpec(json("ingest",
+      s""""increment": "$dir/inc1",""").replace(s"$dir/build", noLabels)))
+    assert(!Files.exists(
+      java.nio.file.Paths.get(s"$noLabels/index/cluster_labels")),
+      "the pre-label ingest created a label table")
+
     Run.execute(s, Run.parseSpec(json("ingest",
       s""""increment": "$dir/inc1",""")))
     assert(labels() == scratch(prior.unionByName(inc1)),
       "labels after ingest 1 != from-scratch over the union")
+    def incFates(out: String) = s.read.parquet(s"$out/manifest")
+      .join(inc1.select(col("id").as("doc_id")), Seq("doc_id"), "left_semi")
+      .select("doc_id", "fate").collect().map(_.toString).sorted.toSeq
+    assert(incFates(noLabels) == incFates(s"$dir/build") &&
+      incFates(noLabels).size == 2,
+      s"pre-label ingest fates ${incFates(noLabels)} != " +
+        s"label-advance fates ${incFates(s"$dir/build")}")
     Run.execute(s, Run.parseSpec(json("ingest",
       s""""increment": "$dir/inc2",""")))
     assert(labels() == scratch(
@@ -1047,16 +1070,6 @@ class RunSpec extends SparkSpec {
       | "text": "body", "cap": 16, "formatter": "plain",
       | "chunksPerPart": 2, "vectors": "$dir/vecsInc",
       | "nlist": 2}""".stripMargin)
-    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      val st = java.nio.file.Files.walk(from)
-      try st.iterator().asScala.foreach { p =>
-        val t = to.resolve(from.relativize(p))
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.createDirectories(t)
-        else java.nio.file.Files.copy(p, t)
-      } finally st.close()
-    }
     def snap(c: String, art: String): Seq[String] =
       s.read.parquet(s"$c/$art").collect().map(_.toString).sorted.toSeq
     def auditOk(c: String): Boolean =
@@ -1120,6 +1133,15 @@ class RunSpec extends SparkSpec {
     }("rolled_back_swap")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
       s"$c3/stats/len_quantiles__advance")))
+    // ... and a stale repair staging (a dedup that crashed before its
+    // delete) beside its intact original
+    val c3r = planted("staleRepair") { c =>
+      copyTree(java.nio.file.Paths.get(s"$c/manifest"),
+        java.nio.file.Paths.get(s"$c/manifest__repair"))
+    }("rolled_back_swap")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
+      s"$c3r/manifest__repair")))
+    assert(snap(c3r, "manifest") == preManifest)
 
     // 4. a partial (no _SUCCESS) write -> quarantined, data preserved
     val c4 = planted("partial") { c =>
@@ -1153,7 +1175,7 @@ class RunSpec extends SparkSpec {
 
     // repair is idempotent: a second pass on every repaired copy is a
     // no-op
-    Seq(c1, c2, c3, c4, c5, c6).foreach { c =>
+    Seq(c1, c2, c3, c3r, c4, c5, c6).foreach { c =>
       val again = repair(c)
       assert(again.get("n_actions").asInt == 0, s"second repair acted: $again")
     }
@@ -1330,16 +1352,6 @@ class RunSpec extends SparkSpec {
       .toDF("vec_id", "embedding").write.parquet(s"$dir/vecsInc")
     val m = new ObjectMapper()
     def exec(json: String) = m.readTree(Run.execute(s, Run.parseSpec(json)))
-    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      val st = java.nio.file.Files.walk(from)
-      try st.iterator().asScala.foreach { p =>
-        val t = to.resolve(from.relativize(p))
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.createDirectories(t)
-        else java.nio.file.Files.copy(p, t)
-      } finally st.close()
-    }
     exec(s"""{"corpus": "$dir/corpus", "benchmark": "$dir/bench",
       | "out": "$dir/base", "id": "id", "text": "body", "cap": 16,
       | "formatter": "plain", "chunksPerPart": 2,
@@ -1468,16 +1480,6 @@ class RunSpec extends SparkSpec {
       .toDF("vec_id", "embedding").write.parquet(s"$dir/vecs")
     val m = new ObjectMapper()
     def exec(json: String) = m.readTree(Run.execute(s, Run.parseSpec(json)))
-    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      val st = java.nio.file.Files.walk(from)
-      try st.iterator().asScala.foreach { p =>
-        val t = to.resolve(from.relativize(p))
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.createDirectories(t)
-        else java.nio.file.Files.copy(p, t)
-      } finally st.close()
-    }
     def base(mode: String, out: String, extra: String) =
       s"""{$extra "benchmark": "$dir/bench", "out": "$out",
          | "id": "id", "text": "body", "cap": 16, "formatter": "plain",
@@ -1595,13 +1597,6 @@ class RunSpec extends SparkSpec {
     // but the manifest already holds ingested docs — a resume build
     // would re-derive labels from the ORIGINAL corpus and silently omit
     // prior<->prior clusters among ingested docs
-    def rmTree(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      val st = java.nio.file.Files.walk(p)
-      try st.iterator().asScala.toVector.reverseIterator
-        .foreach(java.nio.file.Files.delete)
-      finally st.close()
-    }
     rmTree(java.nio.file.Paths.get(s"$dir/build/index/cluster_labels"))
     val e = intercept[IllegalArgumentException](
       Run.execute(s, Run.parseSpec(buildJson)))
@@ -1622,5 +1617,35 @@ class RunSpec extends SparkSpec {
     assert(s.read.parquet(s"$dir/build/index/cluster_labels")
       .collect().map(_.toString).sorted.toSeq == scratch,
       "reclustered labels != from-scratch over the full ingested union")
+  }
+
+  test("Run.scala commits every staged rewrite through the one swap step and spells no staging name outside Staging") {
+    // a source scan, no Spark session: `Files.move(` only in the swap
+    // step's last step and in repair's quarantine, no `<artifact>__<kind>`
+    // name in code (audit and repair recognise leftovers through the one
+    // kinds list), and no nested managed scope inside a mode's own
+    import scala.jdk.CollectionConverters._
+    val src = java.nio.file.Paths.get("src/main/scala/graft/Run.scala")
+    assert(Files.isRegularFile(src), s"run from the repository root: $src")
+    val defName = """\bdef (\w+)""".r
+    val stagingName = """__\(?(compact|advance|recluster|repair|retrain)""".r
+    var enclosing = "" // the nearest def above the line
+    val offenders = Files.readAllLines(src).asScala.zipWithIndex.flatMap {
+      case (line, i) =>
+        // code only: scaladoc lines and line comments may name anything
+        val code =
+          if (line.trim.startsWith("*")) "" else line.split("//", 2)(0)
+        defName.findFirstMatchIn(code).foreach(m => enclosing = m.group(1))
+        val at = s"$src:${i + 1}: ${line.trim}"
+        Seq(
+          (code.contains("Files.move(") &&
+            !Set("finishSwap", "quarantine")(enclosing)) ->
+            s"$at — Files.move outside the swap step and quarantine",
+          stagingName.findFirstIn(code).nonEmpty ->
+            s"$at — a staging name spelled outside Staging",
+          code.contains("Managed(") -> s"$at — a managed CC scope")
+          .collect { case (true, why) => why }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
